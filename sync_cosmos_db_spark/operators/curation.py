@@ -190,74 +190,23 @@ def global_token_offsets(
 ) -> DataFrame:
     """Exclusive prefix sum of ``n_tokens_col`` in global ``id_col``
     order, WITHOUT a single-partition window — the distributed scan
-    every packing/concatenation pass needs.
-
-    Two phases: (1) order-respecting range buckets from approximate
-    id quantiles (driver holds n_buckets-1 boundaries, nothing else);
-    (2) within-bucket window cumsum + a broadcast map of per-bucket
-    totals' prefix. At 100 TB the only shuffle is the per-bucket
-    window; the driver-side state is O(n_buckets).
+    every packing/concatenation pass needs: the inclusive
+    :func:`~sync_cosmos_db_spark.operators.partitioning.range_cumsum`
+    minus the row's own count (null counts add 0).
 
     Returns the input columns plus ``__offset`` (tokens before this doc
     in id order).
     """
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import (
+        range_cumsum, spread,
+    )
 
-    # spread() first (guide §2.5): a compact single-split input
-    # otherwise runs the bucket tagging + per-bucket totals (and the
-    # quantile pass) in ONE task; floor-only, a no-op on wide scans.
-    df = spread(df)
-    bounds = df.approxQuantile(
-        id_col, [i / n_buckets for i in range(1, n_buckets)], 0.001)
-    # bucket = number of boundaries strictly below the id — the shared
-    # array-literal filter() HOF (see _flat_bucket for why that form
-    # beat both the nested WHEN chains and a flat CaseWhen ladder).
-    bnds = sorted(set(bounds))
-    tagged = df.withColumn("__bucket", _flat_bucket(F.col(id_col), bnds))
-    totals = {r["__bucket"]: r["__t"] for r in
-              tagged.groupBy("__bucket")
-              .agg(F.sum(n_tokens_col).alias("__t")).collect()}
-    # exclusive prefix of per-bucket totals over the FULL bucket range
-    # (unobserved buckets have no rows; their entry is still the
-    # mathematically correct prefix), indexed in-row via element_at —
-    # the flat twin of the old per-observed-bucket WHEN chain.
-    pref_vals, acc = [], 0
-    for b in range(len(bnds) + 1):
-        pref_vals.append(acc)
-        acc += totals.get(b, 0)
-    pref_expr = F.element_at(F.array(*[F.lit(v) for v in pref_vals]),
-                             F.col("__bucket") + 1)
-    from pyspark.sql import Window as W
-    w = (W.partitionBy("__bucket").orderBy(id_col)
-         .rowsBetween(W.unboundedPreceding, -1))
-    return (tagged.withColumn(
-        "__offset",
-        (pref_expr + F.coalesce(F.sum(n_tokens_col).over(w), F.lit(0)))
-        .cast("long"))
-        .drop("__bucket"))
-
-
-def _flat_bucket(value: Column, bnds: list) -> Column:
-    """Number of ``bnds`` entries strictly below ``value`` — the r17
-    array-literal ``filter()`` HOF, now the ONE shared bucket-tagging
-    expression for every two-phase-scan helper (curation + profiling).
-
-    Why this form and not a CASE WHEN ladder (r18, measured): a flat
-    63-branch CaseWhen IS codegen-capable and linear to analyze, but
-    it still costs ~0.3–0.4 s of serial driver-side analysis/codegen
-    wall per invocation (measured on pack_sequences_64 1.33→1.76 s and
-    quantile_normalize 1.51→1.80 s warm bo3 — reverted same round),
-    while the HOF's interpreted per-row × per-boundary cost lives on
-    the EXECUTORS and parallelizes: the heaviest consumer (zone-map,
-    600k rows × 63 boundaries) profiles ~4 s CPU per tagging pass ≈
-    0.13 s wall at 32-way parallelism.  The nested when/otherwise
-    chains both forms replaced cost ~1 s driver analysis per
-    invocation (r17).  ``bnds`` must be sorted ascending and
-    duplicate-free."""
-    if not bnds:
-        return F.lit(0)
-    return F.size(F.filter(F.array(*[F.lit(b) for b in bnds]),
-                           lambda b: value > b))
+    # spread() first: a compact single-split input otherwise runs the
+    # bucket tagging + per-bucket totals (and the quantile pass) in ONE
+    # task; floor-only, a no-op on wide scans.
+    n = F.coalesce(F.col(n_tokens_col), F.lit(0))
+    out, _ = range_cumsum(spread(df), [id_col], {"__offset": n}, n_buckets)
+    return out.withColumn("__offset", (F.col("__offset") - n).cast("long"))
 
 
 def global_sort_index(
@@ -269,44 +218,16 @@ def global_sort_index(
 ) -> DataFrame:
     """Exact 1-based global ``row_number`` under
     ``orderBy(value_col, tiebreak_col)`` WITHOUT a single-partition
-    window — the rank twin of :func:`global_token_offsets` (same
-    two-phase scan, counting rows instead of summing tokens).
-
-    Phase 1 range-buckets on approximate quantiles of ``value_col``;
-    the bucket predicate compares ``value_col`` alone, so every tie
-    lands in one bucket and bucket boundaries respect the global
-    (value, tiebreak) order.  Phase 2 ranks within each bucket and
-    adds the broadcast prefix of earlier buckets' row counts.  At
-    100 TB the only shuffle is the per-bucket window; driver state is
-    O(n_buckets).  Returns the input columns plus ``out_col``.
+    window — :func:`~sync_cosmos_db_spark.operators.partitioning.range_cumsum`
+    counting rows.  Returns the input columns plus ``out_col``.
     """
-    from pyspark.sql import Window as W
-
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import (
+        range_cumsum, spread,
+    )
 
     # spread() first — see global_token_offsets.
-    df = spread(df)
-    bounds = df.approxQuantile(
-        value_col, [i / n_buckets for i in range(1, n_buckets)], 0.001)
-    # shared array-literal HOF bucket (see _flat_bucket) + element_at
-    # prefix lookup instead of two n_buckets-deep nested WHEN chains.
-    bnds = sorted(set(bounds))
-    tagged = df.withColumn("__bucket",
-                           _flat_bucket(F.col(value_col), bnds))
-    counts = {r["__bucket"]: r["__c"] for r in
-              tagged.groupBy("__bucket")
-              .agg(F.count("*").alias("__c")).collect()}
-    pref_vals, acc = [], 0
-    for b in range(len(bnds) + 1):
-        pref_vals.append(acc)
-        acc += counts.get(b, 0)
-    pref_expr = F.element_at(F.array(*[F.lit(v) for v in pref_vals]),
-                             F.col("__bucket") + 1)
-    w = W.partitionBy("__bucket").orderBy(value_col, tiebreak_col)
-    return (tagged.withColumn(
-        out_col,
-        (pref_expr + F.row_number().over(w)).cast("long"))
-        .drop("__bucket"))
+    return range_cumsum(spread(df), [value_col, tiebreak_col],
+                        {out_col: F.lit(1)}, n_buckets)[0]
 
 
 def pack_sequences(
@@ -389,7 +310,7 @@ def doc_ngrams(df: DataFrame, id_col: str, text_col: str,
     # cores — profiled as a 1-task stage feeding the decontam gram
     # join.  Only the (id, text) projection is shuffled; at 100 TB the
     # scan already yields >= parallelism splits and this is a no-op.
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     return (spread(df.select(F.col(id_col), F.col(text_col)), [id_col])
             .select(F.col(id_col), F.explode(grams).alias(out_col)))
@@ -1085,57 +1006,32 @@ def pps_systematic_sample(df: DataFrame, key_col: str,
     survey-sampling standard when inclusion probability must be
     proportional to size AND reproducible.
 
-    Scale shape: the cumulative sum is the X11/X192 two-phase scan
-    (range buckets on the weight, per-bucket window, broadcast
-    prefix offsets — no single-partition exchange); the grid test
-    is integer arithmetic shifted POSITIVE before the floor
-    division, because Spark's ``div`` truncates toward zero while
-    DuckDB's ``//`` floors — they agree only on non-negative
-    operands (stated here so nobody "simplifies" it back).
+    Scale shape: the cumulative sum is the two-phase range scan
+    (:func:`~sync_cosmos_db_spark.operators.partitioning.range_cumsum`
+    — no single-partition exchange); the grid test is integer
+    arithmetic shifted POSITIVE before the floor division, because
+    Spark's ``div`` truncates toward zero while DuckDB's ``//`` floors
+    — they agree only on non-negative operands (stated here so nobody
+    "simplifies" it back).
     Returns ``(key, weight_cents, n_picks)`` for picked rows.
     """
-    from pyspark.sql import Window as W
+    from sync_cosmos_db_spark.operators.partitioning import range_cumsum
 
     cents = (df.select(F.col(key_col).alias("__key"),
                        F.col(weight_col).alias("__v"))
              .withColumn("__c",
                          F.floor(F.col("__v") * 100 + F.lit(0.5))
                          .cast("long")))
-    n_buckets = 64
-    bounds = cents.approxQuantile(
-        "__c", [i / n_buckets for i in range(1, n_buckets)], 0.001)
-    bucket = F.lit(0)
-    for i, b in enumerate(sorted(set(bounds))):
-        bucket = F.when(F.col("__c") > b, F.lit(i + 1)) \
-            .otherwise(bucket)
-    tagged = cents.withColumn("__bucket", bucket)
-    sums = {r["__bucket"]: r["__s"] for r in
-            tagged.groupBy("__bucket")
-            .agg(F.sum("__c").alias("__s")).collect()}
-    prefix, acc = {}, 0
-    for b in sorted(sums):
-        prefix[b] = acc
-        acc += sums[b]
-    total = acc
-    step = max(1, total // n)
+    cum, totals = range_cumsum(cents, ["__c", "__key"],
+                               {"__cum": F.col("__c")})
+    step = max(1, totals["__cum"] // n)
     anchor = step // 2
-    pref_expr = F.lit(0)
-    for b, off in sorted(prefix.items()):
-        pref_expr = F.when(F.col("__bucket") == b, F.lit(off)) \
-            .otherwise(pref_expr)
-    w = (W.partitionBy("__bucket")
-         .orderBy(F.col("__c"), "__key")
-         .rowsBetween(W.unboundedPreceding, 0))
-    cum = (pref_expr + F.sum("__c").over(w)).cast("long")
-    prev = cum - F.col("__c")
     # f(x) = number of grid points <= x; shifted positive so both
     # engines' integer division agrees
     shift = int(step - anchor)
     fx = F.expr(f"(__cum + {shift}) div {int(step)}")
-    fp = F.expr(f"(__prev + {shift}) div {int(step)}")
-    return (tagged.withColumn("__cum", cum)
-            .withColumn("__prev", prev)
-            .withColumn("n_picks", (fx - fp).cast("long"))
+    fp = F.expr(f"(__cum - __c + {shift}) div {int(step)}")
+    return (cum.withColumn("n_picks", (fx - fp).cast("long"))
             .filter(F.col("n_picks") > 0)
             .select(F.col("__key").alias(key_col),
                     F.col("__c").alias("weight_cents"), "n_picks"))

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from sync_cosmos_db_spark.cache_scope import (
     scoped_local_checkpoint, scoped_persist,
 )
+from sync_cosmos_db_spark.operators.partitioning import spread
 
 
 def _fround4(c: Column) -> Column:
@@ -41,50 +42,6 @@ def _fround4(c: Column) -> Column:
     queries.fround and every DuckDB oracle (Spark's round() is HALF_UP,
     which diverges on negative values and representation ties)."""
     return F.floor(c * 10000 + F.lit(0.5)) / 10000
-
-
-def spread(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
-    """Repartition up to the cluster's default parallelism when the scan
-    produced fewer partitions — small compact inputs (one parquet file)
-    otherwise run CPU-heavy per-row compute (shingling, 64× MinHash) on
-    1-2 cores. The shuffle moves only the compact input rows, negligible
-    next to the per-row hash compute it parallelizes. At 100 TB the scan
-    already yields ≥ parallelism splits and this is a no-op.
-
-    The decision is made ONLY on the measured split count,
-    ``df.rdd.getNumPartitions()`` (a plan→RDD conversion; no job runs
-    on a narrow plan).  File count is deliberately NOT consulted
-    (ADVICE r13): it is wrong in both directions — Spark bin-packs
-    many tiny files into 1-2 FilePartitions (maxPartitionBytes /
-    openCostInBytes), and it SPLITS few huge files into thousands
-    (a handful of multi-TB parquet files is exactly the 100 TB scan
-    shape), so a "few files ⇒ repartition" short-circuit would
-    DOWN-partition the large-scale case to core count.  Floor
-    semantics throughout (the ADVICE r12 linkage lesson generalized,
-    round 13): only a frame measured narrower than the target is
-    repartitioned, file-backed or derived alike."""
-    target, narrow = floor_width(df)
-    if not narrow:
-        return df
-    return df.repartition(target, *cols) if cols else df.repartition(target)
-
-
-def floor_width(df: DataFrame) -> tuple[int, bool]:
-    """The shared floor-semantics width decision (ADVICE r17: this
-    lived inline in ``spread()`` and twice in ``operators/linkage``):
-    ``(max(defaultParallelism, measured splits), measured < default
-    parallelism)``.  The first element is the partition count a
-    CPU-dense stage over ``df`` (or a pair stream derived from it)
-    should be pinned to — floor-only, wide frames keep their own width
-    so nothing is ever down-partitioned (the ADVICE r12/r13 lineage);
-    the second says whether the frame measured NARROW (``spread()``
-    no-ops when it didn't).  The measurement is ONE
-    ``df.rdd.getNumPartitions()`` call — a plan→RDD conversion, no job
-    on a narrow plan; see :func:`spread` for why file count is
-    deliberately not consulted."""
-    dp = df.sparkSession.sparkContext.defaultParallelism
-    parts = df.rdd.getNumPartitions()
-    return max(dp, parts), parts < dp
 
 
 # ---------------------------------------------------------------------------

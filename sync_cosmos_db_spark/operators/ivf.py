@@ -278,7 +278,7 @@ def _probe_score_rank(indexed: DataFrame, queries: DataFrame, cents,
     # providing the parallelism).  spread() is floor-only: the shuffle
     # moves corpus rows (tiny next to the pair volume it parallelizes)
     # and is a no-op at 100 TB where the scan is already wide.
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     # F.broadcast pins the assumption spread() relies on (ADVICE r15):
     # if probes ever exceeded the auto-broadcast threshold (large query

@@ -791,7 +791,7 @@ def synth_jpeg_assets(params: DataFrame, quality: int = 50) -> DataFrame:
     planner, so nothing downstream re-partitions.  Floor-only: a wide
     scan at corpus scale is left alone.  The decode inherits the
     spread partitioning (same stage, no extra shuffle)."""
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     params = spread(params)
 

@@ -38,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from sync_cosmos_db_spark.operators.dedup import floor_width
+from sync_cosmos_db_spark.operators.partitioning import floor_width
 
 
 def blocking_keys(name: Column | str, key_len: int = 5) -> Column:

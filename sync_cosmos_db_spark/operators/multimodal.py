@@ -381,7 +381,7 @@ def synth_png_assets(params: DataFrame) -> DataFrame:
     ``spread()`` first (r18, guide §2.5 — see jpeg.synth_jpeg_assets):
     a compact params scan otherwise runs the whole Python
     encode(+decode) chain in one task."""
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     params = spread(params)
     schema = T.StructType([
@@ -406,7 +406,7 @@ def synth_wav_assets(params: DataFrame) -> DataFrame:
     """Harness adapter: encode one constant-amplitude WAV per row from
     (asset_id, n_samples, sample_rate, n_audio_channels, amplitude).
     ``spread()`` first (r18, guide §2.5 — see jpeg.synth_jpeg_assets)."""
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     params = spread(params)
     schema = T.StructType([

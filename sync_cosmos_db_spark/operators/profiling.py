@@ -605,7 +605,7 @@ def poisson_bootstrap_ci(df: DataFrame, key_col: str, value_col: str,
     2.5%/97.5% interpolated percentiles of the resample means."""
     import math
 
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     p = 10 ** round_digits
     fr = lambda c: F.floor(c * p + F.lit(0.5)) / p  # noqa: E731
@@ -932,16 +932,13 @@ def value_midranks(vc: DataFrame, value_col: str = "v",
                    count_col: str = "t", n_buckets: int = 32,
                    out_col: str = "midrank",
                    extra_counts: tuple[str, ...] = ()) -> DataFrame:
-    """Midrank per DISTINCT value WITHOUT a single-partition window
-    (round 9): phase 1 range-buckets the distinct values on
-    approximate quantiles (driver state = n_buckets−1 boundaries),
-    phase 2 cum-counts within buckets and adds the broadcast prefix of
-    earlier buckets' count totals — the X11 two-phase scan applied to
-    rank statistics.  Upgrades the X136 shape, whose ordered window
-    over distinct values still bottlenecks single-partition when the
-    value domain is continuous (distinct ≈ rows).  Midranks are exact
-    (integer-valued double sums plus an exact .0/.5 correction), so
-    swapping this in changes no results.
+    """Midrank per DISTINCT value WITHOUT a single-partition window:
+    the two-phase range scan
+    (:func:`~sync_cosmos_db_spark.operators.partitioning.range_cumsum`)
+    applied to rank statistics, so a continuous value domain (distinct
+    ≈ rows) never bottlenecks on one partition.  Midranks are exact:
+    the cumulative counts are exact integers and the (count−1)/2
+    correction is an exact .0/.5 double.
 
     ``vc`` must be one row per distinct value with its total count;
     returns it plus ``out_col`` = cum_count − (count−1)/2.  The input
@@ -949,55 +946,23 @@ def value_midranks(vc: DataFrame, value_col: str = "v",
     (quantiles, bucket totals) and the returned plan share one
     materialization.
 
-    ``extra_counts`` (round-9 CvM extension): additional per-value
-    count columns (e.g. per-arm counts); for each name ``c`` the
-    output also carries ``midrank_<c>`` — the midrank WITHIN that
-    subpopulation (cum_c − (c−1)/2), computed from the same buckets
-    and the same per-bucket prefix pass, so the whole family costs
-    one extra sum per column, not another scan."""
-    from pyspark.sql import Window as W
-
+    ``extra_counts``: additional per-value count columns (e.g. per-arm
+    counts); for each name ``c`` the output also carries
+    ``midrank_<c>`` — the midrank WITHIN that subpopulation
+    (cum_c − (c−1)/2), computed from the same buckets and the same
+    per-bucket prefix pass, so the whole family costs one extra sum
+    per column, not another scan."""
     from sync_cosmos_db_spark.cache_scope import scoped_persist
+    from sync_cosmos_db_spark.operators.partitioning import range_cumsum
 
-    all_counts = (count_col,) + tuple(extra_counts)
+    names = {c: out_col if c == count_col else f"{out_col}_{c}"
+             for c in (count_col, *extra_counts)}
     vc = scoped_persist(vc)
-    bounds = vc.approxQuantile(
-        value_col, [i / n_buckets for i in range(1, n_buckets)], 0.001)
-    # bucket = number of boundaries strictly below the value — the
-    # shared flat HOF (r18, curation._flat_bucket), replacing the
-    # n_buckets-deep nested WHEN chain (same per-row values by
-    # boundary monotonicity; ~1 s driver analysis saved/invocation).
-    from sync_cosmos_db_spark.operators.curation import _flat_bucket
-    bnds = sorted(set(bounds))
-    tagged = vc.withColumn("__bucket",
-                           _flat_bucket(F.col(value_col), bnds))
-    totals = {r["__bucket"]: {c: r[f"__t_{c}"] for c in all_counts}
-              for r in tagged.groupBy("__bucket")
-              .agg(*[F.sum(c).alias(f"__t_{c}") for c in all_counts])
-              .collect()}
-    # exclusive prefix over the FULL bucket range (unobserved buckets
-    # contribute 0 — the same mathematically-correct prefix the old
-    # observed-buckets-only chain produced), indexed in-row via
-    # element_at (codegen-capable) instead of a per-bucket WHEN chain.
-    prefix: dict = {}
-    acc = {c: 0.0 for c in all_counts}
-    for b in range(len(bnds) + 1):
-        prefix[b] = dict(acc)
-        for c in all_counts:
-            acc[c] += totals.get(b, {}).get(c, 0.0)
-    w = (W.partitionBy("__bucket").orderBy(value_col)
-         .rowsBetween(W.unboundedPreceding, W.currentRow))
-    out = tagged
-    for c in all_counts:
-        pref_expr = F.element_at(
-            F.array(*[F.lit(float(prefix[b][c]))
-                      for b in range(len(bnds) + 1)]),
-            F.col("__bucket") + 1)
-        col_name = out_col if c == count_col else f"{out_col}_{c}"
-        out = out.withColumn(
-            col_name,
-            pref_expr + F.sum(c).over(w) - (F.col(c) - 1) / 2)
-    return out.drop("__bucket")
+    out, _ = range_cumsum(vc, [value_col],
+                          {n: F.col(c) for c, n in names.items()},
+                          n_buckets)
+    return out.withColumns({n: F.col(n) - (F.col(c) - 1) / 2
+                            for c, n in names.items()})
 
 
 def rank_sum_test(df: DataFrame, group_col: str, value_col: str,
@@ -1540,62 +1505,29 @@ def abc_classification(df: DataFrame, key_col: str, value_col: str,
     Gini don't give you (which keys, exactly, carry 80% of the
     mass).
 
-    Scale shape — the X151 lesson applied at birth: the global
-    DESCENDING cumulative sum uses the two-phase distributed scan
-    (range-bucket on value via ``approxQuantile``, per-bucket
-    window cumsum, broadcast per-bucket prefix offsets — driver
-    state O(buckets)), NEVER an unpartitioned ``Window.orderBy``
-    over the key table.  ``value_col`` must already be on an exact
-    cent grid (round it upstream): internally everything becomes
-    integer cents, so the cumsum, the total, and the class-boundary
-    comparisons ``100·cum ≤ pct·total`` are EXACT in both engines —
-    no float boundary can flip a key's class.  Returns the 3-row
-    summary ``(abc_class, n_keys, value_sum, value_share)``.
+    Scale shape: the global DESCENDING cumulative sum is the two-phase
+    range scan
+    (:func:`~sync_cosmos_db_spark.operators.partitioning.range_cumsum`
+    over the negated value — driver state O(buckets)), NEVER an
+    unpartitioned ``Window.orderBy`` over the key table.
+    ``value_col`` must already be on an exact cent grid (round it
+    upstream): internally everything becomes integer cents, so the
+    cumsum, the total, and the class-boundary comparisons
+    ``100·cum ≤ pct·total`` are EXACT in both engines — no float
+    boundary can flip a key's class.  Returns the 3-row summary
+    ``(abc_class, n_keys, value_sum, value_share)``.
     """
-    from pyspark.sql import Window as W
+    from sync_cosmos_db_spark.operators.partitioning import range_cumsum
 
     cents = (df.select(F.col(key_col).alias("__key"),
                        F.col(value_col).alias("__v"))
              .withColumn("__c", F.floor(F.col("__v") * 100 + F.lit(0.5))
-                         .cast("long")))
-    n_buckets = 64
-    bounds = cents.approxQuantile(
-        "__c", [i / n_buckets for i in range(1, n_buckets)], 0.001)
-    # descending order: bucket 0 holds the LARGEST values.  bucket =
-    # number of boundaries AT OR ABOVE the value = m − (boundaries
-    # strictly below), via the shared flat HOF
-    # (r18, curation._flat_bucket).  The previous nested WHEN chain had its cascade
-    # backwards — the OUTERMOST when tested the SMALLEST boundary, so
-    # every value above the 1/64 quantile landed in one bucket and the
-    # "two-phase" cumsum ran effectively single-partition (results
-    # were still exact: totals/prefix/window were computed from the
-    # same tagging, and the bucket order invariant — all values in
-    # bucket i ≥ all values in bucket j>i, ties co-located because the
-    # predicate reads only __c — held for the two occupied buckets).
-    # This form restores the intended 64-way spread; per-row cum
-    # values are identical because the window's global (value DESC,
-    # key) order and the per-bucket prefix reconstruction are
-    # unchanged under ANY bucketing that respects that invariant.
-    from sync_cosmos_db_spark.operators.curation import _flat_bucket
-    bnds = sorted(set(bounds))
-    tagged = cents.withColumn(
-        "__bucket", F.lit(len(bnds)) - _flat_bucket(F.col("__c"), bnds))
-    sums = {r["__bucket"]: r["__s"] for r in
-            tagged.groupBy("__bucket")
-            .agg(F.sum("__c").alias("__s")).collect()}
-    # exclusive prefix over the FULL bucket range (unobserved buckets
-    # sum 0), indexed via element_at instead of a WHEN chain
-    pref_vals, acc = [], 0
-    for b in range(len(bnds) + 1):
-        pref_vals.append(acc)
-        acc += sums.get(b, 0)
-    total = acc
-    pref_expr = F.element_at(F.array(*[F.lit(v) for v in pref_vals]),
-                             F.col("__bucket") + 1)
-    w = (W.partitionBy("__bucket")
-         .orderBy(F.col("__c").desc(), "__key")
-         .rowsBetween(W.unboundedPreceding, 0))
-    cum = (pref_expr + F.sum("__c").over(w)).cast("long")
+                         .cast("long"))
+             .withColumn("__neg", -F.col("__c")))
+    ranked, totals = range_cumsum(cents, ["__neg", "__key"],
+                                  {"__cum": F.col("__c")})
+    total = totals["__cum"]
+    cum = F.col("__cum")
     # boundary products are driver-side Python ints (arbitrary
     # precision) so the runtime comparison is a plain long-vs-long —
     # a 32-bit `lit(pct) * lit(total)` overflows once total cents
@@ -1606,7 +1538,7 @@ def abc_classification(df: DataFrame, key_col: str, value_col: str,
            .when(cum * 100 <= b_bound, "B")
            .otherwise("C"))
     p = 10 ** round_digits
-    return (tagged.withColumn("abc_class", cls)
+    return (ranked.withColumn("abc_class", cls)
             .groupBy("abc_class")
             .agg(F.count("*").cast("long").alias("n_keys"),
                  (F.sum("__c") / 100.0).alias("value_sum"),

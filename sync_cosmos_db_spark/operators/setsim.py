@@ -76,12 +76,11 @@ def setsim_join(
     jaccard floor-rounded to 6 decimals AFTER the exact integer
     inter/union are fixed, so the oracle can hash-compare every pair.
 
-    Round-5 rewrite (the round-4 form verified candidates by
-    re-exploding both token sets into a two-hop posting join — at
-    sf0.1, where the synthetic corpus has a 31-token vocabulary and
-    ~5M genuinely-qualifying pairs, that shuffled ~200M rows and took
-    159 s; this form runs in a fraction of that and is strictly
-    better on real corpora too):
+    Design (verifying candidates by re-exploding both token sets into a
+    two-hop posting join shuffled ~200M rows and took 159 s at sf0.1,
+    where the synthetic corpus has a 31-token vocabulary and ~5M
+    genuinely-qualifying pairs; this form runs in a fraction of that
+    and is strictly better on real corpora too):
 
     * **set collapse first** — documents group by a sha2 signature of
       their SORTED token set, so exact-duplicate sets (ubiquitous in
@@ -102,8 +101,8 @@ def setsim_join(
     ``graph.pagerank``); they are registered with
     :mod:`sync_cosmos_db_spark.cache_scope`, so the caller releases
     them with ``cache_scope.release_persisted()`` after consuming the
-    result (the round-8 cache-census fix — bare persists pinned
-    executor storage for the life of the session).
+    result (bare persists would pin executor storage for the life of
+    the session).
     """
     if not (0.0 < threshold <= 1.0):
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
@@ -137,7 +136,7 @@ def setsim_join(
         .dropDuplicates(["sig"])
         .withColumn("__ti", F.array_sort(
             F.transform("tk", lambda t: F.xxhash64(t)))))
-    # Long signature keys (r18): every downstream shuffle and hash
+    # Long signature keys: every downstream shuffle and hash
     # join — prefix postings, the candidate equi-join, the 6.57M-pair
     # distinct, the two verify joins, the two member expansions, the
     # same-signature branch — keys on ``sig``, and as a 64-char sha2
@@ -167,7 +166,7 @@ def setsim_join(
         F.count(F.lit(1)).alias("n_tok"),
         F.countDistinct(F.xxhash64("tok")).alias("n_hash")).first()
     ints_ok = vc["n_tok"] == vc["n_hash"]
-    # Third verify tier (r18): SMALL-DOMAIN BITSET.  When the whole
+    # Third verify tier: SMALL-DOMAIN BITSET.  When the whole
     # vocabulary fits one machine word (≤ 64 distinct tokens — tag /
     # category / enum-like set domains), each distinct set is exactly
     # one int64 bitmask under a fixed token→bit bijection, and the
@@ -181,14 +180,17 @@ def setsim_join(
     # characteristic vectors).  Guarded by the same vocabulary-sized
     # aggregate as the injectivity check — no extra action; the ≤64
     # collect is bounded by the guard.  At web-corpus vocabularies the
-    # guard never fires and the r17 int64-array tier stays the
+    # guard never fires and the int64-array tier stays the
     # operative path.
     bitset_ok = vc["n_tok"] <= 64
     if bitset_ok:
         vocab = sorted(r["tok"] for r in dfreq.select("tok").collect())
+        # bit 63 is the int64 sign bit: 1 << 63 overflows a Java long,
+        # so the 64th token's bit is emitted as its two's-complement
+        # value -(1 << 63)
         bitmap = F.create_map(
             *[x for i, t in enumerate(vocab)
-              for x in (F.lit(t), F.lit(1 << i))])
+              for x in (F.lit(t), F.lit(1 << i if i < 63 else -(1 << 63)))])
         mask = F.aggregate(
             F.col("tk"), F.lit(0).cast("long"),
             lambda acc, t: acc.bitwiseOR(F.element_at(bitmap, t)))

@@ -207,7 +207,7 @@ def brute_force_topk_vectorized(
     # compact corpus (embeddings is ONE parquet split at bench scale)
     # single-lanes the whole queries×corpus score.  spread() shuffles
     # only the corpus rows and is a no-op on wide 100 TB scans.
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     scored = spread(corpus.select(id_col, vec_col)).mapInPandas(
         score, out_schema)

@@ -19,7 +19,7 @@ from sync_cosmos_db_spark.cache_scope import scoped_persist
 # so the "embarrassingly parallel" passes ran on 1-4 of 32 cores.
 # spread() shuffles only the raw doc rows when the scan is narrower
 # than defaultParallelism and is a no-op on wide 100 TB scans.
-from sync_cosmos_db_spark.operators.dedup import spread
+from sync_cosmos_db_spark.operators.partitioning import spread
 
 # Tiny per-language stopword lists for the n-gram/stopword-overlap
 # language-ID heuristic. Deliberately small: the heuristic is argmax of

@@ -564,6 +564,20 @@ EDITED_ROUND.update(dict.fromkeys(
 # measured slower and reverted in-round), so their consumers' plans
 # are unchanged from r17.
 
+# spread()/floor_width() moved from operators/dedup to
+# operators/partitioning; these three bodies changed only that import
+# line.
+EDITED_ROUND.update(dict.fromkeys(
+    ["dhash_image_clusters", "sketch_profile_bounds",
+     "permutation_test_orders"], 19))
+# No-entry decision: the six two-phase range scans (global_sort_index,
+# global_token_offsets, pps_systematic_sample, value_midranks,
+# abc_classification, write_event_time_slices) now share
+# partitioning.range_cumsum.  Each consumer keeps its exchanges and
+# driver actions (the rank window computes a running sum(1) instead of
+# row_number); every consumer was re-verified against its sf0.01
+# oracle.
+
 # Round-17 no-entry decisions: graph.py's caller-cache detection fix
 # (storageLevel instead of is_cached) changes NOTHING for the
 # registered graph queries (no registered caller pre-caches edges), so

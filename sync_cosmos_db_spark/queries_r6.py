@@ -2048,7 +2048,7 @@ def build_cdc_changes(snap: DataFrame) -> DataFrame:
             F.lit(seq).cast("long").alias("seq"),
             F.lit(op).alias("op")))
 
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     events = F.array(
         ev(k % 7 == 0, k, p * 1.1, s, 1, "U"),

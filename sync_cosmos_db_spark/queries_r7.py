@@ -590,7 +590,7 @@ def dhash_image_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline ran on ONE task of 32 — measured 13.1 s → 1.6 s.  At
     100 TB the asset scan already yields ≥ cores splits and spread
     is a no-op."""
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
     from sync_cosmos_db_spark.operators.multimodal import (
         dhash_png_assets, png_encode,
     )

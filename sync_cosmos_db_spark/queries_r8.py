@@ -189,7 +189,7 @@ def sketch_profile_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate; the exact distinct is itself a second hash shuffle that
     the production profile (``sketch_profile``) deliberately avoids —
     here it IS the point."""
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     # spread() the projected scan (guide §2.5): the single-split events
     # file otherwise runs the whole percentile/HLL partial aggregation

@@ -1767,7 +1767,7 @@ def permutation_test_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     are 1e-6-rounded before the extreme count so both engines compare
     identical values."""
     from sync_cosmos_db_spark.operators.curation import hash_bucket
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     o = load_table(spark, sf_dir, "orders").select(
         "o_custkey", F.col("o_totalprice").alias("v"))

@@ -198,71 +198,42 @@ def write_event_time_slices(df: DataFrame, out_dir: str,
     slices in event-time order — the shared setup of the three
     rate-limit stream wrappers.
 
-    Round 18 (r17 verdict item 4, guide §2.4/§2.5): the previous form
-    was ``ntile(4).over(Window.orderBy("ts", "event_id"))`` — an O(N)
-    SINGLE-PARTITION global sort (the 100 TB scale-killer; r17's
-    persist cut it from 4 executions to 1 per invocation, this removes
-    execution 1) — followed by four filtered single-file writes (4
-    jobs re-reading the persisted frame).  Now the global rank comes
-    from the repo's own two-phase range-partitioned scan
-    (``curation.global_sort_index`` — driver state O(buckets), no
-    single-partition window), the slice id is the EXACT ntile formula
-    applied to that rank (first ``n mod k`` tiles get ``⌈n/k⌉`` rows —
-    bit-identical slice membership to the Window form), and all
-    slices are written in ONE slice-partitioned job instead of four.
+    The global rank is the two-phase range scan
+    (:func:`~sync_cosmos_db_spark.operators.partitioning.range_cumsum`
+    — driver state O(buckets), no single-partition window), the slice
+    id is the EXACT ntile formula applied to that rank (first
+    ``n mod k`` tiles get ``⌈n/k⌉`` rows — bit-identical slice
+    membership to ``ntile(k).over(Window.orderBy("ts", "event_id"))``),
+    and all slices are written in ONE slice-partitioned job.  Three
+    driver actions in total: the quantile probe, the bucket totals
+    (which also yield the row count n the ntile formula needs) and the
+    write.  No ``spread()``: the per-bucket window shuffle
+    redistributes anyway and the input is persisted.
 
     The written files carry ``df``'s columns only (the slice id is a
     directory key, stripped on the move to the flat layout the file
     source replays), so the stream-side schema contract is unchanged.
+    Raises ``RuntimeError`` if a slice directory holds more than one
+    part file.
     """
     import glob as _glob
     import os as _os
     import shutil as _shutil
 
-    from pyspark.sql import Window as W
+    from sync_cosmos_db_spark.operators.partitioning import range_cumsum
 
-    from sync_cosmos_db_spark.operators.curation import _flat_bucket
-
-    # A lean inline of curation.global_sort_index (same two-phase
-    # range-bucket rank, same bucket/prefix expressions) rather than a
-    # call to it, for two sf0.1-measured trims: the total row count n
-    # (the ntile formula needs it) falls out of the bucket-counts
-    # collect instead of a separate count() job, and the helper's
-    # spread() is skipped — the per-bucket window shuffle redistributes
-    # anyway and the input here is persisted below.  THREE driver
-    # actions total (quantile probe, bucket counts, the write).
-    #
-    # Rank under (ts, event_id): epoch micros is order-isomorphic to
-    # the timestamp and numeric (approxQuantile needs a numeric
-    # value_col); 1.7e15 µs sits far inside double's 2^53
-    # exact-integer range, so the range-bucket boundaries are exact.
-    #
-    # ONE scan for the three passes (persist) — the same role the old
-    # form's persist of the ntile output played; bounded by the replay
+    # ONE scan for the three passes (persist); bounded by the replay
     # window's input, which this wrapper materializes to disk anyway.
     df = df.persist()
     try:
-        base = df.withColumn("__ord", F.unix_micros(F.col("ts")))
-        n_buckets = 64
-        bounds = base.approxQuantile(
-            "__ord", [i / n_buckets for i in range(1, n_buckets)], 0.001)
-        bnds = sorted(set(bounds))
-        tagged = base.withColumn("__bucket",
-                                 _flat_bucket(F.col("__ord"), bnds))
-        counts = {r["__bucket"]: r["__c"] for r in
-                  tagged.groupBy("__bucket")
-                  .agg(F.count("*").alias("__c")).collect()}
-        n = sum(counts.values())
-        pref_vals, acc = [], 0
-        for b in range(len(bnds) + 1):
-            pref_vals.append(acc)
-            acc += counts.get(b, 0)
-        pref = F.element_at(F.array(*[F.lit(v) for v in pref_vals]),
-                            F.col("__bucket") + 1)
-        w = W.partitionBy("__bucket").orderBy("__ord", "event_id")
-        idx = tagged.withColumn(
-            "__gi", (pref + F.row_number().over(w)).cast("long"))
-        q, rem = divmod(n, n_slices)
+        # Rank under (ts, event_id): epoch micros is order-isomorphic to
+        # the timestamp and numeric (approxQuantile needs a numeric
+        # key); 1.7e15 µs sits far inside double's 2^53 exact-integer
+        # range, so the range-bucket boundaries are exact.
+        idx, totals = range_cumsum(
+            df.withColumn("__ord", F.unix_micros(F.col("ts"))),
+            ["__ord", "event_id"], {"__gi": F.lit(1)})
+        q, rem = divmod(totals["__gi"], n_slices)
         cut = rem * (q + 1)
         r = F.col("__gi")
         if q == 0:
@@ -280,15 +251,14 @@ def write_event_time_slices(df: DataFrame, out_dir: str,
         (idx.withColumn("__slice", slice_id)
          .select(*df.columns, "__slice")
          # one partition per slice value → exactly one file per slice
-         # dir; the write parallelizes across slices in ONE job instead
-         # of four sequential filtered single-file writes
+         # dir; the write parallelizes across slices in ONE job
          .repartition(n_slices, "__slice")
          .write.partitionBy("__slice").mode("append").parquet(out_dir))
     finally:
         df.unpersist()
     # flatten slice=i/part-*.parquet → slice_i.parquet with forced
     # mtimes 1e9 + i·1000 (strictly increasing, far below any real
-    # 2020s mtime — same convention the per-slice writes used)
+    # 2020s mtime)
     for i in range(1, n_slices + 1):
         part_dir = _os.path.join(out_dir, f"__slice={i}")
         files = sorted(_glob.glob(_os.path.join(part_dir, "*.parquet")))
@@ -296,9 +266,11 @@ def write_event_time_slices(df: DataFrame, out_dir: str,
             if _os.path.isdir(part_dir):
                 _shutil.rmtree(part_dir)
             continue
-        assert len(files) == 1, (
-            f"write_event_time_slices: slice {i} produced {len(files)} "
-            f"files, expected 1 (repartition by slice guarantees one)")
+        if len(files) != 1:
+            raise RuntimeError(
+                f"write_event_time_slices: slice {i} produced "
+                f"{len(files)} files, expected 1 (repartition by slice "
+                f"guarantees one)")
         dst = _os.path.join(out_dir, f"slice_{i}.parquet")
         _os.rename(files[0], dst)
         _shutil.rmtree(part_dir)

@@ -4,7 +4,7 @@ byte-small inputs must (a) materialize AND score those pairs at >=
 cluster parallelism, never at AQE's input-byte-coalesced count, and
 (b) never DOWN-partition an already-wide stream to core count.  These
 pin the fixes in ``linkage.jaro_winkler_join``,
-``dedup.embedding_dup_pairs`` (blocked branch) and ``dedup.spread``
+``dedup.embedding_dup_pairs`` (blocked branch) and ``partitioning.spread``
 so a refactor that drops a repartition fails CI, not the cluster.
 
 ``.rdd.getNumPartitions()`` on the operator output finalizes the AQE
@@ -47,7 +47,7 @@ def test_blocked_embedding_scoring_stage_meets_floor(spark, sf_dir):
 
 
 def test_spread_floor_never_downpartitions(spark):
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     dp = spark.sparkContext.defaultParallelism
     # a derived (non-file) frame wider than the target must pass
@@ -99,7 +99,7 @@ def test_notch_dhash_python_stages_meet_floor(spark):
     1 of 32 tasks).  spread() must widen the scan to >= parallelism at
     the 5x slice; the Python stages are narrow, so pinning their input
     partitioning pins them."""
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     docs = spread(
         load_table(spark, "/tmp/sf0.5", "documents").select(
@@ -117,7 +117,7 @@ def test_spread_few_large_files_not_downpartitioned(spark, tmp_path):
     repartitioned on file count < parallelism even when the scan
     already split wider than the target; the decision is now made
     solely on the measured split count."""
-    from sync_cosmos_db_spark.operators.dedup import spread
+    from sync_cosmos_db_spark.operators.partitioning import spread
 
     dp = spark.sparkContext.defaultParallelism
     path = str(tmp_path / "one_big_file")

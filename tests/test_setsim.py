@@ -79,19 +79,25 @@ if __name__ == "__main__":
 
 
 def test_parity_across_verify_tiers(spark):
-    """r18: the three verify tiers (≤64-vocab bitset / int64-id arrays
-    / string arrays) must agree pair-for-pair.  A 70-token vocabulary
+    """The three verify tiers (≤64-vocab bitset / int64-id arrays /
+    string arrays) must agree pair-for-pair.  A 70-token vocabulary
     forces the array tier; the same corpus restricted to 30 tokens
-    takes the bitset tier — both checked against the n² reference."""
+    takes the bitset tier — both checked against the n² reference.
+    63/64/65 straddle the bitset boundary: at 64 the top token owns
+    bit 63, the int64 sign bit."""
     import random
 
     rng = random.Random(7)
     big_vocab = [f"tok{i}" for i in range(70)]     # > 64 → array tier
-    small_vocab = big_vocab[:30]                   # ≤ 64 → bitset tier
-    for vocab in (big_vocab, small_vocab):
+    for n_vocab in (70, 30, 63, 64, 65):
+        vocab = big_vocab[:n_vocab]
         rows = [(i, " ".join(rng.sample(vocab, 10))) for i in range(1, 31)]
         rows += [(100 + i, txt) for i, (j, txt) in enumerate(rows[:5])]
+        # every vocab token occurs, so the tier boundary is really hit
+        rows += [(200 + k, " ".join(vocab[k:k + 10]))
+                 for k in range(0, n_vocab, 10)]
+        assert {t for _, txt in rows for t in txt.split()} == set(vocab)
         df = spark.createDataFrame(rows, "doc_id long, text string")
         got = {(r.id_a, r.id_b, r.inter, r.n_union) for r in
                setsim_join(df, "doc_id", "text", 0.5).collect()}
-        assert got == _brute(spark, rows, 0.5), f"vocab={len(vocab)}"
+        assert got == _brute(spark, rows, 0.5), f"vocab={n_vocab}"

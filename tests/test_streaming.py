@@ -544,3 +544,30 @@ def test_write_event_time_slices_fewer_rows_than_slices(spark, tmp_path):
         "slice_1.parquet", "slice_2.parquet"]
     assert [r.event_id for f in files
             for r in spark.read.parquet(f).collect()] == [1, 2]
+
+
+def test_write_event_time_slices_raises_on_extra_part_file(
+        spark, tmp_path, monkeypatch):
+    """The one-file-per-slice invariant is a real exception, not an
+    assert: a slice directory reporting two part files raises."""
+    import glob
+
+    from pyspark.sql import functions as F
+
+    real_glob = glob.glob
+
+    def two_parts(pattern, *a, **k):
+        found = real_glob(pattern, *a, **k)
+        if "__slice=1" in pattern:
+            found = found + [pattern.replace("*", "part-extra")]
+        return found
+
+    monkeypatch.setattr(glob, "glob", two_parts)
+    df = (spark.range(8)
+          .select((F.col("id") + 1).alias("event_id"),
+                  F.timestamp_micros(F.col("id") * 1_000_000)
+                  .alias("ts")))
+    out = str(tmp_path / "dup")
+    os.makedirs(out)
+    with pytest.raises(RuntimeError, match="slice 1 produced 2 files"):
+        SW.write_event_time_slices(df, out, n_slices=4)
