@@ -1,4 +1,4 @@
-"""Session-cache lifetime management (round-8 verdict item 2).
+"""Session-cache lifetime management.
 
 Several operators persist (or ``localCheckpoint``) intermediates that
 the RETURNED lazy plan still reads — the posting tables of the
@@ -7,8 +7,8 @@ the per-hop frontiers of the graph loops.  Those caches cannot be
 released before the caller's consuming action, but leaving them cached
 for the life of the session pins executor storage memory indefinitely —
 exactly the failure shape of a long-lived multi-query session at
-100 TB, and the leak the round-8 full-suite cache census exposed
-(12 persisted RDDs surviving 65 test modules).
+100 TB, and the leak a full-suite cache census once exposed (12
+persisted RDDs surviving 65 test modules).
 
 Every such site now registers its cached frame here instead of calling
 ``persist()``/``localCheckpoint()`` bare; the harness (the test suite
@@ -68,39 +68,13 @@ def register_persisted(df: DataFrame) -> DataFrame:
     return df
 
 
-def scoped_local_checkpoint(df: DataFrame, eager: bool = True
-                            ) -> DataFrame:
-    """``df.localCheckpoint(eager)`` + register the checkpoint's
-    storage blocks for a later :func:`release_persisted`.
-
-    The blocks are found by diffing ``getPersistentRDDs`` around the
-    checkpoint call (``DataFrame.unpersist`` cannot reach them); the
-    diff runs under a lock, so concurrent scoped checkpoints cannot
-    mis-attribute each other's RDD ids.  Eager only — a lazy
-    checkpoint's blocks would not exist yet at diff time."""
-    if not eager:
-        raise ValueError("scoped_local_checkpoint requires eager=True "
-                         "(a lazy checkpoint has no blocks to track)")
-    jsc = df.sparkSession.sparkContext._jsc
-    with _LOCK:
-        before = {int(k) for k in
-                  jsc.getPersistentRDDs().keySet().toArray()}
-        out = df.localCheckpoint(eager=True)
-        after = jsc.getPersistentRDDs()
-        for k in after.keySet().toArray():
-            if int(k) not in before:
-                _CHECKPOINTED.append(after.get(k))
-    return out
-
-
-@contextmanager
-def local_checkpoint_released(df: DataFrame, eager: bool = True):
-    """Scoped form for checkpoints consumed INSIDE one function: yields
-    the eagerly checkpointed frame and frees its storage blocks on
-    exit (after the caller's write/collect), without touching any
-    other registered cache."""
-    if not eager:
-        raise ValueError("local_checkpoint_released requires eager=True")
+def _local_checkpoint(df: DataFrame) -> tuple[DataFrame, list]:
+    """Eager ``df.localCheckpoint()`` plus the JVM handles of the RDDs
+    it persisted, found by diffing ``getPersistentRDDs`` around the call
+    (``DataFrame.unpersist`` cannot reach them).  The diff runs under
+    the lock, so concurrent checkpoints cannot mis-attribute each
+    other's RDD ids.  A lazy checkpoint would have no blocks yet to
+    diff, hence eager only."""
     jsc = df.sparkSession.sparkContext._jsc
     with _LOCK:
         before = {int(k) for k in
@@ -109,6 +83,25 @@ def local_checkpoint_released(df: DataFrame, eager: bool = True):
         after = jsc.getPersistentRDDs()
         handles = [after.get(k) for k in after.keySet().toArray()
                    if int(k) not in before]
+    return out, handles
+
+
+def scoped_local_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager ``df.localCheckpoint()`` + register the checkpoint's
+    storage blocks for a later :func:`release_persisted`."""
+    out, handles = _local_checkpoint(df)
+    with _LOCK:
+        _CHECKPOINTED.extend(handles)
+    return out
+
+
+@contextmanager
+def local_checkpoint_released(df: DataFrame):
+    """Scoped form for checkpoints consumed INSIDE one function: yields
+    the eagerly checkpointed frame and frees its storage blocks on
+    exit (after the caller's write/collect), without touching any
+    other registered cache."""
+    out, handles = _local_checkpoint(df)
     try:
         yield out
     finally:

@@ -54,15 +54,6 @@ def pk_path_to_column(path: str) -> Column:
     return col
 
 
-def pk_path_to_json_expr(payload_col: str, path: str) -> Column:
-    """Dynamic-schema variant of :func:`pk_path_to_column` over a JSON
-    payload column — ``get_json_object`` stays JVM-side and null-safe."""
-    parts = [p for p in path.strip("/").split("/") if p]
-    if not parts:
-        raise ValueError(f"empty partition key path: {path!r}")
-    return F.get_json_object(F.col(payload_col), "$." + ".".join(parts))
-
-
 def infer_payload_schema(df: DataFrame, payload_col: str = "payload",
                          sample_n: int = 1000):
     """Infer a typed StructType from a JSON payload column by sampling
@@ -84,8 +75,7 @@ def parse_payload(df: DataFrame, schema,
     return df.withColumn(out_col, F.from_json(F.col(payload_col), schema))
 
 
-def extract_pk_columns(df: DataFrame, pk_paths: list[str],
-                       payload_col: str | None = None) -> DataFrame:
+def extract_pk_columns(df: DataFrame, pk_paths: list[str]) -> DataFrame:
     """Add one ``__pk_{i}`` column per partition-key path (O8).
 
     Hierarchical (multi-path) keys are preserved in full — the reference
@@ -93,9 +83,7 @@ def extract_pk_columns(df: DataFrame, pk_paths: list[str],
     (``src/containers.py:16``); we keep the whole list (SURVEY.md §1.4).
     """
     for i, path in enumerate(pk_paths):
-        col = (pk_path_to_json_expr(payload_col, path) if payload_col
-               else pk_path_to_column(path))
-        df = df.withColumn(f"__pk_{i}", col)
+        df = df.withColumn(f"__pk_{i}", pk_path_to_column(path))
     return df
 
 
@@ -192,8 +180,7 @@ def _contains_struct(dtype: T.DataType) -> bool:
     return False
 
 
-def strip_system_fields(df: DataFrame,
-                        fields: tuple[str, ...] = SYSTEM_FIELDS) -> DataFrame:
+def strip_system_fields(df: DataFrame) -> DataFrame:
     """Drop Cosmos system fields at the top level and inside every nested
     struct / array-of-struct / map-of-struct (O10, full-recursion variant).
 
@@ -201,10 +188,7 @@ def strip_system_fields(df: DataFrame,
     compiled to built-in column expressions (``struct``/``transform``),
     so it runs entirely inside whole-stage codegen.
     """
-    out = df
-    for name in fields:
-        if name in out.columns:
-            out = out.drop(name)
+    out = df.drop(*[name for name in SYSTEM_FIELDS if name in df.columns])
     for field in out.schema.fields:
         if _contains_struct(field.dataType):
             out = out.withColumn(
@@ -216,7 +200,7 @@ def strip_system_fields(df: DataFrame,
 # O11 — canonical content hash
 # ---------------------------------------------------------------------------
 
-def content_hash(cols: list[str], num_bits: int = 256) -> Column:
+def content_hash(cols: list[str]) -> Column:
     """Deterministic content hash over the business columns (O11).
 
     Canonicalization: columns sorted by name, packed into a struct,
@@ -227,11 +211,4 @@ def content_hash(cols: list[str], num_bits: int = 256) -> Column:
     avoids shipping both full documents through the comparison.
     """
     ordered = sorted(cols)
-    return F.sha2(F.to_json(F.struct(*[F.col(c).alias(c) for c in ordered])), num_bits)
-
-
-def with_content_hash(df: DataFrame, exclude: tuple[str, ...] = SYSTEM_FIELDS,
-                      hash_col: str = "__content_hash") -> DataFrame:
-    """Add the canonical content hash over all non-system columns."""
-    cols = [c for c in df.columns if c not in exclude and not c.startswith("__")]
-    return df.withColumn(hash_col, content_hash(cols))
+    return F.sha2(F.to_json(F.struct(*[F.col(c).alias(c) for c in ordered])), 256)

@@ -10,16 +10,19 @@ container migration is a single distributed plan:
                             ├── left outer join on (id, pk cols) ── classify ── write per action
     target ──hash──────────-┘
 
+and the new target state is the tagged rows plus the target rows whose
+key the source lacks (:func:`merge_target_state`, one left anti join).
+
 Operator map (SURVEY.md §2): O6 (point lookup → left join), O12
-(upsert classifier), O21 (verification), O22 (metrics via observe),
-O18 (pk alignment pre-flight).
+(upsert classifier), O14 (upsert merge), O21 (verification), O22
+(metrics via observe), O18 (pk alignment pre-flight).
 
 100 TB posture:
 
 * The join shuffles both sides on the merge key once; everything
   downstream (classify, per-action split) reuses that partitioning.
 * With a small target (initial loads), AQE converts the join to
-  broadcast automatically; callers can force it with ``broadcast_target``.
+  broadcast automatically.
 * Metrics come from ``df.observe`` — no second pass over the data and
   no driver-side collect of rows.
 """
@@ -92,14 +95,8 @@ def check_pk_alignment(source_pk_paths: list[str],
             f"source={source_pk_paths} target={target_pk_paths}")
 
 
-def classify_actions(
-    source: DataFrame,
-    target: DataFrame,
-    keys: list[str],
-    compare_cols: list[str] | None = None,
-    broadcast_target: bool = False,
-    action_col: str = "action",
-) -> DataFrame:
+def classify_actions(source: DataFrame, target: DataFrame,
+                     keys: list[str]) -> DataFrame:
     """Tag every source row insert/update/skip against the target (O6+O12).
 
     The reference decided this per document with a point-read + dict
@@ -114,23 +111,19 @@ def classify_actions(
     every other target column out of the scan, so at 100 TB the join
     ships 40-byte digests, not documents.
     """
-    if compare_cols is None:
-        compare_cols = [c for c in source.columns
-                        if c not in keys and c not in SYSTEM_FIELDS]
-
+    compare_cols = [c for c in source.columns
+                    if c not in keys and c not in SYSTEM_FIELDS]
     src_hash = source.withColumn("__src_hash", content_hash(compare_cols))
     tgt_slim = (
         strip_system_fields(target)
         .withColumn("__tgt_hash", content_hash(compare_cols))
         .select(*keys, "__tgt_hash", F.lit(True).alias("__tgt_exists"))
     )
-    if broadcast_target:
-        tgt_slim = F.broadcast(tgt_slim)
 
     joined = src_hash.join(tgt_slim, on=keys, how="left_outer")
     return (
         joined.withColumn(
-            action_col,
+            "action",
             F.when(F.col("__tgt_exists").isNull(), F.lit(ACTION_INSERT))
             .when(F.col("__src_hash") != F.col("__tgt_hash"), F.lit(ACTION_UPDATE))
             .otherwise(F.lit(ACTION_SKIP)),
@@ -139,22 +132,41 @@ def classify_actions(
     )
 
 
+def merge_target_state(tagged: DataFrame, source: DataFrame,
+                       target: DataFrame, keys: list[str]) -> DataFrame:
+    """The post-migration target state: every tagged source row plus
+    every target row whose key ``source`` lacks.
+
+    This is the one merge rule of both write paths (the container
+    migration and the change-feed catch-up). The reference upserts each
+    source document and never deletes (``src/migration.py:132-146``),
+    so a target-only document survives unchanged: it is neither
+    sanitized nor stripped, and ``unionByName`` with missing columns
+    keeps every field it has. ``source`` is the frame ``tagged`` was
+    classified from; taking the anti-join keys from it, not from
+    ``tagged``, keeps any ``observe`` on ``tagged`` to one occurrence
+    in the plan, so its counters fire once per write.
+    """
+    kept = target.join(source.select(*keys), keys, "left_anti")
+    return tagged.drop("action").unionByName(kept, allowMissingColumns=True)
+
+
 def migrate_container(
     source: DataFrame,
     target: DataFrame,
     keys: list[str],
     container: str = "container",
-    compare_cols: list[str] | None = None,
     sanitize: bool = False,
     writer=None,
-    broadcast_target: bool = False,
 ) -> tuple[DataFrame, MigrationResult]:
     """Full migration pipeline for one container; returns the action-tagged
     DataFrame and (after ``writer`` or a count pass) the counter quadruple.
 
     Pipeline (SURVEY.md §3): validate/quarantine (O7) → strip system
     fields (O10) → classify (O6/O11/O12) → optional sanitize (O19) →
-    write per action (O13/O14) → metrics (O22).
+    merge with the target (:func:`merge_target_state`) → write (O13/O14)
+    → metrics (O22). ``writer`` receives the new target state; without
+    one, the tagged rows go to a ``noop`` sink for the counters alone.
     """
     import time
 
@@ -165,8 +177,7 @@ def migrate_container(
     valid, quarantine = split_valid_invalid(source, id_col=id_col,
                                             pk_cols=keys[1:])
     clean = strip_system_fields(valid)
-    tagged = classify_actions(clean, target, keys, compare_cols,
-                              broadcast_target=broadcast_target)
+    tagged = classify_actions(clean, target, keys)
     if sanitize:
         # The reference sanitizes only documents it WRITES (the gate sits
         # inside the update/insert branches, ``src/migration.py:132-146``);
@@ -185,7 +196,7 @@ def migrate_container(
     )
 
     if writer is not None:
-        writer(tagged)
+        writer(merge_target_state(tagged, clean, target, keys))
     else:
         tagged.write.format("noop").mode("overwrite").save()
 
@@ -203,7 +214,6 @@ def migrate_container(
 
 
 def verify_migration(source: DataFrame, target: DataFrame,
-                     compare_cols: list[str] | None = None,
                      strong: bool = False) -> tuple[bool, int, int]:
     """O21 verification — count equality like the reference
     (``src/migration.py:182-211``), optionally strengthened with the
@@ -215,8 +225,7 @@ def verify_migration(source: DataFrame, target: DataFrame,
     tgt_count = target.count()
     ok = src_count == tgt_count
     if ok and strong:
-        cols = compare_cols or [c for c in source.columns
-                                if c not in SYSTEM_FIELDS]
+        cols = [c for c in source.columns if c not in SYSTEM_FIELDS]
         src_norm = strip_system_fields(source).select(*cols)
         tgt_norm = strip_system_fields(target).select(*cols)
         ok = src_norm.exceptAll(tgt_norm).isEmpty() and \
@@ -224,8 +233,8 @@ def verify_migration(source: DataFrame, target: DataFrame,
     return ok, src_count, tgt_count
 
 
-def snapshot_diff(old: DataFrame, new: DataFrame, key_col: str,
-                  compare_cols: list[str] | None = None) -> DataFrame:
+def snapshot_diff(old: DataFrame, new: DataFrame, key_col: str
+                  ) -> DataFrame:
     """Symmetric snapshot diff: classify every key across two snapshots
     of a keyed table as ``added`` / ``removed`` / ``changed`` /
     ``unchanged``.
@@ -240,8 +249,7 @@ def snapshot_diff(old: DataFrame, new: DataFrame, key_col: str,
     the key.  At 100 TB the join ships 40-byte rows, not documents, and
     the hash computation is a map-side projection on each scan.
     """
-    cols = compare_cols or sorted(
-        c for c in old.columns if c != key_col and c in new.columns)
+    cols = sorted(c for c in old.columns if c != key_col and c in new.columns)
     o = old.select(F.col(key_col).alias("key"),
                    content_hash(cols).alias("__oh"))
     n = new.select(F.col(key_col).alias("key"),

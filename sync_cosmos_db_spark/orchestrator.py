@@ -8,30 +8,43 @@ driver-side Python over catalog entries; each container migration is one
 distributed Spark job — set-at-a-time, not the reference's one-RTT-per-
 document loop.
 
-Divergences (documented): the reference's single-container path skips
-``create_database_if_not_exists`` and requires a pre-existing target
-database (``src/main.py:114``, SURVEY.md §3 entry point 3); we create it
-idempotently in all three paths — strictly more robust, never wrong.
+Here the three scopes are one enumeration of ``(database, container)``
+pairs. Divergences (documented): the reference's single-container path
+skips ``create_database_if_not_exists`` and requires a pre-existing
+target database (``src/main.py:114``, SURVEY.md §3 entry point 3); we
+create it idempotently in every scope — strictly more robust, never
+wrong.
 
 100 TB posture: each container migration is already fully distributed;
 ``max_parallel`` additionally submits container jobs concurrently from
-driver threads (pair with fair scheduler pools on a shared cluster) so
-many small containers don't serialize on job-launch latency.
+driver threads so many small containers don't serialize on job-launch
+latency. Each submitted job inherits the caller's local properties (job
+group, ``spark.scheduler.pool``), so on a shared cluster the caller can
+put the whole migration in one fair scheduler pool.
 """
 
 from __future__ import annotations
 
 import time
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import SparkSession
 
+from sync_cosmos_db_spark.document_model import (
+    extract_pk_columns,
+    strip_system_fields,
+)
 from sync_cosmos_db_spark.migration import (
     MigrationResult,
     check_pk_alignment,
     migrate_container,
     verify_migration,
 )
-from sync_cosmos_db_spark.sinks import merge_to_parquet, write_summary
+from sync_cosmos_db_spark.sinks import (
+    merge_to_parquet,
+    recover_swap,
+    write_summary,
+)
 from sync_cosmos_db_spark.sources import catalog
 
 
@@ -40,8 +53,6 @@ def _prepare_merge_keys(src_df, tgt_df, pk_paths: list[str]):
     nested paths as extracted ``__pk_i`` columns on BOTH sides — the
     full hierarchical key list, never truncated to the first path
     (reference truncates at ``src/containers.py:16``; SURVEY.md §1.4)."""
-    from sync_cosmos_db_spark.document_model import extract_pk_columns
-
     keys = ["id"] if "id" in src_df.columns else []
     flat, nested = [], []
     for p in pk_paths:
@@ -78,7 +89,13 @@ def migrate_container_path(
     RU bound from the CLI) is applied to the source/target reads — the
     place RU consumption happens on a real connector deployment. The
     parquet reader ignores unknown options, so the harness path is
-    unaffected while the wiring stays live end-to-end (round-2 advice)."""
+    unaffected while the wiring stays live end-to-end.
+
+    Rows of the target whose key the source lacks are kept
+    (``migration.merge_target_state``); a swap that an earlier run left
+    half done is repaired before the target is read."""
+    tgt_path = catalog.container_data_path(target_root, database, container)
+    recover_swap(tgt_path)
     src_props = catalog.get_container_properties(source_root, database,
                                                  container)
     tgt_exists = catalog.container_exists(target_root, database, container)
@@ -88,7 +105,7 @@ def migrate_container_path(
         check_pk_alignment(src_props["partition_key_paths"],
                            tgt_props["partition_key_paths"])
 
-    tgt_path = catalog.create_container_if_not_exists(
+    catalog.create_container_if_not_exists(
         target_root, database, container, src_props)
 
     reader = spark.read.options(**(connector_options or {}))
@@ -97,7 +114,9 @@ def migrate_container_path(
     if tgt_exists:
         tgt_df = reader.parquet(tgt_path)
     else:
-        tgt_df = spark.createDataFrame([], src_df.schema)
+        # an empty frame the optimizer can see is empty, so the classify
+        # and merge joins against it are pruned away
+        tgt_df = strip_system_fields(src_df).limit(0)
 
     src_orig = src_df
     src_df, tgt_df, keys = _prepare_merge_keys(
@@ -105,9 +124,9 @@ def migrate_container_path(
 
     _, result = migrate_container(
         src_df, tgt_df, keys, container=container, sanitize=sanitize,
-        writer=lambda tagged: merge_to_parquet(
-            tagged.drop(*[c for c in tagged.columns
-                          if c.startswith("__pk_")]), tgt_path),
+        writer=lambda state: merge_to_parquet(
+            state.drop(*[c for c in state.columns
+                         if c.startswith("__pk_")]), tgt_path),
     )
 
     new_tgt = spark.read.parquet(tgt_path)
@@ -125,41 +144,6 @@ def migrate_container_path(
     return result
 
 
-def migrate_database_path(spark: SparkSession, source_root: str,
-                          target_root: str, database: str,
-                          sanitize: bool = False,
-                          strong_verify: bool = False,
-                          max_parallel: int = 1,
-                          connector_options: dict[str, str] | None = None,
-                          ) -> dict:
-    """One database: create it on the target (O15), loop its containers
-    (reference ``src/main.py:58-81``).
-
-    ``max_parallel > 1`` submits container migrations as concurrent
-    Spark jobs from driver threads (SparkSession is thread-safe; use
-    fair scheduler pools on a shared cluster). Each container touches
-    disjoint paths, so concurrency is safe; results are keyed, not
-    ordered. The reference is strictly sequential — one document at a
-    time, let alone one container."""
-    catalog.create_database_if_not_exists(target_root, database)
-    containers = catalog.list_containers(source_root, database)
-    if max_parallel <= 1 or len(containers) <= 1:
-        return {c: migrate_container_path(
-            spark, source_root, target_root, database, c,
-            sanitize=sanitize, strong_verify=strong_verify,
-            connector_options=connector_options)
-            for c in containers}
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=max_parallel) as pool:
-        futs = {c: pool.submit(
-            migrate_container_path, spark, source_root, target_root,
-            database, c, sanitize, strong_verify, connector_options)
-            for c in containers}
-        return {c: f.result() for c, f in futs.items()}
-
-
 def migrate_account_path(
     spark: SparkSession,
     source_root: str,
@@ -172,33 +156,48 @@ def migrate_account_path(
     max_parallel: int = 1,
     connector_options: dict[str, str] | None = None,
 ) -> dict:
-    """Scope dispatch exactly like the reference (``src/main.py:107-152``):
-    no scope → every database; ``database`` → one database; ``database``
-    + ``container`` → one container. ``container`` without ``database``
-    is an error (``src/main.py:109-110``)."""
+    """Scope dispatch like the reference (``src/main.py:107-152``): no
+    scope → every database; ``database`` → one database; ``database`` +
+    ``container`` → one container. ``container`` without ``database`` is
+    an error (``src/main.py:109-110``).
+
+    ``max_parallel > 1`` submits container migrations as concurrent
+    Spark jobs from driver threads (SparkSession is thread-safe). Each
+    container touches disjoint paths, so concurrency is safe; results
+    are keyed, not ordered. The reference is strictly sequential — one
+    document at a time, let alone one container."""
     if container is not None and database is None:
         raise ValueError("--container requires --database")
 
     start = time.monotonic()
-    results: dict = {}
-    if database is not None and container is not None:
-        catalog.create_database_if_not_exists(target_root, database)
-        results[database] = {container: migrate_container_path(
-            spark, source_root, target_root, database, container,
-            sanitize=sanitize, strong_verify=strong_verify,
-            connector_options=connector_options)}
-    elif database is not None:
-        results[database] = migrate_database_path(
-            spark, source_root, target_root, database,
-            sanitize=sanitize, strong_verify=strong_verify,
-            max_parallel=max_parallel, connector_options=connector_options)
+    databases = ([database] if database is not None
+                 else catalog.list_databases(source_root))
+    pairs = []
+    for db in databases:
+        catalog.create_database_if_not_exists(target_root, db)
+        pairs += [(db, c) for c in ([container] if container is not None
+                                    else catalog.list_containers(
+                                        source_root, db))]
+
+    def run(db: str, c: str) -> MigrationResult:
+        return migrate_container_path(
+            spark, source_root, target_root, db, c, sanitize=sanitize,
+            strong_verify=strong_verify, connector_options=connector_options)
+
+    if max_parallel <= 1 or len(pairs) <= 1:
+        done = [run(db, c) for db, c in pairs]
     else:
-        for db in catalog.list_databases(source_root):
-            results[db] = migrate_database_path(
-                spark, source_root, target_root, db,
-                sanitize=sanitize, strong_verify=strong_verify,
-                max_parallel=max_parallel,
-                connector_options=connector_options)
+        from concurrent.futures import ThreadPoolExecutor
+
+        # the wrapper copies the caller's local properties when it is
+        # built, so build one per job in this thread
+        with ThreadPoolExecutor(max_workers=max_parallel) as pool:
+            futs = [pool.submit(inheritable_thread_target(spark)(run), db, c)
+                    for db, c in pairs]
+            done = [f.result() for f in futs]
+    results: dict = {db: {} for db in databases}
+    for (db, c), res in zip(pairs, done):
+        results[db][c] = res
 
     summary = {
         "source_account": source_root,

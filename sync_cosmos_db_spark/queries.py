@@ -577,6 +577,9 @@ EDITED_ROUND.update(dict.fromkeys(
 # driver actions (the rank window computes a running sum(1) instead of
 # row_number); every consumer was re-verified against its sf0.01
 # oracle.
+# merge_writeback_roundtrip now builds its new target state with
+# migration.merge_target_state before the merge_to_parquet swap.
+EDITED_ROUND["merge_writeback_roundtrip"] = 19
 
 # Round-17 no-entry decisions: graph.py's caller-cache detection fix
 # (storageLevel instead of is_cached) changes NOTHING for the

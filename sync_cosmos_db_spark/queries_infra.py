@@ -19,7 +19,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sync_cosmos_db_spark.migration import classify_actions, migrate_container
+from sync_cosmos_db_spark.migration import (
+    classify_actions,
+    merge_target_state,
+    migrate_container,
+)
 from sync_cosmos_db_spark.queries import (
     _MIGRATE_ORACLE_CTE,
     _derived_source_target,
@@ -139,20 +143,22 @@ def actions_partitioned_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def merge_writeback_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O14: seed a parquet target with the stale derived state, classify
-    source vs target, apply the migration with ``merge_to_parquet``
-    (atomic rename), and read the merged target back. Post-merge the
-    target must equal the SOURCE state exactly — every insert landed,
-    every stale row was replaced, every skip survived — which is what
-    the per-row content-hash oracle asserts."""
+    source vs target, build the new state with ``merge_target_state``,
+    swap it in with ``merge_to_parquet`` (atomic rename), and read the
+    merged target back. The derived target holds no key the source
+    lacks, so post-merge it must equal the SOURCE state exactly — every
+    insert landed, every stale row was replaced, every skip survived —
+    which is what the per-row content-hash oracle asserts."""
     from sync_cosmos_db_spark.sinks import merge_to_parquet
 
     src, tgt = _derived_source_target(spark, sf_dir)
     d = tempfile.mkdtemp(prefix="merge_wb_")
     target_path = os.path.join(d, "target.parquet")
     tgt.write.mode("overwrite").parquet(target_path)
-    tagged = classify_actions(src, spark.read.parquet(target_path),
-                              keys=["doc_id"])
-    merge_to_parquet(tagged, target_path)
+    seeded = spark.read.parquet(target_path)
+    tagged = classify_actions(src, seeded, keys=["doc_id"])
+    merge_to_parquet(merge_target_state(tagged, src, seeded, ["doc_id"]),
+                     target_path)
     return (spark.read.parquet(target_path)
             .select("doc_id", F.sha2(F.col("text"), 256).alias("text_sha")))
 

@@ -6,11 +6,12 @@ non-deterministic across runs, row-at-a-time Python. This engine keeps
 the same *semantics* (same field-name map, case-insensitive, recursive
 into nested structs and arrays-of-structs) but:
 
-* **Deterministic**: each fake value is derived from ``sha2(seed)``
-  where the seed defaults to the original value (string-cast). Same
-  input → same sanitized output, so oracle checks and idempotence
-  tests work. (Documented divergence from the reference's fresh-draw
-  behavior; SURVEY.md §7c.)
+* **Deterministic**: each fake value is derived from ``sha2`` of the
+  original value (string-cast). Same input → same sanitized output, so
+  oracle checks and idempotence tests work. (Documented divergence from
+  the reference's fresh-draw behavior; SURVEY.md §7c.) The values are
+  hash-derived tokens such as ``FN_a1b2c3d4``, not the reference's
+  plausible-looking Faker names.
 * **JVM-side**: every generator is a built-in-function Column expression
   (concat/substr/translate/lpad/pmod over the sha2 hex digest) — no
   Python in the hot path, fully whole-stage-codegen'd. The reference's
@@ -124,162 +125,28 @@ GENERATORS = _generators()
 SANITIZE_FIELDS = frozenset(GENERATORS)
 
 
-# ---------------------------------------------------------------------------
-# "realistic" style — name-shaped values instead of hash tokens
-# ---------------------------------------------------------------------------
-# The reference emits plausible-looking values via fresh Faker draws
-# (``/root/reference/src/sanitizer.py:6-38``). Faker is nondeterministic
-# and row-at-a-time Python; this variant keeps the engine's determinism
-# (same seed hash drives every choice) and stays in codegen by picking
-# from embedded wordlists with element_at(array, pmod(hash, n)+1).
-# Fields that are inherently numeric/structured (ssn, phone, zip, dob,
-# uuid, account/routing numbers, payrate) are already realistic-shaped
-# in the token style and are reused as-is.
-
-_FIRST_NAMES = [
-    "James", "Mary", "Robert", "Patricia", "John", "Jennifer", "Michael",
-    "Linda", "David", "Elizabeth", "William", "Barbara", "Richard",
-    "Susan", "Joseph", "Jessica", "Thomas", "Sarah", "Charles", "Karen",
-    "Christopher", "Lisa", "Daniel", "Nancy", "Matthew", "Betty",
-    "Anthony", "Margaret", "Mark", "Sandra", "Donald", "Ashley",
-    "Steven", "Kimberly", "Paul", "Emily", "Andrew", "Donna", "Joshua",
-    "Michelle",
-]
-_LAST_NAMES = [
-    "Smith", "Johnson", "Williams", "Brown", "Jones", "Garcia",
-    "Miller", "Davis", "Rodriguez", "Martinez", "Hernandez", "Lopez",
-    "Gonzalez", "Wilson", "Anderson", "Thomas", "Taylor", "Moore",
-    "Jackson", "Martin", "Lee", "Perez", "Thompson", "White", "Harris",
-    "Sanchez", "Clark", "Ramirez", "Lewis", "Robinson", "Walker",
-    "Young", "Allen", "King", "Wright", "Scott", "Torres", "Nguyen",
-    "Hill", "Flores",
-]
-_STREETS = [
-    "Maple", "Oak", "Cedar", "Pine", "Elm", "Washington", "Lake",
-    "Hill", "Park", "Main", "Church", "High", "Mill", "Walnut",
-    "Spring", "North", "Ridge", "Sunset", "River", "Meadow",
-]
-_STREET_SUFFIXES = ["St", "Ave", "Blvd", "Dr", "Ln", "Rd", "Ct", "Way"]
-_CITIES = [
-    "Springfield", "Franklin", "Clinton", "Greenville", "Bristol",
-    "Fairview", "Salem", "Madison", "Georgetown", "Arlington",
-    "Ashland", "Dover", "Oxford", "Jackson", "Burlington", "Manchester",
-    "Milton", "Newport", "Auburn", "Centerville", "Clayton", "Dayton",
-    "Lexington", "Milford",
-]
-_STATES = [
-    "Alabama", "Alaska", "Arizona", "Arkansas", "California",
-    "Colorado", "Connecticut", "Delaware", "Florida", "Georgia",
-    "Hawaii", "Idaho", "Illinois", "Indiana", "Iowa", "Kansas",
-    "Kentucky", "Louisiana", "Maine", "Maryland", "Massachusetts",
-    "Michigan", "Minnesota", "Mississippi", "Missouri", "Montana",
-    "Nebraska", "Nevada", "New Hampshire", "New Jersey", "New Mexico",
-    "New York", "North Carolina", "North Dakota", "Ohio", "Oklahoma",
-    "Oregon", "Pennsylvania", "Rhode Island", "South Carolina",
-    "South Dakota", "Tennessee", "Texas", "Utah", "Vermont",
-    "Virginia", "Washington", "West Virginia", "Wisconsin", "Wyoming",
-]
-_JOB_TITLES = [
-    "Software Engineer", "Data Analyst", "Product Manager",
-    "Account Executive", "Operations Manager", "Financial Analyst",
-    "Marketing Specialist", "HR Generalist", "Sales Associate",
-    "Project Coordinator", "Customer Success Manager",
-    "Business Analyst", "Quality Engineer", "Research Scientist",
-    "Technical Writer", "Support Specialist",
-]
-_DEPARTMENTS = [
-    "Engineering", "Finance", "Marketing", "Sales", "Operations",
-    "Human Resources", "Legal", "Customer Support", "Research",
-    "Information Technology", "Procurement", "Facilities",
-]
-_COMPANIES = [
-    "Acme Corp", "Globex", "Initech", "Umbrella Holdings",
-    "Stark Industries", "Wayne Enterprises", "Wonka Industries",
-    "Tyrell Corp", "Cyberdyne Systems", "Hooli", "Vandelay Industries",
-    "Pied Piper",
-]
-
-
-def _pick(h: Column, start: int, options: list[str]) -> Column:
-    """Deterministic wordlist pick: 6 hash-derived digits mod len."""
-    arr = F.array(*[F.lit(o) for o in options])
-    idx = (F.pmod(_int(h, start, 6), F.lit(len(options))) + 1).cast("int")
-    return F.element_at(arr, idx)
-
-
-def _realistic_generators() -> dict[str, "callable"]:
-    tok = _generators()
-
-    def full_name(h):
-        return F.concat(_pick(h, 1, _FIRST_NAMES), F.lit(" "),
-                        _pick(h, 7, _LAST_NAMES))
-
-    def email_like(domain: str):
-        return lambda h: F.concat(
-            F.lower(_pick(h, 1, _FIRST_NAMES)), F.lit("."),
-            F.lower(_pick(h, 7, _LAST_NAMES)), _digits(h, 13, 2),
-            F.lit("@" + domain))
-
-    def street(h):
-        return F.concat(_digits(h, 1, 3), F.lit(" "),
-                        _pick(h, 4, _STREETS), F.lit(" "),
-                        _pick(h, 10, _STREET_SUFFIXES))
-
-    tok.update({
-        "firstname": lambda h: _pick(h, 1, _FIRST_NAMES),
-        "lastname": lambda h: _pick(h, 1, _LAST_NAMES),
-        "fullname": full_name,
-        "name": full_name,
-        "email": email_like("example.com"),
-        "workemail": email_like("company.example.com"),
-        "personalemail": email_like("freemail.example.com"),
-        "address": street,
-        "street": street,
-        "line1": street,
-        "line2": lambda h: F.concat(F.lit("Unit "), _digits(h, 1, 3)),
-        "city": lambda h: _pick(h, 1, _CITIES),
-        "state": lambda h: _pick(h, 1, _STATES),
-        "jobtitle": lambda h: _pick(h, 1, _JOB_TITLES),
-        "department": lambda h: _pick(h, 1, _DEPARTMENTS),
-        "accountname": lambda h: _pick(h, 1, _COMPANIES),
-        "countyname": lambda h: F.concat(_pick(h, 1, _CITIES),
-                                         F.lit(" County")),
-    })
-    return tok
-
-
-REALISTIC_GENERATORS = _realistic_generators()
-_STYLES = {"token": GENERATORS, "realistic": REALISTIC_GENERATORS}
-
-
-def fake_value(field_name: str, seed: Column,
-               style: str = "token") -> Column:
+def fake_value(field_name: str, seed: Column) -> Column:
     """Deterministic fake value for a PII field, seeded by ``seed``."""
-    gen = _STYLES[style][field_name.lower()]
-    return gen(_seed_hash(seed))
+    return GENERATORS[field_name.lower()](_seed_hash(seed))
 
 
 def sanitize_column(field_name: str, col: Column,
-                    dtype: T.DataType, seed: Column | None = None,
-                    style: str = "token") -> Column:
-    """Replace a matched column's values, preserving NULLs and the
-    declared Spark type."""
-    seed = col if seed is None else seed
-    fake = fake_value(field_name, seed, style).cast(dtype)
+                    dtype: T.DataType) -> Column:
+    """Replace a matched column's values, seeded by the value itself,
+    preserving NULLs and the declared Spark type."""
+    fake = fake_value(field_name, col).cast(dtype)
     return F.when(col.isNull(), col).otherwise(fake)
 
 
-def _sanitize_type(col: Column, dtype: T.DataType,
-                   style: str = "token") -> Column:
+def _sanitize_type(col: Column, dtype: T.DataType) -> Column:
     """Recursive struct/array rebuild applying generators by field name —
     the Column-expression analog of the reference's dict/list recursion
     (``src/sanitizer.py:41-63``), including dicts inside lists."""
     if isinstance(dtype, T.StructType):
         rebuilt = F.struct(*[
-            (sanitize_column(f.name, col.getField(f.name), f.dataType,
-                             style=style)
+            (sanitize_column(f.name, col.getField(f.name), f.dataType)
              if f.name.lower() in SANITIZE_FIELDS
-             else _sanitize_type(col.getField(f.name), f.dataType, style)
+             else _sanitize_type(col.getField(f.name), f.dataType)
              ).alias(f.name)
             for f in dtype.fields
         ])
@@ -287,8 +154,7 @@ def _sanitize_type(col: Column, dtype: T.DataType,
     if isinstance(dtype, T.ArrayType):
         inner = dtype.elementType
         if isinstance(inner, (T.StructType, T.ArrayType, T.MapType)):
-            return F.transform(col, lambda x: _sanitize_type(x, inner,
-                                                             style))
+            return F.transform(col, lambda x: _sanitize_type(x, inner))
         return col
     if isinstance(dtype, T.MapType):
         # string-keyed maps: sanitize values whose KEY matches, like the
@@ -300,17 +166,15 @@ def _sanitize_type(col: Column, dtype: T.DataType,
                     F.map_keys(col), F.map_values(col),
                     lambda k, v: F.when(
                         F.lower(k).isin(*SANITIZE_FIELDS),
-                        fake_value("name", v, style).cast(dtype.valueType)
-                    ).otherwise(_sanitize_type(v, dtype.valueType, style))),
+                        fake_value("name", v).cast(dtype.valueType)
+                    ).otherwise(_sanitize_type(v, dtype.valueType))),
             )
         return col
     return col
 
 
 def sanitize_dataframe(df: DataFrame,
-                       fields: frozenset[str] = SANITIZE_FIELDS,
-                       only_when: Column | None = None,
-                       style: str = "token") -> DataFrame:
+                       only_when: Column | None = None) -> DataFrame:
     """Sanitize every column (at any nesting depth) whose name matches the
     PII field map, case-insensitively. Pure column expressions — the plan
     stays inside whole-stage codegen.
@@ -318,23 +182,13 @@ def sanitize_dataframe(df: DataFrame,
     ``only_when`` gates replacement per ROW with a boolean Column (e.g.
     ``F.col("action") != "skip"``) in the same single projection —
     preferable to filter/sanitize/union, which would evaluate the whole
-    upstream plan once per branch.
-
-    ``style`` selects the generator family: ``"token"`` (default)
-    emits hash-derived tokens like ``FN_a1b2c3d4`` — compact and
-    oracle-checkable; ``"realistic"`` emits name-shaped values picked
-    deterministically from embedded wordlists (the reference's Faker
-    look, without Faker's nondeterminism or per-row Python)."""
-    if style not in _STYLES:
-        raise ValueError(f"unknown sanitize style {style!r}; "
-                         f"one of {sorted(_STYLES)}")
+    upstream plan once per branch."""
     out = df
     for f in df.schema.fields:
-        if f.name.lower() in fields:
-            repl = sanitize_column(f.name, F.col(f.name), f.dataType,
-                                   style=style)
+        if f.name.lower() in SANITIZE_FIELDS:
+            repl = sanitize_column(f.name, F.col(f.name), f.dataType)
         elif isinstance(f.dataType, (T.StructType, T.ArrayType, T.MapType)):
-            repl = _sanitize_type(F.col(f.name), f.dataType, style)
+            repl = _sanitize_type(F.col(f.name), f.dataType)
         else:
             continue
         if only_when is not None:

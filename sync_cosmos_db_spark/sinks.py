@@ -7,57 +7,68 @@ DataFrame writes; in production the same action-tagged frame goes to the
 Cosmos connector (``sources/cosmos.py``) with ``ItemAppend`` for inserts
 and ``ItemOverwrite`` for updates.
 
-The parquet "merge" rewrites the target from the tagged frame itself:
-inserts + updates carry new content, skips carry content identical to
-the target's, so the union IS the post-migration target state — no
-second join needed. At 100 TB the production path is the connector
-upsert (or Delta ``MERGE INTO``); full-rewrite is the plain-parquet
-fallback and is still one shuffle-free pass because the tagged frame
-already holds every surviving row.
+The parquet "merge" writes the new target state that
+``migration.merge_target_state`` builds — the tagged source rows plus the
+target rows whose key the source lacks, found with one left anti join on
+the merge key — then swaps it in for the old directory. At 100 TB the
+production path is the connector upsert (or Delta ``MERGE INTO``), which
+touches only the source's documents; full rewrite is the plain-parquet
+fallback.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.migration import (
     ACTION_INSERT,
-    ACTION_SKIP,
     ACTION_UPDATE,
     MigrationResult,
 )
 
 
-def write_actions_parquet(tagged: DataFrame, path: str,
-                          action_col: str = "action") -> None:
+def write_actions_parquet(tagged: DataFrame, path: str) -> None:
     """O13/O14 harness sink: persist insert/update rows partitioned by
     action (skips carry no work). Partitioning by the 2-value action
     column keeps each action's files contiguous for audit reads."""
-    (tagged.filter(F.col(action_col).isin(ACTION_INSERT, ACTION_UPDATE))
-     .write.partitionBy(action_col).mode("overwrite").parquet(path))
+    (tagged.filter(F.col("action").isin(ACTION_INSERT, ACTION_UPDATE))
+     .write.partitionBy("action").mode("overwrite").parquet(path))
 
 
-def merge_to_parquet(tagged: DataFrame, target_path: str,
-                     action_col: str = "action") -> None:
-    """Apply the classified migration to a parquet target: every tagged
-    source row (insert/update/skip) is a surviving row of the new target
-    state, so writing the tagged frame minus the action column IS the
-    merge. Written to a temp dir then atomically renamed, because the
-    tagged plan may still be reading the old target files."""
-    import shutil
+def recover_swap(path: str) -> None:
+    """Repair what an interrupted :func:`merge_to_parquet` of ``path``
+    left.
 
-    tmp = target_path + ".__new__"
-    old = target_path + ".__old__"
-    # recover from a run that died between the renames below — a
-    # leftover __old__ would wedge this run's rename
-    for leftover in (tmp, old):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
-    tagged.drop(action_col).write.mode("overwrite").parquet(tmp)
+    A run that died between the two renames left only
+    ``<path>.__old__``: it is the last complete version, so it is
+    renamed back. A ``__old__`` beside an existing ``path`` is the
+    already-replaced version and is deleted. A ``__new__`` is always
+    partial or unswapped output and is deleted. Call this before
+    reading ``path``."""
+    old, tmp = path + ".__old__", path + ".__new__"
+    if os.path.exists(old):
+        if os.path.exists(path):
+            shutil.rmtree(old)
+        else:
+            os.rename(old, path)
+    if os.path.exists(tmp):
+        shutil.rmtree(tmp)
+
+
+def merge_to_parquet(new_state: DataFrame, target_path: str) -> None:
+    """Replace the parquet directory ``target_path`` with ``new_state``
+    (for a migration, ``migration.merge_target_state``'s output).
+    ``new_state`` is written beside the target first and swapped in
+    with two renames, because its plan may still be reading the files
+    it replaces."""
+    old, tmp = target_path + ".__old__", target_path + ".__new__"
+    recover_swap(target_path)
+    new_state.write.mode("overwrite").parquet(tmp)
     if os.path.exists(target_path):
         os.rename(target_path, old)
     os.rename(tmp, target_path)
@@ -81,25 +92,16 @@ def compact_parquet(spark, path: str, target_file_mb: int = 256) -> int:
     file count written. Small-file proliferation (per-action appends,
     streaming micro-batches) degrades scan planning at scale — periodic
     compaction is standard lake hygiene. Uses bytes-on-disk to pick the
-    output file count, then one coalesce write (no shuffle)."""
+    output file count, then one coalesce write (no shuffle), swapped in
+    like a migration merge."""
     import glob
 
+    recover_swap(path)
     n_bytes = sum(os.path.getsize(f)
                   for f in glob.glob(os.path.join(path, "**", "*.parquet"),
                                      recursive=True))
     n_files = max(1, round(n_bytes / (target_file_mb * 1024 * 1024)))
-    import shutil
-
-    df = spark.read.parquet(path)
-    tmp = path + ".__compact__"
-    old = path + ".__old__"
-    for leftover in (tmp, old):
-        if os.path.exists(leftover):
-            shutil.rmtree(leftover)
-    df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
-    os.rename(path, old)
-    os.rename(tmp, path)
-    shutil.rmtree(old)
+    merge_to_parquet(spark.read.parquet(path).coalesce(n_files), path)
     return n_files
 
 

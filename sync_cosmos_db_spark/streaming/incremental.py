@@ -8,8 +8,9 @@ source files (or, with the Cosmos connector, which change-feed
 continuations) each committed micro-batch consumed, so a restarted job
 continues exactly where it stopped, with exactly-once batch semantics.
 
-Each micro-batch runs the SAME set-at-a-time classify kernel as the
-batch path (``migration.classify_actions``) inside ``foreachBatch``.
+Each micro-batch runs the SAME set-at-a-time classify kernel and merge
+rule as the batch path (``migration.classify_actions`` and
+``migration.merge_target_state``) inside ``foreachBatch``.
 
 Merge without a full-target rewrite: the target is hive-partitioned by
 a stable key bucket ``__kb = pmod(xxhash64(keys), n_buckets)``. A
@@ -33,7 +34,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sync_cosmos_db_spark.migration import classify_actions
+from sync_cosmos_db_spark.migration import (
+    classify_actions,
+    merge_target_state,
+)
 
 BUCKET_COL = "__kb"
 
@@ -41,7 +45,7 @@ BUCKET_COL = "__kb"
 def _path_exists(spark: SparkSession, path: str) -> bool:
     """Existence check through the Hadoop FileSystem API, not
     ``os.path`` — the target may live on HDFS/S3/ABFS where driver-local
-    filesystem probes are meaningless (round-2 advice)."""
+    filesystem probes are meaningless."""
     jvm = spark._jvm
     p = jvm.org.apache.hadoop.fs.Path(path)
     fs = p.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -61,13 +65,12 @@ def apply_batch_merge(spark: SparkSession, batch_df: DataFrame,
     """Classify one micro-batch against the touched target partitions
     and overwrite ONLY those partitions (dynamic partition overwrite).
 
-    ``reliable_checkpoint_dir`` (round-3 verdict item 9): when set, the
-    pre-overwrite state is materialized with a RELIABLE checkpoint to
-    that directory (HDFS/S3/ABFS path on a cluster) instead of
-    executor-local blocks, so an executor loss mid-overwrite cannot
-    lose the materialized state.  Default stays ``localCheckpoint`` —
-    right for the single-JVM harness, where the blocks' executor IS the
-    driver."""
+    ``reliable_checkpoint_dir``: when set, the pre-overwrite state is
+    materialized with a RELIABLE checkpoint to that directory
+    (HDFS/S3/ABFS path on a cluster) instead of executor-local blocks,
+    so an executor loss mid-overwrite cannot lose the materialized
+    state.  Default stays ``localCheckpoint`` — right for the single-JVM
+    harness, where the blocks' executor IS the driver."""
     bucketed = batch_df.withColumn(BUCKET_COL, key_bucket(keys, n_buckets))
 
     if not _path_exists(spark, target_path):
@@ -75,15 +78,13 @@ def apply_batch_merge(spark: SparkSession, batch_df: DataFrame,
         bucketed.write.partitionBy(BUCKET_COL).parquet(target_path)
         return
 
-    # ONE pass over the micro-batch source (round 16, the graph/CC
-    # recompute class): the touched-bucket collect, the classify join
-    # and the untouched anti-join each consumed the batch plan afresh —
-    # 3 passes per batch, and a change-feed batch source is a fresh
-    # file scan every time.  The batch is micro-batch-sized by
-    # construction, so caching it for the merge window is cheap at any
-    # target scale.  The TARGET side is deliberately NOT cached: its
-    # two consumers read disjoint column sets (keys+compare_cols for
-    # the hash, keys only for the anti-join), so two column-pruned
+    # ONE pass over the micro-batch source: the touched-bucket collect,
+    # the classify join and the merge's anti-join each consume the
+    # batch plan, and a change-feed batch source is a fresh file scan
+    # every time.  The batch is micro-batch-sized by construction, so
+    # caching it for the merge window is cheap at any target scale.
+    # The TARGET side is deliberately NOT cached: the classify join
+    # reduces it to (key, content hash) rows, so two partition-pruned
     # parquet scans of the touched buckets beat materializing
     # bucket-sized rows.
     bucketed = bucketed.persist()
@@ -96,10 +97,8 @@ def apply_batch_merge(spark: SparkSession, batch_df: DataFrame,
                .drop(BUCKET_COL))
 
         batch = bucketed.drop(BUCKET_COL)
-        tagged = classify_actions(batch, tgt, keys)
-        untouched_keys = tgt.join(batch.select(*keys).distinct(), keys,
-                                  "left_anti")
-        new_state = tagged.drop("action").unionByName(untouched_keys)
+        new_state = merge_target_state(classify_actions(batch, tgt, keys),
+                                       batch, tgt, keys)
         _write_new_state(spark, new_state, keys, n_buckets, target_path,
                          reliable_checkpoint_dir)
     finally:
@@ -131,7 +130,7 @@ def _write_new_state(spark: SparkSession, new_state: DataFrame,
     else:
         # the checkpoint blocks are dead once the overwrite lands —
         # free them here instead of pinning executor storage for the
-        # rest of the stream (round-8 cache-census fix)
+        # rest of the stream
         from sync_cosmos_db_spark.cache_scope import (
             local_checkpoint_released,
         )

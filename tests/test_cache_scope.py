@@ -6,7 +6,6 @@ manager."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark import cache_scope as CS
@@ -49,11 +48,6 @@ def test_scoped_local_checkpoint_blocks_freed(spark):
     assert out.count() == 100
     CS.release_persisted()
     assert _census(spark) == before
-
-
-def test_scoped_local_checkpoint_rejects_lazy(spark):
-    with pytest.raises(ValueError, match="eager"):
-        CS.scoped_local_checkpoint(spark.range(10), eager=False)
 
 
 def test_local_checkpoint_released_context(spark):

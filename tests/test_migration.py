@@ -3,15 +3,22 @@ SURVEY.md §5.2 — known insert/update/skip/error composition."""
 
 from __future__ import annotations
 
+import ast
+from pathlib import Path
+
 import pytest
 from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.migration import (
     check_pk_alignment,
     classify_actions,
+    merge_target_state,
     migrate_container,
     verify_migration,
 )
+from sync_cosmos_db_spark.sources import catalog
+
+PKG = Path(__file__).resolve().parent.parent / "sync_cosmos_db_spark"
 
 SRC = [
     ("s1", "t1", "same content", "E-src", 1),
@@ -23,7 +30,7 @@ SRC = [
 TGT = [
     ("s1", "t1", "same content", "E-tgt-different", 99),   # → skip (strip is load-bearing)
     ("s2", "t1", "original content", "E-tgt", 98),         # → update
-    ("t9", "t3", "target-only", "E-tgt", 97),              # untouched
+    ("t9", "t3", "target-only", "E-tgt", 97),              # → kept as is
 ]
 SCHEMA = "id string, tenantId string, body string, _etag string, _ts long"
 
@@ -63,3 +70,89 @@ def test_verify_migration_strong(spark):
     c = spark.createDataFrame(TGT[:2], SCHEMA)
     ok2, *_ = verify_migration(a, c)
     assert not ok2
+
+
+def test_merge_keeps_target_only_document(spark):
+    """The new target state is the tagged source rows plus the target
+    rows whose key the source lacks; a kept row is not stripped of its
+    system fields."""
+    keys = ["id", "tenantId"]
+    src = spark.createDataFrame([r for r in SRC if r[0] and r[1]], SCHEMA)
+    tgt = spark.createDataFrame(TGT, SCHEMA)
+    clean = src.drop("_etag", "_ts")
+    state = merge_target_state(classify_actions(clean, tgt, keys),
+                               clean, tgt, keys)
+    assert "action" not in state.columns
+    got = {r.id: (r.body, r._etag, r._ts) for r in state.collect()}
+    assert got == {
+        "s1": ("same content", None, None),
+        "s2": ("changed in source", None, None),
+        "s3": ("new in source", None, None),
+        "t9": ("target-only", "E-tgt", 97),
+    }
+
+
+def _write(spark, rows, path):
+    spark.createDataFrame(rows, "id string, val long").coalesce(1).write \
+        .mode("overwrite").parquet(path)
+
+
+def _batch_path(spark, tmp_path, seeded, source):
+    from sync_cosmos_db_spark.orchestrator import migrate_account_path
+
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    for root, rows in ((tgt, seeded), (src, source)):
+        catalog.create_container_if_not_exists(root, "db", "c")
+        _write(spark, rows, catalog.container_data_path(root, "db", "c"))
+    migrate_account_path(spark, src, tgt, database="db")
+    return catalog.container_data_path(tgt, "db", "c")
+
+
+def _catchup_path(spark, tmp_path, seeded, source):
+    from sync_cosmos_db_spark.streaming.incremental import (
+        incremental_migrate,
+    )
+
+    src, tgt = str(tmp_path / "feed"), str(tmp_path / "tgt.parquet")
+    ckpt = str(tmp_path / "ckpt")
+    # one bucket, so the batch's merge reads the target-only document
+    for rows in (seeded, source):
+        spark.createDataFrame(rows, "id string, val long").coalesce(1) \
+            .write.mode("append").parquet(src)
+        incremental_migrate(spark, src, tgt, ["id"], "id string, val long",
+                            ckpt, n_buckets=1)
+    return tgt
+
+
+@pytest.mark.parametrize("path", [_batch_path, _catchup_path],
+                         ids=["migrate_account_path", "incremental_migrate"])
+def test_target_only_document_survives(spark, tmp_path, path):
+    """Both write paths apply the same merge rule: a target document
+    whose key the source lacks is kept, never deleted."""
+    out = path(spark, tmp_path, seeded=[("b", 20), ("z", 26)],
+               source=[("a", 1), ("b", 2)])
+    got = {r.id: r.val for r in spark.read.parquet(out).collect()}
+    assert got == {"a": 1, "b": 2, "z": 26}
+
+
+MIGRATE_LAYER = ("migration.py", "orchestrator.py", "sinks.py",
+                 "sanitizer.py", "document_model.py", "cache_scope.py",
+                 "streaming/incremental.py")
+
+
+def test_left_anti_target_join_only_in_migration():
+    """One merge rule: within the migrate layer and every module that
+    imports it, the ``left_anti`` join is spelled once, in
+    ``migration.merge_target_state``."""
+    hits = []
+    for path in sorted(PKG.rglob("*.py")):
+        name = str(path.relative_to(PKG))
+        tree = ast.parse(path.read_text())
+        uses_layer = name in MIGRATE_LAYER or any(
+            isinstance(n, ast.ImportFrom)
+            and n.module == "sync_cosmos_db_spark.migration"
+            for n in ast.walk(tree))
+        if uses_layer:
+            hits += [name for n in ast.walk(tree)
+                     if isinstance(n, ast.Constant) and n.value == "left_anti"]
+    assert hits == ["migration.py"]

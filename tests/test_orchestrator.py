@@ -226,8 +226,6 @@ def test_cosmos_facade_gates_without_connector(spark):
 def test_parallel_database_migration(spark, tmp_path):
     """max_parallel>1 submits concurrent container jobs; results must be
     identical to the sequential path."""
-    from sync_cosmos_db_spark.orchestrator import migrate_database_path
-
     src = str(tmp_path / "psrc")
     schema = "id string, v long"
     for c in ["c1", "c2", "c3"]:
@@ -235,13 +233,64 @@ def test_parallel_database_migration(spark, tmp_path):
         _write(spark, [(f"{c}-{i}", i) for i in range(10)],
                schema, catalog.container_data_path(src, "db", c))
 
-    seq = migrate_database_path(spark, src, str(tmp_path / "t1"), "db")
-    par = migrate_database_path(spark, src, str(tmp_path / "t2"), "db",
-                                max_parallel=3)
+    seq = migrate_account_path(spark, src, str(tmp_path / "t1"),
+                               database="db")["results"]["db"]
+    par = migrate_account_path(spark, src, str(tmp_path / "t2"),
+                               database="db", max_parallel=3)["results"]["db"]
     assert set(seq) == set(par) == {"c1", "c2", "c3"}
     for c in seq:
         assert (seq[c].inserted, seq[c].errors) == (10, 0)
         assert (par[c].inserted, par[c].verified) == (10, True)
+
+
+def test_parallel_jobs_inherit_caller_job_group(spark, tmp_path):
+    """Container jobs submitted from pool threads run in the caller's
+    job group (and so in its scheduler pool)."""
+    src = str(tmp_path / "gsrc")
+    for c in ["c1", "c2"]:
+        catalog.create_container_if_not_exists(src, "db", c)
+        _write(spark, [(f"{c}-{i}", i) for i in range(5)],
+               "id string, v long", catalog.container_data_path(src, "db", c))
+    sc = spark.sparkContext
+    group = "parallel-migrate-job-group"
+    sc.setJobGroup(group, "parallel migrate")
+    try:
+        before = set(sc.statusTracker().getJobIdsForGroup(group))
+        out = migrate_account_path(spark, src, str(tmp_path / "gtgt"),
+                                   database="db", max_parallel=2)
+        after = set(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert {c: r.inserted for c, r in out["results"]["db"].items()} \
+        == {"c1": 5, "c2": 5}
+    assert after - before
+
+
+def test_interrupted_swap_restores_old_target(spark, account):
+    """A run that died between the two renames of the target swap left
+    only ``<target>.__old__`` and a partial ``__new__``: the next run
+    restores the old target, so it classifies against it (skips and
+    updates, not all inserts) and keeps its target-only document."""
+    src, tgt = account
+    data = catalog.container_data_path(tgt, "hr", "emp")
+    _write(spark, [("1", "eng", 100), ("2", "eng", 200), ("3", "ops", 300),
+                   ("9", "ops", 900)],
+           "id string, dept string, salary long", data)
+    os.rename(data, data + ".__old__")
+    os.makedirs(data + ".__new__")
+    with open(os.path.join(data + ".__new__", "part-00000.parquet"),
+              "wb") as f:
+        f.write(b"partial")
+
+    res = migrate_container_path(spark, src, tgt, "hr", "emp")
+    assert (res.inserted, res.updated, res.skipped, res.errors) == (2, 1, 2, 1)
+    got = {r.id: r.salary for r in spark.read.parquet(data).collect()}
+    assert got == {"1": 100, "2": 220, "3": 300, "4": 400, "5": 500,
+                   "9": 900}
+    assert not os.path.exists(data + ".__old__")
+    assert not os.path.exists(data + ".__new__")
 
 
 def test_nested_pk_strong_verify_and_crash_recovery(spark, tmp_path):
