@@ -20,9 +20,10 @@ Scale design (100 TB):
   fuzzy-match pipelines.
 
 Everything below is built-in-function Column algebra (split/transform/
-aggregate/xxhash64) or Arrow-batched ``mapInPandas`` (the gram builder
-since r8, the unblocked n² embedding baseline since r12) — zero
-row-at-a-time Python UDFs.
+aggregate/xxhash64) or an Arrow-batched pass: ``mapInArrow`` for the
+MinHash signatures and LSH band slices, ``mapInPandas`` for the span
+gram builder and the embedding cosine scorers — zero row-at-a-time
+Python UDFs.
 """
 
 from __future__ import annotations
@@ -30,6 +31,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType, IntegerType, LongType, StructField, StructType,
+)
 
 from sync_cosmos_db_spark.cache_scope import (
     scoped_local_checkpoint, scoped_persist,
@@ -112,8 +116,9 @@ def hashed_shingles(col: Column | str, n: int = 3,
     """Word n-gram shingles as xxhash64 LONGS instead of strings: same
     set semantics up to hash collisions (~0 at 64 bits), but the
     downstream pipeline gets 8-byte elements — smaller to persist,
-    cheaper to intersect in the verify Jaccard, and the MinHash base
-    hash is just a pmod away (no second string-hash pass)."""
+    cheaper to intersect in the verify Jaccard, and the MinHash kernel
+    reads the array's flat int64 buffer straight from Arrow (no second
+    string-hash pass, no string transfer to Python)."""
     return F.transform(word_shingles(col, n),
                        lambda s: F.xxhash64(s, F.lit(seed)))
 
@@ -191,52 +196,109 @@ def _affine_coeffs(num_hashes: int, seed: int) -> list[tuple[int, int]]:
             for _ in range(num_hashes)]
 
 
+def _band_width(num_hashes: int, bands: int) -> int:
+    """Hashes per LSH band, r = num_hashes / bands; raises unless the
+    bands tile the signature exactly (a remainder would silently leave
+    hashes unbanded, an empty band would hash nothing)."""
+    if num_hashes < 1 or bands < 1 or num_hashes % bands:
+        raise ValueError(
+            "num_hashes and bands must be >= 1 and bands must divide "
+            f"num_hashes; got num_hashes={num_hashes}, bands={bands}")
+    return num_hashes // bands
+
+
+def _minhash_bands(shingled: DataFrame, id_col: str, shingle_col: str,
+                   num_hashes: int, bands: int, seed: int) -> DataFrame:
+    """MinHash signatures cut into LSH bands in one Arrow pass:
+    (id, band int, __sig array<bigint>), one row per band of
+    r = num_hashes / bands consecutive signature hashes.
+
+    The kernel reads each batch's shingle-list offsets and flat int64
+    values without copying, reduces them mod 2³¹−1 once, and for each
+    affine pair takes ``np.minimum.reduceat((a·x + b) mod (2³¹−1),
+    starts)`` — one vectorized min per document per hash. a < 2³¹ and
+    x < 2³¹ keep a·x + b < 2⁶³, so the int64 arithmetic is exact and
+    numpy's ``%`` (sign of the divisor) equals Spark's ``pmod``. Null
+    and empty shingle arrays are filtered in the JVM first, so every
+    list the kernel sees is non-empty and the lists tile the values
+    buffer. Array elements must be non-null integers (shingle hashes
+    never are). Each input row gets its own signature: ids are expected
+    to be unique."""
+    r = _band_width(num_hashes, bands)
+    coeffs = _affine_coeffs(num_hashes, seed)
+    out_schema = StructType([
+        StructField(id_col, shingled.schema[id_col].dataType),
+        StructField("band", IntegerType()),
+        StructField("__sig", ArrayType(LongType())),
+    ])
+
+    def kernel(batches):
+        import numpy as np
+        import pyarrow as pa
+
+        band_ids = np.arange(bands, dtype=np.int32)
+        for batch in batches:
+            n = batch.num_rows
+            sh = batch.column(1)
+            offsets = sh.offsets.to_numpy()
+            x = (sh.values.to_numpy()[offsets[0]:offsets[-1]]
+                 .astype(np.int64, copy=False) % _MERSENNE31)
+            starts = offsets[:-1] - offsets[0]
+            sig = np.empty((n, num_hashes), dtype=np.int64)
+            for j, (a, b) in enumerate(coeffs):
+                h = x * a
+                h += b
+                h %= _MERSENNE31
+                sig[:, j] = np.minimum.reduceat(h, starts)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(np.repeat(np.arange(n), bands)),
+                 pa.array(np.tile(band_ids, n)),
+                 pa.ListArray.from_arrays(
+                     pa.array(np.arange(0, n * num_hashes + 1, r,
+                                        dtype=np.int32)),
+                     pa.array(sig.ravel()))],
+                names=[id_col, "band", "__sig"])
+
+    return (shingled.select(id_col, shingle_col)
+            .where(F.size(shingle_col) > 0)
+            .mapInArrow(kernel, out_schema))
+
+
 def minhash_signatures(shingled: DataFrame, id_col: str,
                        shingle_col: str = "__sh", num_hashes: int = 64,
                        seed: int = 42) -> DataFrame:
-    """MinHash signatures, relational form: (id, __sig array<bigint>).
+    """MinHash signatures: (id, __sig array<bigint>).
 
     ``shingle_col`` holds 64-bit shingle HASHES (see
     :func:`hashed_shingles`) — each shingle was string-hashed exactly
     once upstream; the ``num_hashes`` hash functions are affine rehashes
     of that base value modulo the Mersenne prime 2³¹−1, the same
-    construction as Spark ML's MinHashLSH. Deliberately expressed as
-    ``explode`` → ``groupBy(id)`` with 64 ``min`` aggregates instead of
-    array higher-order functions: the whole plan stays in whole-stage
-    codegen with map-side partial aggregation, which measures ~8× faster
-    than the HOF fold (HOF lambdas are interpreted per element and
-    allocate per-shingle arrays). The shuffle carries only
-    (id, 64×bigint) partial rows. a_i < 2³¹ and base < 2³¹ keep
-    a_i·base < 2⁶² — no bigint overflow under ANSI mode. Deterministic
-    via the seeded coefficients. Docs with zero shingles (shorter than
-    the shingle width) drop out — they cannot near-dup by shingles and
-    belong to exact dedup anyway."""
-    coeffs = _affine_coeffs(num_hashes, seed)
-    ex = (shingled
-          .select(F.col(id_col), F.explode(shingle_col).alias("__s"))
-          .withColumn("__h", F.pmod(F.col("__s"), F.lit(_MERSENNE31))))
-    aggs = [
-        F.min(F.pmod(F.col("__h") * F.lit(a) + F.lit(b),
-                     F.lit(_MERSENNE31))).alias(f"__m{i}")
-        for i, (a, b) in enumerate(coeffs)
-    ]
-    return (ex.groupBy(id_col).agg(*aggs)
-            .select(F.col(id_col),
-                    F.array(*[F.col(f"__m{i}")
-                              for i in range(num_hashes)]).alias("__sig")))
+    construction as Spark ML's MinHashLSH. Computed by the Arrow kernel
+    of :func:`_minhash_bands` with a single band: a narrow
+    ``mapInArrow`` over the shingle arrays, no shuffle and no
+    per-hash aggregate expressions for Catalyst to analyse.
+    Deterministic via the seeded coefficients. Docs with zero shingles
+    (null text, or shorter than the shingle width) drop out — they
+    cannot near-dup by shingles and belong to exact dedup anyway."""
+    return (_minhash_bands(shingled, id_col, shingle_col, num_hashes, 1,
+                           seed)
+            .select(id_col, "__sig"))
 
 
 def _shingled_and_banded(df: DataFrame, id_col: str, text_col: str,
                          shingle_n: int, num_hashes: int, bands: int,
                          seed: int, persist_shingles: bool):
     """Shared front of the LSH pipeline: (id, shingle-hash array) and
-    the exploded (id, band, bucket) banding of its MinHash signature.
+    the (id, band, bucket) banding of its MinHash signature.
 
+    The bucket is ``xxhash64`` of the band's hash slice, computed in
+    the JVM over the array the kernel emits (the array hash equals the
+    hash of the same longs passed as separate arguments).
     ``persist_shingles=True`` for consumers that read the shingle
     projection more than once (the pair pipeline's verify join);
     single-pass consumers (the oversized-bucket audit) skip the cache.
     """
-    r = num_hashes // bands
+    _band_width(num_hashes, bands)  # raise before anything is persisted
     shingled = spread(df.select(id_col, text_col), [id_col]).select(
         F.col(id_col),
         F.array_distinct(
@@ -252,16 +314,9 @@ def _shingled_and_banded(df: DataFrame, id_col: str, text_col: str,
         from pyspark import StorageLevel
 
         shingled = scoped_persist(shingled, StorageLevel.MEMORY_AND_DISK)
-    sig = minhash_signatures(shingled, id_col, "__sh", num_hashes, seed)
-    banded = sig.select(
-        id_col,
-        F.explode(F.array(*[
-            F.struct(F.lit(b).alias("band"),
-                     F.xxhash64(*[F.col("__sig")[b * r + j]
-                                  for j in range(r)]).alias("bucket"))
-            for b in range(bands)
-        ])).alias("__bb"),
-    ).select(id_col, "__bb.band", "__bb.bucket")
+    banded = (_minhash_bands(shingled, id_col, "__sh", num_hashes, bands,
+                             seed)
+              .select(id_col, "band", F.xxhash64("__sig").alias("bucket")))
     return shingled, banded
 
 

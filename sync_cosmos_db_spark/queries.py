@@ -580,6 +580,11 @@ EDITED_ROUND.update(dict.fromkeys(
 # merge_writeback_roundtrip now builds its new target state with
 # migration.merge_target_state before the merge_to_parquet swap.
 EDITED_ROUND["merge_writeback_roundtrip"] = 19
+# MinHash signatures and LSH band keys now come from one mapInArrow
+# kernel (operators/dedup.py); signatures and buckets are bit-identical,
+# so the LSH consumers carry no entry.  minhash_estimate_calibration's
+# docstring changed with it.
+EDITED_ROUND["minhash_estimate_calibration"] = 19
 
 # Round-17 no-entry decisions: graph.py's caller-cache detection fix
 # (storageLevel instead of is_cached) changes NOTHING for the

@@ -213,7 +213,7 @@ def minhash_estimate_calibration(spark: SparkSession,
     for fixed data, so the bound is repeatable, not flaky).  Spark
     emits the exact Jaccard and the violation count (must be 0); the
     oracle recomputes the exact side independently with DuckDB list
-    algebra.  One signature aggregate over the corpus + two id-keyed
+    algebra.  One narrow signature pass over the corpus + two id-keyed
     joins — never an all-pairs scan."""
     from sync_cosmos_db_spark.operators.dedup import (
         hashed_shingles,

@@ -3,6 +3,7 @@ operators measured against the exact baseline."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.operators import dedup as D
@@ -119,8 +120,6 @@ def test_winnowing_shared_run_guarantee(spark):
 
 
 def test_connected_components_raises_on_nonconvergence(spark):
-    import pytest
-
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(1, 10)], "id_a long, id_b long")
     with pytest.raises(RuntimeError, match="did not converge"):
@@ -290,3 +289,113 @@ def test_let_helper_general_expression(spark):
                                 lambda acc, v: acc + v) * 2)
     rows = {r.x: r.y for r in df.select("x", doubled_sum.alias("y")).collect()}
     assert rows[4] == 20 and rows[9] == 90 and rows[None] is None
+
+
+# ---------------------------------------------------------------------------
+# MinHash Arrow kernel
+# ---------------------------------------------------------------------------
+
+_M31 = (1 << 31) - 1
+
+
+def _reference_signature(shingles, coeffs):
+    """Pure-Python MinHash: min over shingles of (a·(s mod M) + b) mod M."""
+    return [min((a * (s % _M31) + b) % _M31 for s in shingles)
+            for a, b in coeffs]
+
+
+def test_minhash_signatures_match_python_reference(spark):
+    """The Arrow kernel against an independent per-document reference:
+    string ids, a corpus spread over many small Arrow batches and
+    several partitions, negative hashes, Long.MIN/MAX_VALUE and
+    single-shingle docs; null and empty arrays drop out."""
+    import random
+
+    rng = random.Random(7)
+    lo, hi = -(1 << 63), (1 << 63) - 1
+    rows = [(f"d{i}", [rng.randint(lo, hi)
+                       for _ in range(rng.randint(1, 40))])
+            for i in range(300)]
+    rows += [("empty", []), ("null", None), ("single", [5]),
+             ("single_neg", [-5]), ("extremes", [lo, hi, -1, 0]),
+             ("min_only", [lo]), ("max_only", [hi])]
+    df = spark.createDataFrame(rows, "doc_id string, sh array<bigint>") \
+        .repartition(3)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(conf)
+    spark.conf.set(conf, "16")
+    try:
+        got = {r.doc_id: r["__sig"] for r in
+               D.minhash_signatures(df, "doc_id", "sh").collect()}
+    finally:
+        spark.conf.set(conf, old)
+    coeffs = D._affine_coeffs(64, 42)
+    want = {i: _reference_signature(sh, coeffs)
+            for i, sh in rows if sh}
+    assert set(got) == set(want)          # "empty" and "null" dropped
+    bad = [i for i in want if got[i] != want[i]]
+    assert not bad, f"signatures differ from the reference for {bad[:5]}"
+
+
+def test_lsh_buckets_equal_xxhash_of_signature_slices(spark, sf_dir):
+    """Every (band, bucket) the pipeline shuffles on equals
+    xxhash64(sig[b·r], …, sig[b·r+r−1]) computed in Spark from the
+    signature, with the same member counts."""
+    num_hashes, bands = 64, 16
+    r = num_hashes // bands
+    corpus = _corpus_with_near_dups(spark, sf_dir).select("doc_id", "text")
+    shingled = corpus.select(
+        "doc_id",
+        F.array_distinct(D.hashed_shingles("text", 3)).alias("__sh"))
+    sigs = D.minhash_signatures(shingled, "doc_id", num_hashes=num_hashes)
+    expected = (
+        sigs.select(F.explode(F.array(*[
+            F.struct(F.lit(b).alias("band"),
+                     F.xxhash64(*[F.col("__sig")[b * r + j]
+                                  for j in range(r)]).alias("bucket"))
+            for b in range(bands)])).alias("bb"))
+        .groupBy("bb.band", "bb.bucket").count())
+    got = D.minhash_lsh_oversized_buckets(
+        corpus, "doc_id", "text", num_hashes=num_hashes, bands=bands,
+        max_bucket=0)
+    want = {(r_.band, r_.bucket): r_["count"] for r_ in expected.collect()}
+    have = {(r_.band, r_.bucket): r_.n_members for r_ in got.collect()}
+    assert want and have == want
+
+
+@pytest.mark.parametrize("num_hashes,bands", [(64, 15), (64, 128), (64, 0)])
+def test_minhash_band_count_guard(spark, num_hashes, bands):
+    """Bands must tile the signature: 15 bands of 64 hashes used to band
+    only 60 of them, 128 bands failed inside Spark with an empty
+    xxhash64, and 0 bands divided by zero."""
+    df = spark.createDataFrame([(1, "a b c d e")], "doc_id long, text string")
+    for op in (D.minhash_lsh_pairs, D.minhash_lsh_oversized_buckets):
+        with pytest.raises(ValueError, match="bands must divide"):
+            op(df, "doc_id", "text", num_hashes=num_hashes, bands=bands)
+
+
+def _plan_nodes(node):
+    yield node
+    children = node.children()
+    for i in range(children.size()):
+        yield from _plan_nodes(children.apply(i))
+
+
+def test_minhash_lsh_plan_has_no_id_aggregate(spark):
+    """Plan-shape guard: nothing below the (band, bucket) window — whose
+    exchange is the pipeline's first shuffle — aggregates (the
+    per-document 64-``min`` signature groupBy is gone), and the
+    signatures come from exactly one MapInArrow."""
+    df = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "a b c d f")], "doc_id long, text string")
+    pairs = D.minhash_lsh_pairs(df, "doc_id", "text")
+    plan = pairs._jdf.queryExecution().executedPlan().inputPlan()
+    nodes = list(_plan_nodes(plan))
+    assert [n.nodeName() for n in nodes].count("MapInArrow") == 1
+    band_windows = [
+        n for n in nodes if n.nodeName() == "Window"
+        and "windowspecdefinition(band#" in n.simpleString(100)]
+    assert len(band_windows) == 1
+    below = [n.nodeName() for n in _plan_nodes(band_windows[0])]
+    assert "MapInArrow" in below
+    assert not [n for n in below if "Aggregate" in n], below
