@@ -43,6 +43,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
+from sync_cosmos_db_spark.session import register_pickle_by_value
+
 # ---------------------------------------------------------------------------
 # Public constants from ITU T.81 Annex K (example tables; every real
 # JPEG toolchain ships these same numbers)
@@ -840,17 +842,4 @@ def decode_jpeg_assets(assets: DataFrame) -> DataFrame:
     return assets.mapInPandas(run, schema=JPEG_DECODED_SCHEMA)
 
 
-def _register_self_for_pickle_by_value() -> None:
-    """Ship this module's code inside task closures (executors never
-    import the package) — same mechanism as operators/multimodal.py."""
-    import sys
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass  # older cloudpickle: fall back to normal --py-files deployment
-
-
-_register_self_for_pickle_by_value()
+register_pickle_by_value(__name__)

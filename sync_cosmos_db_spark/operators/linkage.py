@@ -39,6 +39,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.operators.partitioning import floor_width
+from sync_cosmos_db_spark.session import register_pickle_by_value
 
 
 def blocking_keys(name: Column | str, key_len: int = 5) -> Column:
@@ -446,19 +447,4 @@ def jaro_winkler_join(df: DataFrame, id_col: str, name_col: str,
         run, f"id_a {id_type}, id_b {id_type}, sim double")
 
 
-def _register_self_for_pickle_by_value() -> None:
-    """Task closures reference module-level scorers (``_jw_vector``);
-    registering the module for pickle-BY-VALUE ships that code inside
-    the closure, so executors never need this package importable on
-    their Python path (same pattern and rationale as multimodal.py)."""
-    import sys
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except Exception:
-        pass  # older cloudpickle: fall back to normal --py-files deployment
-
-
-_register_self_for_pickle_by_value()
+register_pickle_by_value(__name__)

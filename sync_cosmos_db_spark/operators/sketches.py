@@ -35,6 +35,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from sync_cosmos_db_spark.session import register_pickle_by_value
+
 CANDIDATE_SCHEMA = "item string, est long, n_part long"
 
 
@@ -100,20 +102,7 @@ def heavy_hitters(items: DataFrame, item_col: str = "item",
     return exact.where(F.col("cnt") * (k + 1) > F.lit(total))
 
 
-def _register_self_for_pickle_by_value() -> None:
-    """Ship this module's code inside task closures so executors don't
-    need the package installed (mirrors operators/multimodal.py)."""
-    import sys
-
-    try:
-        from pyspark import cloudpickle
-
-        cloudpickle.register_pickle_by_value(sys.modules[__name__])
-    except (ImportError, AttributeError, KeyError):
-        pass  # older cloudpickle: fall back to normal --py-files deployment
-
-
-_register_self_for_pickle_by_value()
+register_pickle_by_value(__name__)
 
 
 GROUP_CANDIDATE_SCHEMA = "grp string, item string, est long, n_part long"

@@ -585,6 +585,14 @@ EDITED_ROUND["merge_writeback_roundtrip"] = 19
 # so the LSH consumers carry no entry.  minhash_estimate_calibration's
 # docstring changed with it.
 EDITED_ROUND["minhash_estimate_calibration"] = 19
+# Moved to queries_streaming onto one oracle, change-log builder and
+# result tail per state machine; results bit-identical.
+EDITED_ROUND.update(dict.fromkeys(
+    ["cdc_apply_orders", "state_asof_orders_seq2", "stream_cdc_apply_orders",
+     "stream_cdc_apply_orders_batchmerge", "stream_cdc_apply_orders_tws",
+     "rate_limit_hourly", "stream_rate_limit_hourly",
+     "stream_rate_limit_hourly_batchmerge", "stream_rate_limit_hourly_tws"],
+    19))
 
 # Round-17 no-entry decisions: graph.py's caller-cache detection fix
 # (storageLevel instead of is_cached) changes NOTHING for the
@@ -849,40 +857,23 @@ def _sweep_ordered(mapping: dict) -> dict:
     return out
 
 
+def _register_all() -> None:
+    # imported for their registration side effects, in registration order
+    from sync_cosmos_db_spark import (  # noqa: F401
+        queries_relational, queries_llm, queries_infra, queries_tpch2,
+        queries_pipeline, queries_analytics, queries_scale, queries_r4,
+        queries_r5, queries_r6, queries_r7, queries_r8, queries_r9,
+        queries_r11, queries_streaming,
+    )
+
+
 def get_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # import for registration side effects
-    from sync_cosmos_db_spark import queries_relational  # noqa: F401
-    from sync_cosmos_db_spark import queries_llm  # noqa: F401
-    from sync_cosmos_db_spark import queries_infra  # noqa: F401
-    from sync_cosmos_db_spark import queries_tpch2  # noqa: F401
-    from sync_cosmos_db_spark import queries_pipeline  # noqa: F401
-    from sync_cosmos_db_spark import queries_analytics  # noqa: F401
-    from sync_cosmos_db_spark import queries_scale  # noqa: F401
-    from sync_cosmos_db_spark import queries_r4  # noqa: F401
-    from sync_cosmos_db_spark import queries_r5  # noqa: F401
-    from sync_cosmos_db_spark import queries_r6  # noqa: F401
-    from sync_cosmos_db_spark import queries_r7  # noqa: F401
-    from sync_cosmos_db_spark import queries_r8  # noqa: F401
-    from sync_cosmos_db_spark import queries_r9  # noqa: F401
-    from sync_cosmos_db_spark import queries_r11  # noqa: F401
+    _register_all()
     return _sweep_ordered(QUERIES)
 
 
 def get_oracle_sql() -> dict[str, str]:
-    from sync_cosmos_db_spark import queries_relational  # noqa: F401
-    from sync_cosmos_db_spark import queries_llm  # noqa: F401
-    from sync_cosmos_db_spark import queries_infra  # noqa: F401
-    from sync_cosmos_db_spark import queries_tpch2  # noqa: F401
-    from sync_cosmos_db_spark import queries_pipeline  # noqa: F401
-    from sync_cosmos_db_spark import queries_analytics  # noqa: F401
-    from sync_cosmos_db_spark import queries_scale  # noqa: F401
-    from sync_cosmos_db_spark import queries_r4  # noqa: F401
-    from sync_cosmos_db_spark import queries_r5  # noqa: F401
-    from sync_cosmos_db_spark import queries_r6  # noqa: F401
-    from sync_cosmos_db_spark import queries_r7  # noqa: F401
-    from sync_cosmos_db_spark import queries_r8  # noqa: F401
-    from sync_cosmos_db_spark import queries_r9  # noqa: F401
-    from sync_cosmos_db_spark import queries_r11  # noqa: F401
+    _register_all()
     return _sweep_ordered(ORACLE_SQL)
 
 

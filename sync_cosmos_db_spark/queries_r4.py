@@ -1,4 +1,4 @@
-"""Round-4 extension queries (X53-X71): CDC changelog apply, link
+"""Round-4 extension queries (X54-X71): link
 extraction, HTML boilerplate strip, sentence-aware chunking,
 quality-ranked per-source caps, exact set-similarity join, reciprocal-
 rank fusion, stream-stream left-outer interval join, per-group heavy
@@ -22,74 +22,6 @@ from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.queries import fround, query
 from sync_cosmos_db_spark.session import load_table
-
-
-# ---------------------------------------------------------------------------
-# X53 — CDC changelog apply (operators/cdc.py)
-# ---------------------------------------------------------------------------
-
-@query(
-    "cdc_apply_orders",
-    """
-    WITH snap AS (SELECT o_orderkey AS k, o_totalprice AS p,
-                         o_orderstatus AS s FROM orders),
-    ch AS (
-      SELECT k, p * 1.1 AS p, s, 1 AS seq, 'U' AS op
-      FROM snap WHERE k % 7 = 0
-      UNION ALL
-      SELECT k, p + 55.5, s, 3, 'U' FROM snap WHERE k % 7 = 0
-      UNION ALL
-      SELECT k, p, s, 2, 'D' FROM snap WHERE k % 11 = 0
-      UNION ALL
-      SELECT -k, p / 2, 'N', 1, 'U' FROM snap WHERE k % 13 = 0),
-    latest AS (
-      SELECT *, row_number() OVER (PARTITION BY k
-                                   ORDER BY seq DESC, op ASC) AS rn
-      FROM ch),
-    l AS (SELECT * FROM latest WHERE rn = 1)
-    SELECT coalesce(l.k, snap.k) AS o_orderkey,
-           floor((CASE WHEN l.k IS NOT NULL THEN l.p ELSE snap.p END)
-                 * 100 + 0.5) / 100 AS o_totalprice,
-           CASE WHEN l.k IS NOT NULL THEN l.s ELSE snap.s END
-             AS o_orderstatus
-    FROM snap FULL JOIN l ON snap.k = l.k
-    WHERE l.op IS NULL OR l.op <> 'D'
-    """,
-)
-def cdc_apply_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X53 — change-feed replay (operators/cdc.py): a deterministic
-    I/U/D log derived from ``orders`` — two conflicting updates per
-    %7 key (seq 1 and 3: the later must win), a tombstone per %11 key
-    (keys in both classes get the seq-3 update, proving collapse order),
-    and inserts under fresh negative keys — applied with
-    last-writer-wins.  The oracle replays the identical log in SQL;
-    the hash check covers every surviving row.  The reference's whole
-    per-document sync loop (``src/migration.py:117-148``) is the
-    row-at-a-time form of this one join."""
-    from sync_cosmos_db_spark.operators.cdc import apply_changelog
-
-    snap = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderstatus")
-    k, p, s = (F.col("o_orderkey"), F.col("o_totalprice"),
-               F.col("o_orderstatus"))
-
-    def ev(df, key, price, status, seq, op):
-        return df.select(key.alias("o_orderkey"),
-                         price.alias("o_totalprice"),
-                         status.alias("o_orderstatus"),
-                         F.lit(seq).alias("seq"), F.lit(op).alias("op"))
-
-    base7 = snap.filter(k % 7 == 0)
-    changes = (
-        ev(base7, k, p * 1.1, s, 1, "U")
-        .unionAll(ev(base7, k, p + 55.5, s, 3, "U"))
-        .unionAll(ev(snap.filter(k % 11 == 0), k, p, s, 2, "D"))
-        .unionAll(ev(snap.filter(k % 13 == 0), -k, p / 2, F.lit("N"),
-                     1, "U")))
-    out = apply_changelog(snap, changes, ["o_orderkey"], "seq")
-    return out.select("o_orderkey",
-                      fround("o_totalprice", 2).alias("o_totalprice"),
-                      "o_orderstatus")
 
 
 # ---------------------------------------------------------------------------

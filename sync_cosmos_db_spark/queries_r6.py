@@ -1,8 +1,8 @@
 """Round-6 operator families X119-X132: edit-distance join, bigram LM
 scoring, vocabulary overlap, PII co-occurrence, robust scaling, local
 clustering coefficient, out-of-order audit, target encoding, split
-leakage audit, time-weighted average, centroid cosine matrix, rate
-limiting, referential-integrity audit, stride chunking.
+leakage audit, time-weighted average, centroid cosine matrix,
+referential-integrity audit, stride chunking.
 
 Each query drives the real operator end-to-end on the harness tables
 and carries a DuckDB oracle that recomputes the result independently
@@ -527,48 +527,6 @@ def centroid_cosine_labels(spark: SparkSession,
 
     emb = load_table(spark, sf_dir, "embeddings")
     return centroid_cosine_matrix(emb, "label", "embedding")
-
-
-# ---------------------------------------------------------------------------
-# X131 — deterministic per-key rate limiting
-# ---------------------------------------------------------------------------
-
-@query(
-    "rate_limit_hourly",
-    """
-    WITH rn AS (
-      SELECT epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT
-               AS window_start,
-             row_number() OVER (
-               PARTITION BY user_id, time_bucket(INTERVAL '1 hour', ts)
-               ORDER BY ts, event_id) AS rn
-      FROM events)
-    SELECT window_start, count(*)::BIGINT AS n_events,
-           sum(CASE WHEN rn <= 5 THEN 1 ELSE 0 END)::BIGINT
-             AS n_admitted,
-           sum(CASE WHEN rn > 5 THEN 1 ELSE 0 END)::BIGINT
-             AS n_dropped
-    FROM rn GROUP BY 1
-    """,
-)
-def rate_limit_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X131 — deterministic per-key rate limiting: admit the first 5
-    events per (user, hour) in (ts, event_id) order, drop the rest —
-    the batch replay of an API throttle / abuse damper, and the
-    at-scale shape of per-entity cap enforcement in ingest.  ONE
-    (user, window)-keyed row_number window (partitions are
-    user-hour-sized — tiny even when a user is globally hot), one
-    hour-keyed reduce."""
-    ev = load_table(spark, sf_dir, "events")
-    hour = F.date_trunc("hour", F.col("ts"))
-    w = Window.partitionBy("user_id", hour).orderBy("ts", "event_id")
-    admitted = (F.row_number().over(w) <= 5).cast("long")
-    return (ev.withColumn("adm", admitted)
-            .groupBy(F.unix_timestamp(hour).alias("window_start"))
-            .agg(F.count("*").cast("long").alias("n_events"),
-                 F.sum("adm").cast("long").alias("n_admitted"),
-                 (F.count("*") - F.sum("adm")).cast("long")
-                 .alias("n_dropped")))
 
 
 # ---------------------------------------------------------------------------
@@ -1993,127 +1951,6 @@ def funnel_within_1h_events(spark: SparkSession,
         .alias("n_step2_within"))
 
 
-# ---------------------------------------------------------------------------
-# X156 — streaming CDC compaction + snapshot merge
-# ---------------------------------------------------------------------------
-
-_CDC_ORACLE = """
-    WITH snap AS (SELECT o_orderkey AS k, o_totalprice AS p,
-                         o_orderstatus AS s FROM orders),
-    ch AS (
-      SELECT k, p * 1.1 AS p, s, 1 AS seq, 'U' AS op
-      FROM snap WHERE k % 7 = 0
-      UNION ALL
-      SELECT k, p + 55.5, s, 3, 'U' FROM snap WHERE k % 7 = 0
-      UNION ALL
-      SELECT k, p, s, 2, 'D' FROM snap WHERE k % 11 = 0
-      UNION ALL
-      SELECT -k, p / 2, 'N', 1, 'U' FROM snap WHERE k % 13 = 0),
-    latest AS (
-      SELECT *, row_number() OVER (PARTITION BY k
-                                   ORDER BY seq DESC, op ASC) AS rn
-      FROM ch),
-    l AS (SELECT * FROM latest WHERE rn = 1)
-    SELECT coalesce(l.k, snap.k) AS o_orderkey,
-           floor((CASE WHEN l.k IS NOT NULL THEN l.p ELSE snap.p END)
-                 * 100 + 0.5) / 100 AS o_totalprice,
-           CASE WHEN l.k IS NOT NULL THEN l.s ELSE snap.s END
-             AS o_orderstatus
-    FROM snap FULL JOIN l ON snap.k = l.k
-    WHERE l.op IS NULL OR l.op <> 'D'
-    """
-
-
-def build_cdc_changes(snap: DataFrame) -> DataFrame:
-    """The deterministic I/U/D change log both X156 forms replay (and
-    X53's oracle describes): mod-7 keys get two competing upserts at
-    seq 1 and 3, mod-11 keys a tombstone at seq 2, mod-13 keys an
-    insert under a fresh negative key.
-
-    ONE pass over the snapshot (round 17, guide §2.4 — the symmetrize
-    pattern): the previous 4-branch union executed the orders scan
-    once per branch in every consumer job.  Each row conditionally
-    emits its 0–3 events via an in-row build + null-filter + explode;
-    per-event arithmetic is unchanged, so the ROW SET is identical
-    (event order is irrelevant — every consumer repartitions, and the
-    (seq DESC, op ASC) collapse is an order-independent fold)."""
-    k, p, s = (F.col("o_orderkey"), F.col("o_totalprice"),
-               F.col("o_orderstatus"))
-
-    def ev(cond, key, price, status, seq, op):
-        return F.when(cond, F.struct(
-            key.alias("o_orderkey"),
-            price.alias("o_totalprice"),
-            status.alias("o_orderstatus"),
-            F.lit(seq).cast("long").alias("seq"),
-            F.lit(op).alias("op")))
-
-    from sync_cosmos_db_spark.operators.partitioning import spread
-
-    events = F.array(
-        ev(k % 7 == 0, k, p * 1.1, s, 1, "U"),
-        ev(k % 7 == 0, k, p + 55.5, s, 3, "U"),
-        ev(k % 11 == 0, k, p, s, 2, "D"),
-        ev(k % 13 == 0, -k, p / 2, F.lit("N"), 1, "U"))
-    # spread() so the conditional emit parallelizes off the compact
-    # single-split scan (the union it replaced got its wall-clock from
-    # running the SAME scan 4x on idle cores — fine locally, 4 full
-    # scans at 100 TB)
-    return (spread(snap)
-            .select(F.explode(F.filter(
-                events, lambda x: x.isNotNull())).alias("__ev"))
-            .select("__ev.*"))
-
-
-@query("stream_cdc_apply_orders", _CDC_ORACLE)
-def stream_cdc_apply_orders(spark: SparkSession,
-                            sf_dir: str) -> DataFrame:
-    """X156 — STREAMING change-feed compaction
-    (``streaming.stateful.changelog_compact_stream``) + snapshot
-    merge: the same deterministic I/U/D log as X53 replayed through a
-    REAL multi-batch availableNow file stream (maxFilesPerTrigger=1
-    over 4 files, so conflicting events for one key genuinely arrive
-    in different micro-batches and the winner must survive in the
-    state store), then merged into the snapshot.  The oracle is
-    X53's batch SQL verbatim — the streaming compaction must leave
-    the table bit-identical to the batch replay.  This is the
-    continuous-consumer architecture for a Cosmos change feed: the
-    stream maintains a keys-sized compacted log; the periodic merge
-    never re-reads the feed."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import Window
-
-    from sync_cosmos_db_spark.operators.cdc import apply_changelog
-    from sync_cosmos_db_spark.streaming.stateful import (
-        changelog_compact_stream,
-    )
-    from sync_cosmos_db_spark.streaming.windows import run_stream_to_memory
-
-    snap = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderstatus")
-    changes = build_cdc_changes(snap)
-    tmp = tempfile.mkdtemp(prefix="cdc_stream_")
-    changes.repartition(4).write.mode("overwrite").parquet(tmp)
-    stream = (spark.readStream
-              .schema(changes.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(tmp))
-    compact = changelog_compact_stream(stream)
-    emitted = run_stream_to_memory(
-        spark, compact, f"cdc_mem_{uuid.uuid4().hex[:8]}", mode="update")
-    w = Window.partitionBy("o_orderkey").orderBy(
-        F.col("seq").desc(), F.col("op").asc())
-    latest = (emitted.withColumn("__rn", F.row_number().over(w))
-              .filter(F.col("__rn") == 1).drop("__rn"))
-    out = apply_changelog(snap, latest, ["o_orderkey"], "seq")
-    return out.select("o_orderkey",
-                      (F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                       / 100).alias("o_totalprice"),
-                      "o_orderstatus")
-
-
 # ===========================================================================
 # merged from queries_r6f.py (round-9 consolidation; registration order preserved)
 # ===========================================================================
@@ -2304,70 +2141,6 @@ def pareto_frontier_customers(spark: SparkSession,
             .select("c_nationkey",
                     F.col("o_custkey").alias("c_custkey"),
                     "spend", "n_orders"))
-
-
-# ---------------------------------------------------------------------------
-# X160 — streaming per-key rate limiter (X131's live twin)
-# ---------------------------------------------------------------------------
-
-@query(
-    "stream_rate_limit_hourly",
-    """
-    WITH rn AS (
-      SELECT epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT
-               AS window_start,
-             row_number() OVER (
-               PARTITION BY user_id, time_bucket(INTERVAL '1 hour', ts)
-               ORDER BY ts, event_id) AS rn
-      FROM events)
-    SELECT window_start, count(*)::BIGINT AS n_events,
-           sum(CASE WHEN rn <= 5 THEN 1 ELSE 0 END)::BIGINT
-             AS n_admitted,
-           sum(CASE WHEN rn > 5 THEN 1 ELSE 0 END)::BIGINT
-             AS n_dropped
-    FROM rn GROUP BY 1
-    """,
-)
-def stream_rate_limit_hourly(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """X160 — STREAMING per-key rate limiter
-    (``streaming.stateful.rate_limit_stream``): the live form of the
-    X131 batch replay — admission counters per (user, hour) persist
-    in the state store across micro-batches.  The events table is
-    replayed as a REAL 4-batch availableNow stream in event-time
-    order (ntile slices written sequentially with forced mtimes, so
-    a user-hour spanning a batch boundary genuinely tests the
-    carried counter), and the per-batch admission partials are
-    summed per window.  The oracle is X131's batch SQL verbatim —
-    the streaming limiter must admit exactly the rows the batch
-    row_number form admits."""
-    import tempfile
-    import uuid
-
-    from sync_cosmos_db_spark.streaming.stateful import rate_limit_stream
-    from sync_cosmos_db_spark.streaming.windows import (
-        run_stream_to_memory,
-        write_event_time_slices,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="rl_stream_")
-    # r18 (r17 verdict item 4): the slice ranks come from the two-phase
-    # range-partitioned scan and all 4 slices are written in ONE job —
-    # the previous ntile(4) form was an O(N) single-partition global
-    # sort + 4 filtered writes (see write_event_time_slices).
-    write_event_time_slices(ev, tmp, n_slices=4)
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(tmp))
-    emitted = run_stream_to_memory(
-        spark, rate_limit_stream(stream, limit=5),
-        f"rl_mem_{uuid.uuid4().hex[:8]}", mode="update")
-    return (emitted.groupBy("window_start")
-            .agg(F.sum("n_batch").cast("long").alias("n_events"),
-                 F.sum("n_admitted_batch").cast("long")
-                 .alias("n_admitted"),
-                 (F.sum("n_batch") - F.sum("n_admitted_batch"))
-                 .cast("long").alias("n_dropped")))
 
 
 # ---------------------------------------------------------------------------

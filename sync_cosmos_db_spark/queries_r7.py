@@ -1,64 +1,9 @@
-"""Round-7 queries — the SCALE form of streaming CDC compaction
-(round-6 verdict item 3): the ``foreachBatch`` + batch
-``collapse_changelog`` incremental merge registered as a first-class,
-oracle-checked query over the same REAL 4-micro-batch stream as
-``stream_cdc_apply_orders``, with the same X53 batch-replay oracle.
-
-The ``applyInPandasWithState`` form (X156) keeps its place as the
-bounded-cardinality variant (per-key state machine semantics, e.g.
-sessionization); this form is what a 10⁸–10⁹-key change-feed consumer
-runs — every batch is one JVM-side window collapse plus a keys-sized
-merge, zero per-key Python dispatch (measured comparison in
-SCALING.md).
-"""
+"""Round-7 operator-family queries: the former ``queries_r7b`` to
+``queries_r7v`` modules, merged in registration order."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
-
 from sync_cosmos_db_spark.cache_scope import scoped_local_checkpoint
-from sync_cosmos_db_spark.queries import query
-from sync_cosmos_db_spark.queries_r6 import _CDC_ORACLE, build_cdc_changes
-from sync_cosmos_db_spark.session import load_table
-
-
-@query("stream_cdc_apply_orders_batchmerge", _CDC_ORACLE)
-def stream_cdc_apply_orders_batchmerge(spark: SparkSession,
-                                       sf_dir: str) -> DataFrame:
-    """X156 scale form — the same deterministic I/U/D log as
-    ``stream_cdc_apply_orders`` replayed through the same
-    maxFilesPerTrigger=1 availableNow file stream (4 real
-    micro-batches, so conflicting events for one key arrive in
-    different batches and the winner must survive the cross-batch
-    merge), compacted via ``streaming.stateful.run_changelog_compaction``
-    (foreachBatch + batch ``cdc.collapse_changelog``), then merged into
-    the snapshot.  The oracle is X53's batch SQL verbatim — both X156
-    forms must leave the table bit-identical to the batch replay."""
-    import tempfile
-
-    from sync_cosmos_db_spark.operators.cdc import apply_changelog
-    from sync_cosmos_db_spark.streaming.stateful import (
-        run_changelog_compaction,
-    )
-
-    snap = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderstatus")
-    changes = build_cdc_changes(snap)
-    tmp = tempfile.mkdtemp(prefix="cdc_stream_bm_")
-    changes.repartition(4).write.mode("overwrite").parquet(tmp + "/feed")
-    stream = (spark.readStream
-              .schema(changes.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(tmp + "/feed"))
-    compacted = run_changelog_compaction(
-        stream, tmp + "/state", ["o_orderkey"], "seq")
-    out = apply_changelog(snap, compacted, ["o_orderkey"], "seq")
-    return out.select("o_orderkey",
-                      (F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                       / 100).alias("o_totalprice"),
-                      "o_orderstatus")
-
 
 # ===========================================================================
 # merged from queries_r7b.py (round-9 consolidation; registration order preserved)
@@ -2848,13 +2793,13 @@ def topn_other_suppliers_by_nation(spark: SparkSession,
 # merged from queries_r7n.py (round-9 consolidation; registration order preserved)
 # ===========================================================================
 
-"""Round-7 operator families (thirteenth batch) X219-X222:
-share-of-parent hierarchy rollup, penny-exact M:N allocation,
-trigram-index substring search, and time-travel state reconstruction
-— the two-level share view beside X95's share-of-total, the
-largest-remainder allocation that reconciles to the cent, the
-pg_trgm LIKE-acceleration trick with its selectivity audit, and
-point-in-time replay of X53's changelog.
+"""Round-7 operator families (thirteenth batch) X219-X221:
+share-of-parent hierarchy rollup, penny-exact M:N allocation and
+trigram-index substring search — the two-level share view beside
+X95's share-of-total, the largest-remainder allocation that
+reconciles to the cent, and the pg_trgm LIKE-acceleration trick with
+its selectivity audit.  (X222, time-travel replay, lives in
+``queries_streaming``.)
 """
 
 
@@ -3026,76 +2971,6 @@ def trigram_like_documents(spark: SparkSession,
     docs = load_table(spark, sf_dir, "documents")
     return trigram_like_search(docs, "doc_id", "text",
                                "merge batch", group_col="source")
-
-
-# ---------------------------------------------------------------------------
-# X222 — time-travel state reconstruction
-# ---------------------------------------------------------------------------
-
-@query(
-    "state_asof_orders_seq2",
-    """
-    WITH snap AS (SELECT o_orderkey AS k, o_totalprice AS p,
-                         o_orderstatus AS s FROM orders),
-    ch AS (
-      SELECT k, p * 1.1 AS p, s, 1 AS seq, 'U' AS op
-      FROM snap WHERE k % 7 = 0
-      UNION ALL
-      SELECT k, p + 55.5, s, 3, 'U' FROM snap WHERE k % 7 = 0
-      UNION ALL
-      SELECT k, p, s, 2, 'D' FROM snap WHERE k % 11 = 0
-      UNION ALL
-      SELECT -k, p / 2, 'N', 1, 'U' FROM snap WHERE k % 13 = 0),
-    ch2 AS (SELECT * FROM ch WHERE seq <= 2),
-    latest AS (
-      SELECT *, row_number() OVER (PARTITION BY k
-                                   ORDER BY seq DESC, op ASC) AS rn
-      FROM ch2),
-    l AS (SELECT * FROM latest WHERE rn = 1)
-    SELECT coalesce(l.k, snap.k) AS o_orderkey,
-           floor((CASE WHEN l.k IS NOT NULL THEN l.p ELSE snap.p END)
-                 * 100 + 0.5) / 100 AS o_totalprice,
-           CASE WHEN l.k IS NOT NULL THEN l.s ELSE snap.s END
-             AS o_orderstatus
-    FROM snap FULL JOIN l ON snap.k = l.k
-    WHERE l.op IS NULL OR l.op <> 'D'
-    """,
-)
-def state_asof_orders_seq2(spark: SparkSession,
-                           sf_dir: str) -> DataFrame:
-    """X222 — point-in-time (time-travel) reconstruction: X53's
-    exact changelog replayed only UP TO sequence 2 — the %7 keys
-    show their seq-1 price (the seq-3 update hasn't happened yet),
-    the %11 tombstones already apply, the inserts exist.  One
-    filter in front of the same ``cdc.apply_changelog`` — time
-    travel IS changelog replay with a cutoff, and the oracle
-    replays the identical prefix."""
-    from sync_cosmos_db_spark.operators.cdc import apply_changelog
-
-    snap = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderstatus")
-    k, p, s = (F.col("o_orderkey"), F.col("o_totalprice"),
-               F.col("o_orderstatus"))
-
-    def ev(df, key, price, status, seq, op):
-        return df.select(key.alias("o_orderkey"),
-                         price.alias("o_totalprice"),
-                         status.alias("o_orderstatus"),
-                         F.lit(seq).alias("seq"),
-                         F.lit(op).alias("op"))
-
-    base7 = snap.filter(k % 7 == 0)
-    changes = (
-        ev(base7, k, p * 1.1, s, 1, "U")
-        .unionAll(ev(base7, k, p + 55.5, s, 3, "U"))
-        .unionAll(ev(snap.filter(k % 11 == 0), k, p, s, 2, "D"))
-        .unionAll(ev(snap.filter(k % 13 == 0), -k, p / 2,
-                     F.lit("N"), 1, "U")))
-    out = apply_changelog(snap, changes.filter(F.col("seq") <= 2),
-                          ["o_orderkey"], "seq")
-    return out.select("o_orderkey",
-                      fround("o_totalprice", 2).alias("o_totalprice"),
-                      "o_orderstatus")
 
 
 # ===========================================================================

@@ -1,72 +1,13 @@
-"""Round-8 registrations — scale twins mandated by the round-7 verdict.
-
-Registered LAST (after every r7 module) so the 61-query driver-sweep
-backlog drains in registration order before these enter the window
-(round-7 verdict item 1: no new families ahead of the backlog; item 2
-explicitly requests this one scale twin).
-"""
+"""Round-8 registrations: invariant twins of the approximate dedup
+and sketch families."""
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.queries import query
 from sync_cosmos_db_spark.session import load_table
-
-# ---------------------------------------------------------------------------
-# X160 scale form — foreachBatch rate limiter (round-7 verdict item 2)
-# ---------------------------------------------------------------------------
-
-_RL_ORACLE = """
-    WITH rn AS (
-      SELECT epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT
-               AS window_start,
-             row_number() OVER (
-               PARTITION BY user_id, time_bucket(INTERVAL '1 hour', ts)
-               ORDER BY ts, event_id) AS rn
-      FROM events)
-    SELECT window_start, count(*)::BIGINT AS n_events,
-           sum(CASE WHEN rn <= 5 THEN 1 ELSE 0 END)::BIGINT
-             AS n_admitted,
-           sum(CASE WHEN rn > 5 THEN 1 ELSE 0 END)::BIGINT
-             AS n_dropped
-    FROM rn GROUP BY 1
-"""
-
-
-@query("stream_rate_limit_hourly_batchmerge", _RL_ORACLE)
-def stream_rate_limit_hourly_batchmerge(spark: SparkSession,
-                                        sf_dir: str) -> DataFrame:
-    """X160 SCALE form (round-7 verdict item 2) — the foreachBatch
-    batch-merge rate limiter (``streaming.stateful.
-    run_rate_limit_batchmerge``): each micro-batch collapses to one
-    row per (user, hour) JVM-side and merges against a keys-sized
-    admitted-counter table — zero per-key Python dispatch, unlike the
-    ``applyInPandasWithState`` live form it twins
-    (``stream_rate_limit_hourly``, same 4-batch event-time-ordered
-    replay, same X131 batch row_number oracle)."""
-    import tempfile
-
-    from sync_cosmos_db_spark.streaming.stateful import (
-        run_rate_limit_batchmerge,
-    )
-    from sync_cosmos_db_spark.streaming.windows import (
-        write_event_time_slices,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="rl_bm_stream_")
-    # r18 (r17 verdict item 4): two-phase-scan slice ranks + ONE
-    # slice-partitioned write replace the single-partition ntile sort
-    # and the 4 filtered writes (see write_event_time_slices).
-    write_event_time_slices(ev, tmp, n_slices=4)
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(tmp))
-    state_dir = tempfile.mkdtemp(prefix="rl_bm_state_")
-    return run_rate_limit_batchmerge(stream, state_dir, limit=5)
-
 
 # ---------------------------------------------------------------------------
 # X2 — SimHash containment twin (round-7 verdict item 3): the last

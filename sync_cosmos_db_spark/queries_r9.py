@@ -1,22 +1,5 @@
-"""Round-9 registrations — pipeline-selection operators (X255-X258).
-
-Registered LAST (after queries_r8) so the 15-query driver-sweep
-backlog (13 carried + the two r9 invariant twins) drains in
-registration order before these enter the window; 15 + 4 = 19 of the
-50 window slots, so every never-swept query still gets a driver
-CORRECTNESS row this round (round-8 verdict item 1's intent).
-
-The second r9 batch (X259-X262) brings the never-swept count to 23,
-the third (X263-X266) to 27, the fourth (X267-X270) to 31, the
-fifth (X271-X274) to 35, the sixth (X275-X278) to 39, the seventh
-(X279-X281, three queries) to 42 — still inside the 50-slot window
-(driver-confirmed: SWEEP_PRIORITY places them at positions 40-42).
-The eighth and ninth additions (`stream_rate_limit_hourly_tws` and
-`stream_cdc_apply_orders_tws`, the Spark 4 TWS engine's
-oracle-checked forms) make 44; the ninth batch (X282-X285,
-distribution-comparison tests) makes 48 — 2 stale re-check slots
-remain, so every never-swept query still drains this round.
-"""
+"""Round-9 registrations: pipeline-selection operators (X255-X258)
+and the later round-9 families (X259-X285), in registration order."""
 
 from __future__ import annotations
 
@@ -2276,166 +2259,6 @@ def ljung_box_daily_revenue(spark: SparkSession,
         "lag", "n_pairs", "rho", "q_lb",
         F.when(F.col("q_lb") > crit, "AUTOCORRELATED").otherwise("WHITE")
         .alias("verdict"))
-
-
-# ---------------------------------------------------------------------------
-# X160-TWS — streaming rate limiter on transformWithStateInPandas
-# ---------------------------------------------------------------------------
-
-_RL_TWS_ORACLE = """
-WITH rn AS (
-  SELECT epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT
-           AS window_start,
-         row_number() OVER (
-           PARTITION BY user_id, time_bucket(INTERVAL '1 hour', ts)
-           ORDER BY ts, event_id) AS rn
-  FROM events)
-SELECT window_start, count(*)::BIGINT AS n_events,
-       sum(CASE WHEN rn <= 5 THEN 1 ELSE 0 END)::BIGINT
-         AS n_admitted,
-       sum(CASE WHEN rn > 5 THEN 1 ELSE 0 END)::BIGINT
-         AS n_dropped
-FROM rn GROUP BY 1
-"""
-
-
-@query("stream_rate_limit_hourly_tws", _RL_TWS_ORACLE)
-def stream_rate_limit_hourly_tws(spark: SparkSession,
-                                 sf_dir: str) -> DataFrame:
-    """X160 on Spark 4's ``transformWithStateInPandas`` (typed
-    ValueState; live in this sandbox since round 9 via
-    ``protobuf_shim`` — see ``streaming/stateful.py``), replaying the
-    SAME real 4-batch availableNow stream as
-    ``stream_rate_limit_hourly`` against the SAME X131 batch oracle —
-    the third engine (legacy state row / TWS / foreachBatch merge) to
-    hash-match the identical admission semantics.  Runs under the
-    RocksDB state store provider (TWS needs column families), scoped
-    to this query."""
-    import tempfile
-    import uuid
-
-    from sync_cosmos_db_spark.streaming.stateful import (
-        _ROCKSDB_PROVIDER,
-        rate_limit_stream_tws,
-    )
-    from sync_cosmos_db_spark.streaming.windows import (
-        run_stream_to_memory,
-        write_event_time_slices,
-    )
-
-    ev = load_table(spark, sf_dir, "events")
-    tmp = tempfile.mkdtemp(prefix="rl_tws_stream_")
-    # r18 (r17 verdict item 4): two-phase-scan slice ranks + ONE
-    # slice-partitioned write replace the single-partition ntile sort
-    # and the 4 filtered writes (see write_event_time_slices).
-    write_event_time_slices(ev, tmp, n_slices=4)
-    stream = (spark.readStream.schema(ev.schema)
-              .option("maxFilesPerTrigger", 1).parquet(tmp))
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
-        emitted = run_stream_to_memory(
-            spark, rate_limit_stream_tws(stream, limit=5),
-            f"rl_tws_mem_{uuid.uuid4().hex[:8]}", mode="update")
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-    return (emitted.groupBy("window_start")
-            .agg(F.sum("n_batch").cast("long").alias("n_events"),
-                 F.sum("n_admitted_batch").cast("long")
-                 .alias("n_admitted"),
-                 (F.sum("n_batch") - F.sum("n_admitted_batch"))
-                 .cast("long").alias("n_dropped")))
-
-
-# ---------------------------------------------------------------------------
-# X156-TWS — streaming CDC compaction on transformWithStateInPandas
-# ---------------------------------------------------------------------------
-
-_CDC_TWS_ORACLE = """
-    WITH snap AS (SELECT o_orderkey AS k, o_totalprice AS p,
-                         o_orderstatus AS s FROM orders),
-    ch AS (
-      SELECT k, p * 1.1 AS p, s, 1 AS seq, 'U' AS op
-      FROM snap WHERE k % 7 = 0
-      UNION ALL
-      SELECT k, p + 55.5, s, 3, 'U' FROM snap WHERE k % 7 = 0
-      UNION ALL
-      SELECT k, p, s, 2, 'D' FROM snap WHERE k % 11 = 0
-      UNION ALL
-      SELECT -k, p / 2, 'N', 1, 'U' FROM snap WHERE k % 13 = 0),
-    latest AS (
-      SELECT *, row_number() OVER (PARTITION BY k
-                                   ORDER BY seq DESC, op ASC) AS rn
-      FROM ch),
-    l AS (SELECT * FROM latest WHERE rn = 1)
-    SELECT coalesce(l.k, snap.k) AS o_orderkey,
-           floor((CASE WHEN l.k IS NOT NULL THEN l.p ELSE snap.p END)
-                 * 100 + 0.5) / 100 AS o_totalprice,
-           CASE WHEN l.k IS NOT NULL THEN l.s ELSE snap.s END
-             AS o_orderstatus
-    FROM snap FULL JOIN l ON snap.k = l.k
-    WHERE l.op IS NULL OR l.op <> 'D'
-    """
-
-
-@query("stream_cdc_apply_orders_tws", _CDC_TWS_ORACLE)
-def stream_cdc_apply_orders_tws(spark: SparkSession,
-                                sf_dir: str) -> DataFrame:
-    """X156 on Spark 4's ``transformWithStateInPandas``
-    (``streaming.stateful.changelog_compact_stream_tws``; live since
-    round 9 via ``protobuf_shim``): the SAME deterministic I/U/D log
-    as ``stream_cdc_apply_orders``, replayed through the same real
-    4-batch availableNow stream against X53's batch oracle verbatim —
-    both state engines must leave the merged table bit-identical.
-    RocksDB state store provider scoped to the query (TWS needs
-    column families)."""
-    import tempfile
-    import uuid
-
-    from pyspark.sql import Window as W
-
-    from sync_cosmos_db_spark.operators.cdc import apply_changelog
-    from sync_cosmos_db_spark.queries_r6 import build_cdc_changes
-    from sync_cosmos_db_spark.streaming.stateful import (
-        _ROCKSDB_PROVIDER,
-        changelog_compact_stream_tws,
-    )
-    from sync_cosmos_db_spark.streaming.windows import run_stream_to_memory
-
-    snap = load_table(spark, sf_dir, "orders").select(
-        "o_orderkey", "o_totalprice", "o_orderstatus")
-    changes = build_cdc_changes(snap)
-    tmp = tempfile.mkdtemp(prefix="cdc_tws_stream_")
-    changes.repartition(4).write.mode("overwrite").parquet(tmp)
-    stream = (spark.readStream
-              .schema(changes.schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(tmp))
-    key = "spark.sql.streaming.stateStore.providerClass"
-    old = spark.conf.get(key, None)
-    spark.conf.set(key, _ROCKSDB_PROVIDER)
-    try:
-        emitted = run_stream_to_memory(
-            spark, changelog_compact_stream_tws(stream),
-            f"cdc_tws_mem_{uuid.uuid4().hex[:8]}", mode="update")
-    finally:
-        if old is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, old)
-    w = W.partitionBy("o_orderkey").orderBy(
-        F.col("seq").desc(), F.col("op").asc())
-    latest = (emitted.withColumn("__rn", F.row_number().over(w))
-              .filter(F.col("__rn") == 1).drop("__rn"))
-    out = apply_changelog(snap, latest, ["o_orderkey"], "seq")
-    return out.select("o_orderkey",
-                      (F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-                       / 100).alias("o_totalprice"),
-                      "o_orderstatus")
 
 
 # ---------------------------------------------------------------------------

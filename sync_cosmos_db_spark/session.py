@@ -61,6 +61,24 @@ def get_spark(
     return spark
 
 
+def register_pickle_by_value(module_name: str) -> None:
+    """Make cloudpickle ship the code of ``module_name`` inside every
+    task closure that references it, so Python workers never import
+    this package: a driver may run from a directory that is not on the
+    workers' import path.  Call it at the bottom of a module whose
+    functions run in workers.  With a cloudpickle that predates
+    ``register_pickle_by_value`` the package must be deployed to the
+    workers instead (``--py-files``)."""
+    import sys
+
+    try:
+        from pyspark import cloudpickle
+
+        cloudpickle.register_pickle_by_value(sys.modules[module_name])
+    except (ImportError, AttributeError):
+        pass
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str):
     """Read one harness table (`/root/testdata/sf*/NAME.parquet`).
 

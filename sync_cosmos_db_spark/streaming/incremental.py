@@ -38,6 +38,7 @@ from sync_cosmos_db_spark.migration import (
     classify_actions,
     merge_target_state,
 )
+from sync_cosmos_db_spark.streaming.windows import run_foreach_batch
 
 BUCKET_COL = "__kb"
 
@@ -168,8 +169,4 @@ def incremental_migrate(
                           keys, n_buckets=n_buckets,
                           reliable_checkpoint_dir=reliable_checkpoint_dir)
 
-    q = (stream.writeStream.foreachBatch(process)
-         .option("checkpointLocation", checkpoint_dir)
-         .trigger(availableNow=True)
-         .start())
-    q.awaitTermination()
+    run_foreach_batch(stream, process, checkpoint_dir)

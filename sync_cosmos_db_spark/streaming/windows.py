@@ -292,6 +292,19 @@ def run_stream_to_memory(spark: SparkSession, streaming_df: DataFrame,
     return spark.table(table_name)
 
 
+def run_foreach_batch(stream: DataFrame, batch_fn,
+                      checkpoint_dir: str) -> None:
+    """Run ``batch_fn(batch_df, batch_id)`` over every micro-batch the
+    source holds now (availableNow trigger) and block until done.
+    ``checkpoint_dir`` records the consumed input, so a rerun with it
+    processes only what arrived since."""
+    q = (stream.writeStream.foreachBatch(batch_fn)
+         .option("checkpointLocation", checkpoint_dir)
+         .trigger(availableNow=True)
+         .start())
+    q.awaitTermination()
+
+
 def interval_join_stream(left: DataFrame, right: DataFrame,
                          key: str,
                          left_ts: str, right_ts: str,

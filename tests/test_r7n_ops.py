@@ -129,7 +129,9 @@ def test_state_asof_prefix_semantics(spark, sf_dir):
     keys are gone; %13 inserts exist under negative keys."""
     from pyspark.sql import functions as F
 
-    from sync_cosmos_db_spark.queries_r7 import state_asof_orders_seq2
+    from sync_cosmos_db_spark.queries_streaming import (
+        state_asof_orders_seq2,
+    )
     from sync_cosmos_db_spark.session import load_table
 
     out = state_asof_orders_seq2(spark, sf_dir)
