@@ -75,15 +75,29 @@ def parse_payload(df: DataFrame, schema,
     return df.withColumn(out_col, F.from_json(F.col(payload_col), schema))
 
 
+def _in_schema(schema: T.StructType, path: str) -> bool:
+    dt = schema
+    for part in (p for p in path.strip("/").split("/") if p):
+        if not isinstance(dt, T.StructType) or part not in dt.names:
+            return False
+        dt = dt[part].dataType
+    return True
+
+
 def extract_pk_columns(df: DataFrame, pk_paths: list[str]) -> DataFrame:
     """Add one ``__pk_{i}`` column per partition-key path (O8).
 
     Hierarchical (multi-path) keys are preserved in full — the reference
     truncates to the first path when recreating containers
     (``src/containers.py:16``); we keep the whole list (SURVEY.md §1.4).
+    A path the schema does not hold yields NULL, as the reference's
+    traversal reads a missing key as ``None``, so its documents fail the
+    validity predicate (O7, ``src/migration.py:101-109``).
     """
     for i, path in enumerate(pk_paths):
-        df = df.withColumn(f"__pk_{i}", pk_path_to_column(path))
+        value = (pk_path_to_column(path) if _in_schema(df.schema, path)
+                 else F.lit(None).cast("string"))
+        df = df.withColumn(f"__pk_{i}", value)
     return df
 
 

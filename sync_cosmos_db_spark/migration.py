@@ -23,8 +23,12 @@ Operator map (SURVEY.md §2): O6 (point lookup → left join), O12
   downstream (classify, per-action split) reuses that partitioning.
 * With a small target (initial loads), AQE converts the join to
   broadcast automatically.
-* Metrics come from ``df.observe`` — no second pass over the data and
-  no driver-side collect of rows.
+* No second pass: one ``Observation`` on the source scan counts the
+  documents and the invalid ones (``source_count``, ``errors``) and one
+  on the classified rows counts insert/update/skip, both filled by the
+  write job itself. Each observed node appears once in the written
+  plan — :func:`merge_target_state` takes its anti-join keys from an
+  unobserved copy of the source — so each counter fires once.
 """
 
 from __future__ import annotations
@@ -37,8 +41,8 @@ from pyspark.sql import functions as F
 from sync_cosmos_db_spark.document_model import (
     SYSTEM_FIELDS,
     content_hash,
-    split_valid_invalid,
     strip_system_fields,
+    validity_predicate,
 )
 
 #: Classifier outcomes (reference counters at ``src/migration.py:73,169-176``).
@@ -143,9 +147,10 @@ def merge_target_state(tagged: DataFrame, source: DataFrame,
     so a target-only document survives unchanged: it is neither
     sanitized nor stripped, and ``unionByName`` with missing columns
     keeps every field it has. ``source`` is the frame ``tagged`` was
-    classified from; taking the anti-join keys from it, not from
-    ``tagged``, keeps any ``observe`` on ``tagged`` to one occurrence
-    in the plan, so its counters fire once per write.
+    classified from, or an unobserved copy of it; taking the anti-join
+    keys from it, not from ``tagged``, keeps every ``observe`` upstream
+    of ``tagged`` to one occurrence in the plan, so its counters fire
+    once per write.
     """
     kept = target.join(source.select(*keys), keys, "left_anti")
     return tagged.drop("action").unionByName(kept, allowMissingColumns=True)
@@ -160,7 +165,8 @@ def migrate_container(
     writer=None,
 ) -> tuple[DataFrame, MigrationResult]:
     """Full migration pipeline for one container; returns the action-tagged
-    DataFrame and (after ``writer`` or a count pass) the counter quadruple.
+    DataFrame and the counters, which the write itself fills: the
+    quadruple plus ``source_count``.
 
     Pipeline (SURVEY.md §3): validate/quarantine (O7) → strip system
     fields (O10) → classify (O6/O11/O12) → optional sanitize (O19) →
@@ -173,10 +179,14 @@ def migrate_container(
     from sync_cosmos_db_spark.sanitizer import sanitize_dataframe
 
     start = time.monotonic()
-    id_col = keys[0]
-    valid, quarantine = split_valid_invalid(source, id_col=id_col,
-                                            pk_cols=keys[1:])
-    clean = strip_system_fields(valid)
+    valid = F.coalesce(validity_predicate(keys[0], keys[1:]), F.lit(False))
+    scanned = Observation(f"source:{container}")
+    observed = source.observe(
+        scanned,
+        F.count(F.lit(1)).alias("source_count"),
+        F.count(F.when(~valid, 1)).alias("errors"),
+    )
+    clean = strip_system_fields(observed.filter(valid))
     tagged = classify_actions(clean, target, keys)
     if sanitize:
         # The reference sanitizes only documents it WRITES (the gate sits
@@ -187,49 +197,66 @@ def migrate_container(
         tagged = sanitize_dataframe(
             tagged, only_when=F.col("action") != ACTION_SKIP)
 
-    observation = Observation(f"migration:{container}")
+    classified = Observation(f"migration:{container}")
     tagged = tagged.observe(
-        observation,
+        classified,
         F.count(F.when(F.col("action") == ACTION_INSERT, 1)).alias("inserted"),
         F.count(F.when(F.col("action") == ACTION_UPDATE, 1)).alias("updated"),
         F.count(F.when(F.col("action") == ACTION_SKIP, 1)).alias("skipped"),
     )
 
     if writer is not None:
-        writer(merge_target_state(tagged, clean, target, keys))
+        unobserved = strip_system_fields(source.filter(valid))
+        writer(merge_target_state(tagged, unobserved, target, keys))
     else:
         tagged.write.format("noop").mode("overwrite").save()
 
-    metrics = observation.get
-    errors = quarantine.count()
     result = MigrationResult(
         container=container,
-        inserted=metrics["inserted"],
-        updated=metrics["updated"],
-        skipped=metrics["skipped"],
-        errors=errors,
+        **classified.get,
+        **scanned.get,
         duration_sec=time.monotonic() - start,
     )
     return tagged, result
+
+
+def same_documents(source: DataFrame, target: DataFrame) -> bool:
+    """Content-level check: ``source`` and ``target`` hold the same
+    multiset of documents over ``source``'s non-system fields.
+
+    One aggregate scans each side once: the union of both sides,
+    weighted +1 and -1, grouped by every column; the sides are equal
+    when no group's weight sums to non-zero. This is the rewrite Spark
+    applies to one ``exceptAll``, so it answers exactly what the two
+    ``exceptAll`` directions together answered.
+    """
+    cols = [c for c in source.columns if c not in SYSTEM_FIELDS]
+
+    def weighted(df: DataFrame, w: int) -> DataFrame:
+        return strip_system_fields(df).select(*cols, F.lit(w).alias("__w"))
+
+    return (weighted(source, 1).unionByName(weighted(target, -1))
+            .groupBy(*cols).agg(F.sum("__w").alias("__w"))
+            .filter(F.col("__w") != 0)
+            .isEmpty())
 
 
 def verify_migration(source: DataFrame, target: DataFrame,
                      strong: bool = False) -> tuple[bool, int, int]:
     """O21 verification — count equality like the reference
     (``src/migration.py:182-211``), optionally strengthened with the
-    content-level ``exceptAll`` check Spark makes cheap.
+    content-level multiset check :func:`same_documents`.
 
-    Counts are aggregate-pushdown reads (no row materialization).
+    For two bare DataFrames the counts are two ``count()`` jobs. The
+    container migration does not call this: it takes the source count
+    from the write's observation and the target count from the written
+    files' footers, and shares only :func:`same_documents`.
     """
     src_count = source.count()
     tgt_count = target.count()
     ok = src_count == tgt_count
     if ok and strong:
-        cols = [c for c in source.columns if c not in SYSTEM_FIELDS]
-        src_norm = strip_system_fields(source).select(*cols)
-        tgt_norm = strip_system_fields(target).select(*cols)
-        ok = src_norm.exceptAll(tgt_norm).isEmpty() and \
-            tgt_norm.exceptAll(src_norm).isEmpty()
+        ok = same_documents(source, target)
     return ok, src_count, tgt_count
 
 

@@ -38,7 +38,7 @@ from sync_cosmos_db_spark.migration import (
     MigrationResult,
     check_pk_alignment,
     migrate_container,
-    verify_migration,
+    same_documents,
 )
 from sync_cosmos_db_spark.sinks import (
     merge_to_parquet,
@@ -49,26 +49,26 @@ from sync_cosmos_db_spark.sources import catalog
 
 
 def _prepare_merge_keys(src_df, tgt_df, pk_paths: list[str]):
-    """Build the merge key (id + one column per pk path), materializing
-    nested paths as extracted ``__pk_i`` columns on BOTH sides — the
-    full hierarchical key list, never truncated to the first path
-    (reference truncates at ``src/containers.py:16``; SURVEY.md §1.4)."""
+    """Build the merge key (id + one column per pk path). A top-level
+    source column is used as is; every other path (nested, or missing
+    from the source) becomes an extracted ``__pk_i`` column on BOTH
+    sides, NULL where it does not resolve, so those documents are
+    quarantined. The full hierarchical key list is kept, never
+    truncated to the first path (reference truncates at
+    ``src/containers.py:16``; SURVEY.md §1.4)."""
     keys = ["id"] if "id" in src_df.columns else []
-    flat, nested = [], []
+    extracted = []
     for p in pk_paths:
         parts = [x for x in p.strip("/").split("/") if x]
-        if len(parts) == 1 and parts[0] != "id":
-            if parts[0] in src_df.columns:
-                flat.append(parts[0])
-        elif len(parts) > 1:
-            nested.append(p)
-    if nested:
-        src_df = extract_pk_columns(src_df, nested)
-        tgt_df = extract_pk_columns(tgt_df, nested)
-        keys += flat + [f"__pk_{i}" for i in range(len(nested))]
-    else:
-        keys += flat
-    return src_df, tgt_df, keys
+        if parts == ["id"]:
+            continue
+        if len(parts) == 1 and parts[0] in src_df.columns:
+            keys.append(parts[0])
+        else:
+            extracted.append(p)
+    src_df = extract_pk_columns(src_df, extracted)
+    tgt_df = extract_pk_columns(tgt_df, extracted)
+    return src_df, tgt_df, keys + [f"__pk_{i}" for i in range(len(extracted))]
 
 
 def migrate_container_path(
@@ -84,6 +84,13 @@ def migrate_container_path(
     """Migrate one container between filesystem accounts (the harness
     form of ``src/main.py:30-56``): properties (O17) → pk pre-flight
     (O18) → DDL (O16) → classify+write (O6-O14) → verify (O21).
+
+    One observed write per container: its observations give the
+    counters and ``source_count``; ``target_count`` is the footer row
+    count of the files that landed. Sources and targets are read with
+    their footer schema, so no schema-inference job runs either. With
+    ``strong_verify`` one multiset aggregate
+    (``migration.same_documents``) is the only other job.
 
     ``connector_options`` (e.g. the ``spark.cosmos.throughputControl.*``
     RU bound from the CLI) is applied to the source/target reads — the
@@ -108,11 +115,11 @@ def migrate_container_path(
     catalog.create_container_if_not_exists(
         target_root, database, container, src_props)
 
-    reader = spark.read.options(**(connector_options or {}))
-    src_df = reader.parquet(
-        catalog.container_data_path(source_root, database, container))
+    src_df = catalog.read_parquet(
+        spark, catalog.container_data_path(source_root, database, container),
+        connector_options)
     if tgt_exists:
-        tgt_df = reader.parquet(tgt_path)
+        tgt_df = catalog.read_parquet(spark, tgt_path, connector_options)
     else:
         # an empty frame the optimizer can see is empty, so the classify
         # and merge joins against it are pruned away
@@ -129,16 +136,17 @@ def migrate_container_path(
                          if c.startswith("__pk_")]), tgt_path),
     )
 
-    new_tgt = spark.read.parquet(tgt_path)
-    # verify on the ORIGINAL source frame (the extracted __pk_ merge
-    # columns are dropped from the written target); content-level
-    # verification is meaningless under sanitization (written rows are
-    # deliberately different), so fall back to counts there
-    ok, n_src, n_tgt = verify_migration(src_orig, new_tgt,
-                                        strong=strong_verify and not sanitize)
+    # O21 with the reference's meaning: equal counts, plus equal content
+    # under strong_verify, checked on the ORIGINAL source frame (the
+    # extracted __pk_ merge columns are dropped from the written
+    # target). Content-level verification is meaningless under
+    # sanitization (written rows are deliberately different), so that
+    # falls back to counts.
+    result.target_count = catalog.footer_row_count(tgt_path)
+    ok = result.source_count == result.target_count
+    if ok and strong_verify and not sanitize:
+        ok = same_documents(src_orig, catalog.read_parquet(spark, tgt_path))
     result.verified = ok
-    result.source_count = n_src
-    result.target_count = n_tgt
     if connector_options:
         result.extra["connector_options"] = dict(connector_options)
     return result

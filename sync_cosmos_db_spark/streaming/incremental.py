@@ -38,6 +38,7 @@ from sync_cosmos_db_spark.migration import (
     classify_actions,
     merge_target_state,
 )
+from sync_cosmos_db_spark.sources import catalog
 from sync_cosmos_db_spark.streaming.windows import run_foreach_batch
 
 BUCKET_COL = "__kb"
@@ -92,8 +93,10 @@ def apply_batch_merge(spark: SparkSession, batch_df: DataFrame,
     try:
         touched = sorted(r[0] for r in
                          bucketed.select(BUCKET_COL).distinct().collect())
-        # partition-pruned read: only the touched bucket directories
-        tgt = (spark.read.parquet(target_path)
+        # partition-pruned read of only the touched bucket directories,
+        # with the footer schema (no inference job; Spark still
+        # discovers the __kb partition column from the paths)
+        tgt = (catalog.read_parquet(spark, target_path)
                .filter(F.col(BUCKET_COL).isin(touched))
                .drop(BUCKET_COL))
 

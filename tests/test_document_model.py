@@ -44,9 +44,12 @@ def test_pk_path_nested_extraction(spark):
 
 def test_extract_pk_columns_multi_path(spark):
     # hierarchical pk preserved in full (reference truncates: SURVEY §1.4)
-    df = extract_pk_columns(_df(spark), ["/tenantId", "/profile/firstName"])
+    # a path the schema lacks reads as NULL, like the reference's None
+    df = extract_pk_columns(_df(spark), ["/tenantId", "/profile/firstName",
+                                         "/tenant", "/profile/age"])
     row = df.filter(F.col("id") == "d1").collect()[0]
-    assert (row["__pk_0"], row["__pk_1"]) == ("t1", "Ann")
+    assert (row["__pk_0"], row["__pk_1"], row["__pk_2"], row["__pk_3"]) \
+        == ("t1", "Ann", None, None)
 
 
 def test_validity_split(spark):

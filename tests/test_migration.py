@@ -14,6 +14,7 @@ from sync_cosmos_db_spark.migration import (
     classify_actions,
     merge_target_state,
     migrate_container,
+    same_documents,
     verify_migration,
 )
 from sync_cosmos_db_spark.sources import catalog
@@ -156,3 +157,64 @@ def test_left_anti_target_join_only_in_migration():
             hits += [name for n in ast.walk(tree)
                      if isinstance(n, ast.Constant) and n.value == "left_anti"]
     assert hits == ["migration.py"]
+
+
+DOCS = [("a", "x", ("t", 1)), ("b", "y", ("u", 2)), ("c", "z", ("v", 3))]
+DOCS_SCHEMA = "id string, body string, meta struct<tag: string, n: long>"
+
+
+@pytest.mark.parametrize("changed", [
+    [DOCS[0], DOCS[0], DOCS[2]],                # one row doubled, one gone
+    [DOCS[0], DOCS[1], ("c", "z", ("v", 4))],   # one nested field changed
+], ids=["duplicate", "nested_field"])
+def test_strong_check_sees_content_behind_equal_counts(spark, changed):
+    """The one multiset aggregate answers False where the two
+    ``exceptAll`` checks it replaced did, on equal-count inputs."""
+    a = spark.createDataFrame(DOCS, DOCS_SCHEMA)
+    b = spark.createDataFrame(changed, DOCS_SCHEMA)
+    assert not (a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty())
+    assert same_documents(a, b) is False
+    assert same_documents(a, a) is True
+    assert verify_migration(a, b, strong=True) == (False, 3, 3)
+
+
+def _calls(tree: ast.AST, attr: str) -> list[ast.Call]:
+    return [n for n in ast.walk(tree) if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute) and n.func.attr == attr]
+
+
+def _chain(call: ast.Call) -> list[str]:
+    """Attribute names along the method chain a call ends."""
+    names, node = [], call.func
+    while isinstance(node, (ast.Attribute, ast.Call)):
+        if isinstance(node, ast.Attribute):
+            names.append(node.attr)
+            node = node.value
+        else:
+            node = node.func
+    return names
+
+
+def test_container_migration_is_one_observed_pass():
+    """No counting pass and no schema-inference read in the container
+    migration or the catch-up merge: no ``.count()``, and every
+    ``read.parquet(`` carries ``.schema(``. The strong check is the one
+    aggregate of ``same_documents`` — no ``exceptAll`` — and only
+    ``verify_migration`` keeps its two ``count()``s, for callers that
+    pass it bare DataFrames."""
+    mig = ast.parse((PKG / "migration.py").read_text())
+    funcs = {f.name: f for f in mig.body if isinstance(f, ast.FunctionDef)}
+    scopes = {name: ast.parse((PKG / name).read_text())
+              for name in ("orchestrator.py", "streaming/incremental.py")}
+    scopes["migration.migrate_container"] = funcs["migrate_container"]
+    for name, tree in scopes.items():
+        assert not [c.lineno for c in _calls(tree, "count") if not c.args], \
+            name
+        inferred = [c.lineno for c in _calls(tree, "parquet")
+                    if {"read", "readStream"} & set(_chain(c))
+                    and "schema" not in _chain(c)]
+        assert not inferred, name
+    assert not [n for n in ast.walk(mig)
+                if isinstance(n, ast.Attribute) and n.attr == "exceptAll"]
+    assert len([c for c in _calls(funcs["verify_migration"], "count")
+                if not c.args]) == 2

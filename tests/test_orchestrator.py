@@ -7,7 +7,10 @@ from __future__ import annotations
 
 import json
 import os
+import uuid
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
 from sync_cosmos_db_spark.orchestrator import (
@@ -20,6 +23,25 @@ from sync_cosmos_db_spark.sources import catalog
 def _write(spark, rows, schema, path):
     spark.createDataFrame(rows, schema).coalesce(1).write.mode(
         "overwrite").parquet(path)
+
+
+def _reset_job_group(sc):
+    for key in ("spark.jobGroup.id", "spark.job.description",
+                "spark.job.interruptOnCancel"):
+        sc.setLocalProperty(key, None)
+
+
+def _jobs_in(spark, fn):
+    """``(fn(), number of Spark jobs fn ran)``, counted in a job group
+    of its own."""
+    sc = spark.sparkContext
+    group = f"jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "job count")
+    try:
+        out = fn()
+    finally:
+        _reset_job_group(sc)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @pytest.fixture()
@@ -260,9 +282,7 @@ def test_parallel_jobs_inherit_caller_job_group(spark, tmp_path):
                                    database="db", max_parallel=2)
         after = set(sc.statusTracker().getJobIdsForGroup(group))
     finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
+        _reset_job_group(sc)
     assert {c: r.inserted for c, r in out["results"]["db"].items()} \
         == {"c1": 5, "c2": 5}
     assert after - before
@@ -379,3 +399,148 @@ def test_throughput_control_requires_exactly_one_bound():
         throughput_control()
     with pytest.raises(ValueError, match="exactly one"):
         throughput_control(target_ru=100, target_ru_fraction=0.5)
+
+
+def test_missing_flat_pk_quarantines_documents(spark, tmp_path):
+    """A partition-key path the source schema lacks reads as NULL, so
+    every document is invalid and counted in ``errors`` (reference
+    ``src/migration.py:101-109``), not migrated under a key without
+    that path."""
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    catalog.create_container_if_not_exists(
+        src, "db", "c", {"partition_key_paths": ["/tenant"]})
+    _write(spark, [("1", 10), ("2", 20)], "id string, val long",
+           catalog.container_data_path(src, "db", "c"))
+    res = migrate_container_path(spark, src, tgt, "db", "c")
+    assert (res.inserted, res.updated, res.skipped, res.errors) == (0, 0, 0, 2)
+    assert (res.verified, res.source_count, res.target_count) == (False, 2, 0)
+
+
+#: Spark jobs per container migration as (fresh target, rerun): the
+#: write alone, plus one multiset aggregate under ``strong_verify``.
+JOB_BUDGET = {False: (1, 3), True: (3, 5)}
+
+
+@pytest.mark.parametrize("strong", [False, True], ids=["counts", "strong"])
+def test_container_job_budget(spark, tmp_path, strong):
+    """One observed write per container, and under ``strong_verify`` one
+    content check: no count, schema-inference or re-read job."""
+    src, tgt = str(tmp_path / "src"), str(tmp_path / "tgt")
+    catalog.create_container_if_not_exists(
+        src, "db", "c", {"partition_key_paths": ["/dept"]})
+    _write(spark, [(str(i), "eng" if i % 2 else "ops", i)
+                   for i in range(500)],
+           "id string, dept string, salary long",
+           catalog.container_data_path(src, "db", "c"))
+    for run, budget in zip(("fresh", "rerun"), JOB_BUDGET[strong]):
+        res, jobs = _jobs_in(spark, lambda: migrate_container_path(
+            spark, src, tgt, "db", "c", strong_verify=strong))
+        assert res.verified is True and res.target_count == 500
+        assert jobs <= budget, f"{run}: {jobs} jobs > {budget}"
+
+
+def _nested_invalid(spark, root):
+    catalog.create_container_if_not_exists(
+        root, "db", "n", {"partition_key_paths": ["/meta/dept"]})
+    _write(spark, [("1", 10, ("eng",)), ("2", 20, (None,)),
+                   (None, 30, ("ops",)), ("4", 40, ("",))],
+           "id string, val long, meta struct<dept: string>",
+           catalog.container_data_path(root, "db", "n"))
+    return "db", "n", "/meta/dept"
+
+
+def _empty(spark, root):
+    catalog.create_container_if_not_exists(
+        root, "db", "e", {"partition_key_paths": ["/dept"]})
+    _write(spark, [], "id string, dept string, salary long",
+           catalog.container_data_path(root, "db", "e"))
+    return "db", "e", "/dept"
+
+
+@pytest.mark.parametrize("case", ["golden", "nested_invalid", "empty"])
+def test_observed_counts_equal_count(spark, account, tmp_path, case):
+    """The write's observations and the footer row count give what
+    ``count()`` passes over the source and the new target give."""
+    from sync_cosmos_db_spark.document_model import (
+        extract_pk_columns,
+        split_valid_invalid,
+    )
+
+    src, tgt = account
+    db, c, pk = {"golden": lambda *_: ("hr", "emp", "/dept"),
+                 "nested_invalid": _nested_invalid,
+                 "empty": _empty}[case](spark, src)
+    res = migrate_container_path(spark, src, tgt, db, c)
+
+    source = spark.read.parquet(catalog.container_data_path(src, db, c))
+    invalid = split_valid_invalid(extract_pk_columns(source, [pk]), "id",
+                                  ["__pk_0"])[1]
+    target = spark.read.parquet(catalog.container_data_path(tgt, db, c))
+    assert (res.source_count, res.errors, res.target_count) == (
+        source.count(), invalid.count(), target.count())
+    assert res.inserted + res.updated + res.skipped == \
+        source.count() - invalid.count()
+    if case == "empty":
+        assert res.verified is True
+        assert (res.inserted, res.updated, res.skipped, res.errors,
+                res.source_count, res.target_count) == (0,) * 6
+
+
+def _catchup_target(spark, tmp_path):
+    from sync_cosmos_db_spark.streaming.incremental import (
+        incremental_migrate,
+    )
+
+    feed, out = str(tmp_path / "feed"), str(tmp_path / "bucketed")
+    spark.createDataFrame([(str(i), i) for i in range(20)],
+                          "id string, val long").coalesce(1).write \
+        .parquet(feed)
+    incremental_migrate(spark, feed, out, ["id"], "id string, val long",
+                        str(tmp_path / "ckpt"), n_buckets=4)
+    return out
+
+
+def test_footer_schema_equals_inferred(spark, account, tmp_path):
+    """``catalog.read_parquet`` plans with no job and yields Spark's
+    inferred schema and rows: for a Spark-written and a pyarrow-written
+    flat container, a struct-pk container, a Spark-written target and a
+    hive-partitioned catch-up target (whose ``__kb`` column is still
+    discovered from the paths)."""
+    src, tgt = account
+    arrow_flat = str(tmp_path / "arrow.parquet")
+    os.makedirs(arrow_flat)
+    pq.write_table(pa.table({
+        "id": ["a", "b"], "n": pa.array([1, 2], pa.int32()),
+        "addr": [{"city": "x", "zip": 1}, None],
+        "tags": [["p"], []],
+        "ts": pa.array([1, 2], pa.timestamp("us", tz="UTC"))}),
+        f"{arrow_flat}/part-00000.parquet")
+    db, c, _ = _nested_invalid(spark, src)
+    migrate_container_path(spark, src, tgt, "hr", "emp")
+    paths = {
+        "flat": catalog.container_data_path(src, "hr", "emp"),
+        "arrow_flat": arrow_flat,
+        "struct_pk": catalog.container_data_path(src, db, c),
+        "target": catalog.container_data_path(tgt, "hr", "emp"),
+        "catchup": _catchup_target(spark, tmp_path),
+    }
+    for name, path in paths.items():
+        inferred = spark.read.parquet(path)
+        read, jobs = _jobs_in(spark, lambda: catalog.read_parquet(spark, path))
+        assert jobs == 0, name
+        assert read.schema == inferred.schema, name
+        assert sorted(map(str, read.collect())) == \
+            sorted(map(str, inferred.collect())), name
+        assert catalog.footer_row_count(path) == inferred.count(), name
+    assert spark.read.parquet(paths["catchup"]).schema["__kb"].dataType \
+        .simpleString() == "int"
+
+    # a type Spark reads otherwise than Arrow (uint32 -> bigint) falls
+    # back to Spark's inference
+    unsigned = str(tmp_path / "unsigned.parquet")
+    os.makedirs(unsigned)
+    pq.write_table(pa.table({"u": pa.array([1, 2], pa.uint32())}),
+                   f"{unsigned}/part-00000.parquet")
+    assert catalog.footer_schema(unsigned) is None
+    assert catalog.read_parquet(spark, unsigned).schema == \
+        spark.read.parquet(unsigned).schema
