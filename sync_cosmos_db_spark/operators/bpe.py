@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sync_cosmos_db_spark.sources import catalog
+
 #: End-of-word marker, appended as a distinct symbol so merges can
 #: learn word-final units (the </w> convention from the BPE paper).
 EOW = "</w>"
@@ -147,7 +149,7 @@ def save_merges(spark: SparkSession,
 def load_merges(spark: SparkSession,
                 path: str) -> list[tuple[str, str, int]]:
     """Load a merge table saved by :func:`save_merges`, in rank order."""
-    rows = spark.read.parquet(path).orderBy("rank").collect()
+    rows = catalog.read_parquet(spark, path).orderBy("rank").collect()
     return [(r.a, r.b, r.pair_count) for r in rows]
 
 

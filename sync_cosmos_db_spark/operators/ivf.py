@@ -40,6 +40,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.operators.similarity import cosine
+from sync_cosmos_db_spark.sources import catalog
 
 
 def _collect_matrix(rows, vec_idx: int):
@@ -365,10 +366,10 @@ def load_index(spark, path: str, id_col: str = "vec_id",
     lazy partitioned scan."""
     import numpy as np
 
-    cent = (spark.read.parquet(f"{path}/centroids")
+    cent = (catalog.read_parquet(spark, f"{path}/centroids")
             .orderBy("cluster_id").collect())
     C = np.asarray([r.centroid for r in cent], dtype=np.float64)
-    assignments = spark.read.parquet(f"{path}/assignments")
+    assignments = catalog.read_parquet(spark, f"{path}/assignments")
     return C, assignments
 
 

@@ -49,7 +49,7 @@ def _cap_error(fn_name: str) -> ValueError:
 # sim_topk_bruteforce (round-4 verdict item 5). A plan whose underlying
 # files changed mid-process could reuse a stale verdict; the guard is a
 # scale-contract tripwire, not a correctness gate, so that trade is
-# acceptable (and load_table re-sniffs changed paths anyway).
+# acceptable (and load_table plans from the footers on disk each call).
 _QUERY_SET_COUNTS: dict[tuple, int] = {}
 
 

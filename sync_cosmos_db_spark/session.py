@@ -87,97 +87,16 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     ``src/migration.py:78-82``); in production the same call site uses
     the Cosmos Spark connector (see ``sources/cosmos.py``).
 
-    Two timestamp-encoding quirks are normalized here, because harness
-    regenerations have shipped both:
-
-    * TIMESTAMP(NANOS) columns (an older ``events`` table) are illegal
-      for Spark's vectorized reader; we read them as long nanos via the
-      legacy conf and rebuild a proper TIMESTAMP column. The testdata
-      has no sub-microsecond components, so the conversion is lossless.
-    * Untagged micros (isAdjustedToUTC=false) infer as TIMESTAMP_NTZ
-      on sessions with default confs — which breaks the strict epoch
-      functions (``unix_micros``) and diverges from the DuckDB oracle's
-      naive-timestamp handling. Since the correctness driver calls us
-      with ITS OWN session, we can't rely on ``get_spark``'s conf pin;
-      instead any NTZ column triggers a re-read with a user-pinned
-      schema (TimestampType), which bypasses NTZ inference and keeps
-      the stored micros as epoch micros, exactly like DuckDB.
-
-    The sniff (schema-inferring read + possible pinned re-read) runs
-    ONCE per path per process: the resolved read plan — pinned schema
-    plus which bigint columns need the nanos→timestamp rebuild — is
-    cached, so the common path is a single pinned-schema reader with no
-    inference job (round-3 ADVICE, session.py:108).
+    The read plans from the file footers with no Spark job
+    (``sources.catalog.read_parquet``) and pins every timestamp column
+    to TIMESTAMP: a caller may pass a session with Spark's default
+    confs, where untagged micros would infer as TIMESTAMP_NTZ, which
+    breaks the strict epoch functions (``unix_micros``) and diverges
+    from the DuckDB oracle. A TIMESTAMP(NANOS) column, which harness
+    regenerations have shipped, is rebuilt from its int64; the testdata
+    has no sub-microsecond components, so that is lossless.
     """
-    from pyspark.sql import functions as F
+    from sync_cosmos_db_spark.sources import catalog
 
-    path = f"{sf_dir}/{name}.parquet"
-    key = (path, _path_fingerprint(path))
-    plan = _READ_PLANS.get(key)
-    if plan is None:
-        plan = _sniff_read_plan(spark, path, name)
-        _READ_PLANS[key] = plan
-    pinned, nanos_cols = plan
-    df = spark.read.schema(pinned).parquet(path)
-    for c in nanos_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"{c} div 1000")))
-    return df
-
-
-# (path, mtime fingerprint) -> (pinned read schema, columns stored as
-# nanos-bigint that need the timestamp rebuild). StructTypes are
-# session-independent, so the cache is safe across the driver's own
-# sessions; keying on the fingerprint means a fixture REGENERATED at
-# the same path mid-process (different schema / timestamp encoding)
-# triggers a fresh sniff instead of reusing a stale pinned schema
-# (round-4 ADVICE, session.py:97).
-_READ_PLANS: dict[tuple, tuple] = {}
-
-
-def _path_fingerprint(path: str) -> int:
-    """Cheap local-path change detector: max mtime_ns over the parquet
-    file/dir and its direct children (a rewrite replaces part files).
-    Non-local or unstat-able paths (e.g. an object-store URI in
-    production) fingerprint as 0 — one sniff per process, the old
-    behavior, which is correct there because such paths are immutable
-    snapshots from this engine's perspective."""
-    import os
-
-    try:
-        st = os.stat(path)
-        fp = st.st_mtime_ns
-        if os.path.isdir(path):
-            for entry in os.scandir(path):
-                fp = max(fp, entry.stat().st_mtime_ns)
-        return fp
-    except OSError:
-        return 0
-
-
-def _sniff_read_plan(spark: SparkSession, path: str, name: str):
-    """One-time schema sniff for ``load_table`` (see its docstring)."""
-    from pyspark.sql import types as T
-
-    nanos_cols: list[str] = []
-    if name == "events":
-        prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong",
-                              "false")
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        try:
-            inferred = spark.read.parquet(path).schema
-        finally:
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
-        nanos_cols = [f.name for f in inferred.fields
-                      if f.name == "ts"
-                      and f.dataType.simpleString() == "bigint"]
-    else:
-        inferred = spark.read.parquet(path).schema
-
-    pinned = T.StructType([
-        T.StructField(
-            f.name,
-            T.TimestampType()
-            if f.dataType.simpleString() == "timestamp_ntz" else f.dataType,
-            f.nullable)
-        for f in inferred.fields])
-    return pinned, nanos_cols
+    return catalog.read_parquet(spark, f"{sf_dir}/{name}.parquet",
+                                prefer_timestamp_ntz=False)

@@ -30,6 +30,7 @@ from sync_cosmos_db_spark.migration import (
     ACTION_UPDATE,
     MigrationResult,
 )
+from sync_cosmos_db_spark.sources import catalog
 
 
 def write_actions_parquet(tagged: DataFrame, path: str) -> None:
@@ -101,7 +102,8 @@ def compact_parquet(spark, path: str, target_file_mb: int = 256) -> int:
                   for f in glob.glob(os.path.join(path, "**", "*.parquet"),
                                      recursive=True))
     n_files = max(1, round(n_bytes / (target_file_mb * 1024 * 1024)))
-    merge_to_parquet(spark.read.parquet(path).coalesce(n_files), path)
+    merge_to_parquet(catalog.read_parquet(spark, path).coalesce(n_files),
+                     path)
     return n_files
 
 

@@ -27,11 +27,23 @@ In production the same five operations are one-liners against the
 Cosmos Spark connector's catalog API (see ``sources/cosmos.py``); this
 module is the harness implementation with identical semantics.
 
-Container data is read through the Parquet footers first
-(:func:`footer_schema`, :func:`footer_row_count`, :func:`read_parquet`):
-the driver reads the schema and the row counts that every file's footer
-already records, so neither a read nor a verification launches a
-schema-inference or counting job.
+Every parquet read of the package goes through :func:`read_parquet`
+(harness tables through ``session.load_table``): the driver reads the
+schema and the row counts that every file's footer already records
+(:func:`footer_schema`, :func:`footer_row_count`), so neither a read
+nor a verification launches a schema-inference or counting job. Spark's
+inference runs only where the footer is not exact: unsigned integers,
+half floats, times, durations, INT96 and nested nanosecond timestamps,
+and paths pyarrow cannot list.
+
+Timestamps follow one policy. A top-level TIMESTAMP(NANOS) column, which
+Spark's reader rejects as a timestamp, is read as its int64 and rebuilt
+as ``timestamp_micros(ns div 1000)``, in any table and with no session
+conf changed. Untagged timestamps (``isAdjustedToUTC=false``) read as
+the session's inference reads them, unless the caller pins TIMESTAMP
+(``prefer_timestamp_ntz=False``): ``load_table`` does, so epoch
+functions such as ``unix_micros`` apply and the values match DuckDB's
+naive-timestamp handling under any caller's session.
 """
 
 from __future__ import annotations
@@ -150,13 +162,16 @@ def _hidden(name: str) -> bool:
             or (name.startswith("_") and "=" not in name))
 
 
-def _data_files(path: str):
-    """``(filesystem, sorted data-file paths)`` under the parquet
-    directory ``path``, as Spark's file index would list them."""
+def data_files(path: str):
+    """``(filesystem, sorted data-file paths)`` of the parquet path
+    ``path``, as Spark's file index would list them: a file lists
+    itself, a directory its non-hidden files at any depth."""
     import pyarrow.fs as pafs
 
     fs, root = pafs.FileSystem.from_uri(
         path if "://" in path else os.path.abspath(path))
+    if fs.get_file_info(root).type == pafs.FileType.File:
+        return fs, [root]
     infos = fs.get_file_info(pafs.FileSelector(root, recursive=True))
     files = sorted(
         i.path for i in infos
@@ -176,8 +191,9 @@ def _footer(fs, file: str):
 def _spark_reads_as_arrow(t) -> bool:
     """True when Spark reads the Parquet form of Arrow type ``t`` as the
     type ``from_arrow_schema`` gives it. Not so for nanosecond
-    timestamps (INT96 also reads as one), unsigned integers, half
-    floats, times and durations."""
+    timestamps (INT96 also reads as one; a top-level TIMESTAMP(NANOS)
+    column is planned as its int64, see :func:`footer_schema`), unsigned
+    integers, half floats, times and durations."""
     import pyarrow.types as pat
 
     if pat.is_struct(t):
@@ -198,26 +214,29 @@ def _spark_reads_as_arrow(t) -> bool:
         pat.is_decimal128))
 
 
-def footer_schema(path: str, prefer_timestamp_ntz: bool = False
-                  ) -> T.StructType | None:
-    """The Spark schema of the parquet directory ``path``, read on the
-    driver from the footer of its first data file — the file Spark's
-    own inference reads, but without the job that inference launches.
+def footer_schema(path: str, prefer_timestamp_ntz: bool = False):
+    """``(schema, nanosecond columns)`` to read the parquet path
+    ``path`` with, read on the driver from the footer of its first data
+    file — the file Spark's own inference reads, but without the job
+    that inference launches.
 
     A file written by Spark carries the writing schema in its footer,
     which is what Spark's reader uses. Any other file's Arrow schema is
     converted; ``prefer_timestamp_ntz`` is the session's
-    ``spark.sql.parquet.inferTimestampNTZ.enabled``. Returns ``None``
-    when the files cannot be listed, there is no data file, or a column
-    has a type Spark reads otherwise (:func:`_spark_reads_as_arrow`),
-    so the caller can fall back to Spark's inference. Hive partition
-    columns are not in the footer; Spark still discovers them from the
-    paths, and it reads every field as nullable, as it does an inferred
-    schema."""
+    ``spark.sql.parquet.inferTimestampNTZ.enabled``. A top-level
+    TIMESTAMP(NANOS) column is in the schema as ``bigint``, the int64
+    Spark reads it as, and named in the nanosecond columns for
+    :func:`read_parquet` to rebuild. Returns ``None`` when the path
+    cannot be listed, there is no data file, or a column has a type
+    Spark reads otherwise (:func:`_spark_reads_as_arrow`), so the caller
+    can fall back to Spark's inference. Hive partition columns are not
+    in the footer; Spark still discovers them from the paths, and it
+    reads every field as nullable, as it does an inferred schema."""
+    import pyarrow as pa
     from pyspark.sql.pandas.types import from_arrow_schema
 
     try:
-        fs, files = _data_files(path)
+        fs, files = data_files(path)
     except (OSError, ValueError, NotImplementedError):
         return None  # missing, or on a filesystem pyarrow cannot open
     if not files:
@@ -225,31 +244,62 @@ def footer_schema(path: str, prefer_timestamp_ntz: bool = False
     meta = _footer(fs, files[0])
     spark_json = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
     if spark_json is not None:
-        return T.StructType.fromJson(json.loads(spark_json))
+        return T.StructType.fromJson(json.loads(spark_json)), []
     arrow = meta.schema.to_arrow_schema()
+    nanos_leaves = {c.path for c in meta.schema
+                    if c.physical_type == "INT64"
+                    and c.logical_type.type == "TIMESTAMP"
+                    and json.loads(c.logical_type.to_json())["timeUnit"]
+                    == "nanoseconds"}
+    nanos = [f.name for f in arrow if f.name in nanos_leaves]
+    arrow = pa.schema([f.with_type(pa.int64()) if f.name in nanos else f
+                       for f in arrow])
     if not all(_spark_reads_as_arrow(f.type) for f in arrow):
         return None
-    return from_arrow_schema(arrow,
-                             prefer_timestamp_ntz=prefer_timestamp_ntz)
+    return from_arrow_schema(
+        arrow, prefer_timestamp_ntz=prefer_timestamp_ntz), nanos
 
 
 def footer_row_count(path: str) -> int:
     """Rows in the parquet directory ``path``: the sum of its data
     files' footer row counts — a read-back of what landed, with no
     Spark job."""
-    fs, files = _data_files(path)
+    fs, files = data_files(path)
     return sum(_footer(fs, f).num_rows for f in files)
 
 
-def read_parquet(spark, path: str, options: dict | None = None):
+def read_parquet(spark, path: str, options: dict | None = None,
+                 prefer_timestamp_ntz: bool | None = None):
     """``spark.read.parquet(path)`` with the schema taken from the
     footers (:func:`footer_schema`), so the read plans without a
     schema-inference job; falls back to inference only where the footer
-    schema is not exact."""
+    schema is not exact.
+
+    ``prefer_timestamp_ntz=None`` reads timestamps as Spark's inference
+    does under this session. ``False`` reads every top-level timestamp
+    column as TIMESTAMP, one Spark wrote as TIMESTAMP_NTZ too. Either
+    way a TIMESTAMP(NANOS) column is read as its int64 and rebuilt as
+    a TIMESTAMP of the nanoseconds divided by 1000."""
+    from pyspark.sql import functions as F
+
+    pin = prefer_timestamp_ntz is False
+    if prefer_timestamp_ntz is None:
+        prefer_timestamp_ntz = spark.conf.get(
+            "spark.sql.parquet.inferTimestampNTZ.enabled",
+            "true").lower() == "true"
     reader = spark.read.options(**(options or {}))
-    ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled",
-                         "true").lower() == "true"
-    schema = footer_schema(path, prefer_timestamp_ntz=ntz)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    plan = footer_schema(path, prefer_timestamp_ntz)
+    if plan is None:
+        if not pin:
+            return reader.parquet(path)
+        plan = reader.parquet(path).schema, []
+    schema, nanos = plan
+    if pin:
+        schema = T.StructType([
+            T.StructField(f.name, T.TimestampType(), f.nullable)
+            if isinstance(f.dataType, T.TimestampNTZType) else f
+            for f in schema])
+    df = reader.schema(schema).parquet(path)
+    for c in nanos:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return df

@@ -53,6 +53,7 @@ from sync_cosmos_db_spark.protobuf_shim import (
     rebuild_tws_processor,
 )
 from sync_cosmos_db_spark.session import register_pickle_by_value
+from sync_cosmos_db_spark.sources import catalog
 from sync_cosmos_db_spark.streaming.windows import (
     DEFAULT_WATERMARK,
     run_foreach_batch,
@@ -174,7 +175,7 @@ def _versioned_step(state_dir: str, versions: dict[int, str], merge):
 
     def step(batch_df: DataFrame, batch_id: int) -> None:
         prior = [versions[b] for b in sorted(versions) if b < batch_id]
-        prev = (batch_df.sparkSession.read.parquet(prior[-1])
+        prev = (catalog.read_parquet(batch_df.sparkSession, prior[-1])
                 if prior else None)
         out = os.path.join(state_dir, f"v{batch_id:020d}")
         merge(batch_df, prev).write.mode("overwrite").parquet(out)
@@ -289,7 +290,7 @@ def run_changelog_compaction(changes: DataFrame, state_dir: str,
         changes, state_dir,
         lambda v: make_compaction_merge_batch(state_dir, keys, seq_col,
                                               op_col, v))
-    return changes.sparkSession.read.parquet(paths[-1])
+    return catalog.read_parquet(changes.sparkSession, paths[-1])
 
 
 # ---------------------------------------------------------------------------
@@ -414,8 +415,9 @@ def run_rate_limit_batchmerge(events_stream: DataFrame, state_dir: str,
     paths = _run_versions(
         events_stream, state_dir,
         lambda v: make_rate_limit_merge_batch(state_dir, limit, v))
-    return rate_limit_window_totals(
-        events_stream.sparkSession.read.parquet(*paths))
+    spark = events_stream.sparkSession
+    schema = catalog.read_parquet(spark, paths[-1]).schema
+    return rate_limit_window_totals(spark.read.schema(schema).parquet(*paths))
 
 
 # ---------------------------------------------------------------------------

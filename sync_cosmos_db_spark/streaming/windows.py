@@ -26,6 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.queries import fround, fsum
+from sync_cosmos_db_spark.sources import catalog
 
 #: Watermark delay used by the streaming forms — how much event-time
 #: lateness we absorb before dropping (state-size vs completeness trade).
@@ -86,30 +87,25 @@ def session_counts(events: DataFrame, gap: str = "5 minutes",
 # ---------------------------------------------------------------------------
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the harness events parquet.
+    """File-source stream over the events parquet files under ``sf_dir``.
 
-    The harness has shipped two physical encodings for ``ts`` across
-    regenerations — TIMESTAMP(NANOS), which Spark's vectorized reader
-    rejects outright, and untagged TIMESTAMP(MICROS), which infers as
-    TIMESTAMP_NTZ on default sessions (breaking strict epoch
-    functions).  Both normalize through the same path: read the
-    physical int64 as ``bigint`` (driver-side footer sniff picks the
-    unit) and rebuild an absolute TIMESTAMP from epoch micros,
-    mirroring session.load_table."""
-    import glob as _glob
-
+    ``ts`` is read as its physical int64 (``bigint``) and rebuilt as an
+    absolute TIMESTAMP from the unit its footers record: harness
+    regenerations have shipped TIMESTAMP(NANOS), untagged
+    TIMESTAMP(MICROS) and raw int64 nanos. Every data file
+    (``sources.catalog.data_files``) with a readable ``ts`` must agree
+    on the unit; mixed units, no readable ``ts``, a ``ts`` that is not a
+    timestamp or int64, or a unit other than ns/us/ms raise
+    ``ValueError`` rather than mis-decode timestamps by 1000x."""
     import pyarrow as _pa
     import pyarrow.parquet as _pq
 
-    # Sniff EVERY file's footer and require agreement: a mixed-encoding
-    # directory (or one whose first file is unreadable) must fail loudly
-    # rather than mis-decode timestamps by 1000x (round-3 ADVICE,
-    # windows.py:103).
+    fs, files = catalog.data_files(sf_dir)
     units: set[str] = set()
-    for f in sorted(_glob.glob(f"{sf_dir}/*.parquet")):
+    for f in files:
         try:
-            t = _pq.read_schema(f).field("ts").type
-        except (KeyError, OSError):  # no ts field / unreadable footer
+            t = _pq.read_schema(f, filesystem=fs).field("ts").type
+        except (KeyError, OSError, ValueError):  # no ts / not parquet
             continue
         if _pa.types.is_timestamp(t):
             units.add(t.unit)
@@ -140,13 +136,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         rebuild = F.timestamp_micros(F.expr(f"ts div {div}"))
     schema = ("event_id bigint, ts bigint, user_id bigint, "
               "event_type string, value double, props string")
-    prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", "false")
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    try:
-        raw = (spark.readStream.schema(schema)
-               .parquet(f"{sf_dir}"))
-    finally:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
+    raw = spark.readStream.schema(schema).parquet(sf_dir)
     return raw.withColumn("ts", rebuild)
 
 

@@ -4,6 +4,7 @@ SURVEY.md §5.2 — known insert/update/skip/error composition."""
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 import pytest
@@ -218,3 +219,24 @@ def test_container_migration_is_one_observed_pass():
                 if isinstance(n, ast.Attribute) and n.attr == "exceptAll"]
     assert len([c for c in _calls(funcs["verify_migration"], "count")
                 if not c.args]) == 2
+
+
+def test_parquet_reads_plan_from_footers():
+    """Outside ``sources/catalog.py`` and the query modules every
+    ``read.parquet(`` carries ``.schema(`` (reads go through
+    ``catalog.read_parquet``), and no package module names the
+    session-global ``nanosAsLong`` conf."""
+    inferred, nanos = [], []
+    for path in sorted(PKG.rglob("*.py")):
+        rel = path.relative_to(PKG).as_posix()
+        src = path.read_text()
+        if "nanosAsLong" in src:
+            nanos.append(rel)
+        if rel == "sources/catalog.py" or re.fullmatch(r"queries\w*\.py",
+                                                        rel):
+            continue
+        inferred += [f"{rel}:{c.lineno}"
+                     for c in _calls(ast.parse(src), "parquet")
+                     if {"read", "readStream"} & set(_chain(c))
+                     and "schema" not in _chain(c)]
+    assert not inferred and not nanos, (inferred, nanos)

@@ -544,3 +544,71 @@ def test_footer_schema_equals_inferred(spark, account, tmp_path):
     assert catalog.footer_schema(unsigned) is None
     assert catalog.read_parquet(spark, unsigned).schema == \
         spark.read.parquet(unsigned).schema
+
+
+def test_footer_schema_of_a_single_file(spark, tmp_path):
+    """A parquet path that is one file plans from its own footer: the
+    footer schema is Spark's inferred schema, and the read runs no
+    job."""
+    path = str(tmp_path / "one.parquet")
+    pq.write_table(pa.table({
+        "id": ["a", "b"], "n": pa.array([1, 2], pa.int32()),
+        "ts": pa.array([1, 2], pa.timestamp("us", tz="UTC"))}), path)
+    inferred = spark.read.parquet(path).schema
+    assert catalog.footer_schema(path) == (inferred, [])
+    read, jobs = _jobs_in(spark, lambda: catalog.read_parquet(spark, path))
+    assert jobs == 0 and read.schema == inferred
+
+
+@pytest.mark.parametrize("name", ["events", "other"])
+def test_load_table_reads_nanosecond_timestamps(spark, tmp_path, name):
+    """A TIMESTAMP(NANOS) column reads as TIMESTAMP in any table, with
+    the epoch micros of its nanoseconds divided by 1000."""
+    from pyspark.sql import functions as F
+    from pyspark.sql import types as T
+
+    from sync_cosmos_db_spark.session import load_table
+
+    ns = [1_700_000_000_123_456_789, 1_600_000_000_000_000_999, None]
+    pq.write_table(pa.table({"id": [1, 2, 3],
+                             "ts": pa.array(ns, pa.timestamp("ns"))}),
+                   str(tmp_path / f"{name}.parquet"))
+    df = load_table(spark, str(tmp_path), name)
+    assert df.schema["ts"].dataType == T.TimestampType()
+    got = dict(df.select("id", F.unix_micros("ts")).collect())
+    assert got == {1: ns[0] // 1000, 2: ns[1] // 1000, 3: None}
+
+
+def test_load_table_plans_from_footers(spark, sf_dir):
+    """Every harness table plans from its footer under Spark's default
+    ``inferTimestampNTZ=true``: no Spark job, and the
+    schema of Spark's inference with TIMESTAMP_NTZ pinned to
+    TIMESTAMP."""
+    import glob
+
+    from pyspark.sql import types as T
+
+    from sync_cosmos_db_spark.session import load_table
+
+    key = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        names = [os.path.basename(p)[: -len(".parquet")]
+                 for p in sorted(glob.glob(f"{sf_dir}/*.parquet"))]
+        assert len(names) == 10
+        n_pinned = 0
+        for name in names:
+            inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+            pinned = T.StructType([
+                T.StructField(f.name, T.TimestampType(), f.nullable)
+                if isinstance(f.dataType, T.TimestampNTZType) else f
+                for f in inferred])
+            n_pinned += pinned != inferred
+            df, jobs = _jobs_in(spark,
+                                lambda: load_table(spark, sf_dir, name))
+            assert jobs == 0, name
+            assert df.schema.json() == pinned.json(), name
+        assert n_pinned > 0  # the NTZ pin was exercised
+    finally:
+        spark.conf.set(key, prev)

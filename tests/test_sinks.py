@@ -44,10 +44,9 @@ def test_compact_parquet_preserves_data(spark, sf_dir, tmp_path):
 
 
 def test_load_table_replans_after_fixture_rewrite(spark, tmp_path):
-    """round-4 ADVICE (session.py:97): the cached read plan must be
-    keyed on the path's content fingerprint — rewriting a fixture at
-    the same path with a different schema must trigger a fresh sniff,
-    not reuse the stale pinned schema."""
+    """Rewriting a fixture at the same path with a different schema
+    must be read with the new schema: every call plans from the
+    footers on disk, never from a stale plan of the old files."""
     import time
 
     from sync_cosmos_db_spark.session import load_table
