@@ -415,10 +415,14 @@ SWEEP_PRIORITY: list[str] = []
 # round (round-10 verdict item 2): a green driver row OLDER than the
 # edit round is pre-edit evidence and must be re-verified ahead of the
 # ordinary staleness rotation.  Maintained by hand when editing a
-# query; `tools/edited_queries.py` recomputes the direct-edit set from
-# `git diff` against the last round boundary, and
-# tests/test_oracle.py::test_edited_queries_registered trips if an
-# edit lands without an entry here.  The round-10 backfill below is
+# query; `tools/edited_queries.py` lists the queries whose fingerprint
+# (code without docstrings or imports, oracle SQL, and the query-module
+# helpers and constants it reaches) differs from the last round
+# boundary, so a pure move between query modules needs no entry, and
+# tests/test_oracle.py::test_edited_queries_registered trips if such a
+# query lands without an entry here.  Edits under operators/,
+# streaming/ or session.py are not attributed by the tool and still
+# need a hand entry.  The round-10 backfill below is
 # the tool's output for `git diff c7fdf62..` (the fsum reorder-proof
 # sum conversions and TPC-H integer-cent snaps) plus the queries the
 # AST tool cannot attribute because their edit lives in a shared
@@ -593,6 +597,17 @@ EDITED_ROUND.update(dict.fromkeys(
      "rate_limit_hourly", "stream_rate_limit_hourly",
      "stream_rate_limit_hourly_batchmerge", "stream_rate_limit_hourly_tws"],
     19))
+# The events-stream queries moved to queries_streaming and read
+# events.parquet directly (read_events_stream takes a file path); the
+# top-k queries moved to queries_similarity onto one oracle builder and
+# one inputs helper.  Results bit-identical.
+EDITED_ROUND.update(dict.fromkeys(
+    ["stream_stateful_user_totals", "stream_dedup_events",
+     "stream_interval_join_attribution", "stream_interval_left_outer",
+     "stream_enrich_segment", "stream_ohlc_hourly",
+     "sim_topk_bruteforce", "sim_topk_vectorized", "sim_topk_lsh",
+     "sim_topk_ivf_fullprobe", "sim_topk_ivf", "sim_topk_ivf_persisted",
+     "sim_topk_lsh_fullcollide"], 19))
 
 # Round-17 no-entry decisions: graph.py's caller-cache detection fix
 # (storageLevel instead of is_cached) changes NOTHING for the
@@ -863,7 +878,7 @@ def _register_all() -> None:
         queries_relational, queries_llm, queries_infra, queries_tpch2,
         queries_pipeline, queries_analytics, queries_scale, queries_r4,
         queries_r5, queries_r6, queries_r7, queries_r8, queries_r9,
-        queries_r11, queries_streaming,
+        queries_r11, queries_streaming, queries_similarity,
     )
 
 

@@ -481,44 +481,6 @@ def session_stats_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
                  .alias("duration_us")))
 
 
-@query(
-    "stream_enrich_segment",
-    """
-    SELECT c.c_mktsegment AS segment, count(*)::BIGINT AS n_events,
-           sum(floor(e.value * 100 + 0.5)::BIGINT) / 100.0 AS sum_value
-    FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
-    GROUP BY c.c_mktsegment
-    """,
-)
-def stream_enrich_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static enrichment (streaming/windows.enrich_stream): the
-    events STREAM left-joins the broadcast customer dimension per
-    micro-batch (stateless, no stream shuffle), then aggregates per
-    market segment.  Executed as a real availableNow stream into a
-    memory sink; the oracle recomputes the join + aggregate in batch
-    SQL."""
-    import uuid
-
-    from sync_cosmos_db_spark.streaming import windows as SW
-
-    # the file-source stream scans a DIRECTORY; expose only events.parquet
-    d = tempfile.mkdtemp(prefix="enrich_stream_")
-    os.symlink(os.path.join(sf_dir, "events.parquet"),
-               os.path.join(d, "events.parquet"))
-    src = SW.read_events_stream(spark, d)
-    cust = load_table(spark, sf_dir, "customer")
-    dim = cust.select(F.col("c_custkey").alias("user_id"),
-                      F.col("c_mktsegment").alias("segment"))
-    enriched = SW.enrich_stream(src, dim, "user_id")
-    agg = (enriched.groupBy("segment")
-           .agg(F.count("*").cast("long").alias("n_events"),
-                (F.sum(F.floor(F.col("value") * 100
-                               + F.lit(0.5)).cast("long")) / 100.0)
-                .alias("sum_value")))
-    return SW.run_stream_to_memory(
-        spark, agg, f"enrich_mem_{uuid.uuid4().hex[:8]}", mode="complete")
-
-
 # ---------------------------------------------------------------------------
 # Weighted sampling (curation.weighted_sample_k) + parquet compaction
 # ---------------------------------------------------------------------------

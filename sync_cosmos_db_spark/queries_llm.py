@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.operators import dedup as D
-from sync_cosmos_db_spark.operators import ivf as IVF
 from sync_cosmos_db_spark.operators import multimodal as M
 from sync_cosmos_db_spark.operators import similarity as S
 from sync_cosmos_db_spark.operators import text as X
@@ -274,121 +273,6 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# X3/X4 — similarity search
-# ---------------------------------------------------------------------------
-
-@query(
-    "sim_topk_bruteforce",
-    """
-    WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-               FROM embeddings WHERE vec_id % 50 = 0),
-    scored AS (
-      SELECT q.query_id, c.vec_id AS neighbor_id,
-             list_cosine_similarity(q.qv, c.embedding::DOUBLE[]) AS cs
-      FROM q JOIN embeddings c ON c.vec_id <> q.query_id
-    ), ranked AS (
-      SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cs DESC, neighbor_id) AS rank,
-             floor((cs) * 10000 + 0.5) / 10000 AS cosine_sim
-      FROM scored)
-    SELECT query_id, neighbor_id, rank, cosine_sim FROM ranked WHERE rank <= 3
-    """,
-)
-def sim_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3/X4 exact ANN baseline: brute-force cosine top-3 for every
-    query vector (vec_id % 50 == 0). Corpus scanned once, queries
-    broadcast, ranking window per query."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.brute_force_topk(emb, queries, k=3)
-
-
-@query(
-    "sim_topk_vectorized",
-    """
-    WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-               FROM embeddings WHERE vec_id % 50 = 0),
-    scored AS (
-      SELECT q.query_id, c.vec_id AS neighbor_id,
-             floor((list_cosine_similarity(q.qv, c.embedding::DOUBLE[]))
-                   * 1000000 + 0.5) / 1000000 AS cs
-      FROM q JOIN embeddings c ON c.vec_id <> q.query_id
-    ), ranked AS (
-      SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cs DESC, neighbor_id) AS rank,
-             floor((cs) * 10000 + 0.5) / 10000 AS cosine_sim
-      FROM scored)
-    SELECT query_id, neighbor_id, rank, cosine_sim FROM ranked WHERE rank <= 3
-    """,
-)
-def sim_topk_vectorized(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X3/X4 hot path: the same exact top-3 as sim_topk_bruteforce but
-    scored with one BLAS matmul per Arrow batch (mapInPandas) and a
-    per-partition local top-k before the global ranking window — the
-    shuffle carries k·partitions rows per query, not the corpus. Scores
-    rounded to 6 decimals pre-rank on both engines so summation-order
-    ulps can't flip ranks."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.brute_force_topk_vectorized(emb, queries, k=3)
-
-
-@query("sim_topk_lsh")  # approx — rows-only check; recall tested in pytest
-def sim_topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 scale path: seeded random-hyperplane LSH (4 tables × 10 bits),
-    scoring only bucket-collided pairs."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.lsh_topk(emb, queries, dim=64, k=3, n_planes=10, n_tables=4)
-
-
-@query(
-    "sim_topk_ivf_fullprobe",
-    """
-    WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-               FROM embeddings WHERE vec_id % 50 = 0),
-    scored AS (
-      SELECT q.query_id, c.vec_id AS neighbor_id,
-             floor((list_cosine_similarity(q.qv, c.embedding::DOUBLE[]))
-                   * 1000000 + 0.5) / 1000000 AS cs
-      FROM q JOIN embeddings c ON c.vec_id <> q.query_id
-    ), ranked AS (
-      SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cs DESC, neighbor_id) AS rank,
-             floor((cs) * 10000 + 0.5) / 10000 AS cosine_sim
-      FROM scored)
-    SELECT query_id, neighbor_id, rank, cosine_sim FROM ranked WHERE rank <= 3
-    """,
-)
-def sim_topk_ivf_fullprobe(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 IVF pipeline, hash-checked end to end: spherical-k-means train
-    (deterministic xxhash64 init), cluster assignment, probe, equi-join
-    on cluster_id, score, rank — with ``nprobe == n_clusters`` every
-    pair is scored, so the result must be BIT-IDENTICAL to the exact
-    brute-force oracle no matter how training converged. The oracle is
-    the same SQL as ``sim_topk_vectorized``; what it verifies here is
-    the IVF plumbing (no pair lost or duplicated by the cluster join)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return IVF.ivf_topk(emb, queries, dim=64, k=3, n_clusters=8,
-                        nprobe=8, iters=3)
-
-
-@query("sim_topk_ivf")  # approx — rows-only check; recall tested in pytest
-def sim_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X4 IVF production setting: probe the 4 nearest of 16 learned
-    clusters per query — candidate volume ≈ corpus/4, shuffled on
-    cluster_id only. Recall vs the exact path is pytest-asserted."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return IVF.ivf_topk(emb, queries, dim=64, k=3, n_clusters=16,
-                        nprobe=4, iters=3)
-
-
-# ---------------------------------------------------------------------------
 # X6 — text analysis
 # ---------------------------------------------------------------------------
 
@@ -595,70 +479,6 @@ def events_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     native session_window vs the gaps-and-islands oracle."""
     ev = load_table(spark, sf_dir, "events")
     return SW.session_counts(ev, "5 minutes", "user_id")
-
-
-@query(
-    "stream_stateful_user_totals",
-    """
-    SELECT user_id, count(*) AS n_events,
-           sum(floor(value * 100 + 0.5)::BIGINT) / 100.0 AS sum_value
-    FROM events GROUP BY user_id
-    """,
-)
-def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X7: custom stateful streaming operator — per-user running totals
-    via ``applyInPandasWithState``, executed as a real streaming query
-    (availableNow trigger, memory sink, update mode). The LAST emission
-    per key is the final state, which must equal the batch aggregate the
-    oracle computes."""
-    import os
-    import tempfile
-    import uuid
-
-    from pyspark.sql import Window as W
-
-    from sync_cosmos_db_spark.streaming.stateful import running_user_totals
-
-    d = tempfile.mkdtemp(prefix="events_stream_")
-    os.symlink(os.path.join(sf_dir, "events.parquet"),
-               os.path.join(d, "events.parquet"))
-    src = SW.read_events_stream(spark, d)
-    mem = SW.run_stream_to_memory(
-        spark, running_user_totals(src),
-        f"stateful_mem_{uuid.uuid4().hex[:8]}", mode="update")
-    w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
-    return (mem.withColumn("__rn", F.row_number().over(w))
-            .filter(F.col("__rn") == 1)
-            .select("user_id", "n_events",
-                    fround("sum_value", 2).alias("sum_value")))
-
-
-@query(
-    "stream_dedup_events",
-    """
-    SELECT event_id, user_id, event_type, value FROM events
-    """,
-)
-def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X7/X1: streaming exact dedup — the events stream UNIONED WITH
-    ITSELF (every row arrives twice) flows through
-    ``dropDuplicatesWithinWatermark`` keyed on event_id; the output must
-    be exactly the original table, which the oracle reads directly.
-    Duplicate copies are identical rows, so the emitted set is
-    deterministic regardless of which copy wins the state race."""
-    import os
-    import tempfile
-    import uuid
-
-    d = tempfile.mkdtemp(prefix="events_dedup_stream_")
-    os.symlink(os.path.join(sf_dir, "events.parquet"),
-               os.path.join(d, "events.parquet"))
-    src = SW.read_events_stream(spark, d)
-    doubled = src.unionByName(src)
-    deduped = SW.dedup_stream(doubled).select(
-        "event_id", "user_id", "event_type", "value")
-    return SW.run_stream_to_memory(
-        spark, deduped, f"dedup_mem_{uuid.uuid4().hex[:8]}", mode="append")
 
 
 # ---------------------------------------------------------------------------
@@ -1638,50 +1458,3 @@ def text_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     return X.unigram_logprob_profile(docs, id_col="doc_id",
                                      text_col="text")
-
-
-@query(
-    "stream_interval_join_attribution",
-    """
-    SELECT p.event_id AS purchase_id, c.event_id AS click_id,
-           p.user_id,
-           (epoch_us(p.ts) - epoch_us(c.ts))::BIGINT AS lag_us
-    FROM events p JOIN events c
-      ON p.event_type = 'purchase' AND c.event_type = 'click'
-     AND c.user_id = p.user_id
-     AND c.ts BETWEEN p.ts - INTERVAL '1 hour' AND p.ts
-    """,
-)
-def stream_interval_join_attribution(spark: SparkSession,
-                                     sf_dir: str) -> DataFrame:
-    """X7/A1: stream-stream interval join executed as a REAL streaming
-    query (availableNow trigger, memory sink, append mode): every
-    purchase joins the same user's clicks from the preceding hour —
-    the attribution pipeline shape. Watermarks on both sides plus the
-    two-sided time bound give Spark evictable join state (bounded by
-    the lookback + watermark horizon, not the stream length). The
-    oracle recomputes the join in batch SQL; results must match
-    exactly."""
-    import os
-    import tempfile
-    import uuid
-
-    d = tempfile.mkdtemp(prefix="events_ivj_stream_")
-    os.symlink(os.path.join(sf_dir, "events.parquet"),
-               os.path.join(d, "events.parquet"))
-    src = SW.read_events_stream(spark, d)
-    purchases = (src.filter(F.col("event_type") == "purchase")
-                 .select(F.col("event_id").alias("purchase_id"),
-                         F.col("ts").alias("p_ts"), "user_id"))
-    clicks = (src.filter(F.col("event_type") == "click")
-              .select(F.col("event_id").alias("click_id"),
-                      F.col("ts").alias("c_ts"), "user_id"))
-    joined = SW.interval_join_stream(
-        purchases, clicks, key="user_id",
-        left_ts="p_ts", right_ts="c_ts", lookback="1 hour")
-    out = joined.select(
-        "purchase_id", "click_id", "user_id",
-        (F.unix_micros("p_ts") - F.unix_micros("c_ts"))
-        .cast("bigint").alias("lag_us"))
-    return SW.run_stream_to_memory(
-        spark, out, f"ivj_mem_{uuid.uuid4().hex[:8]}", mode="append")

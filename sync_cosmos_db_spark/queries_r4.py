@@ -1,12 +1,11 @@
 """Round-4 extension queries (X54-X71): link
 extraction, HTML boilerplate strip, sentence-aware chunking,
 quality-ranked per-source caps, exact set-similarity join, reciprocal-
-rank fusion, stream-stream left-outer interval join, per-group heavy
-hitters, the end-to-end web curation pipeline, pairwise association
-rules, common-prefix boilerplate detection, deterministic k-fold
-splits, BPE artifact persistence + corpus encoding, ingest anomaly
-detection, mixed-language detection, IVF index persistence, the
-dimension-truncation recall probe, and epoch-weighted oversampling.
+rank fusion, per-group heavy hitters, the end-to-end web curation
+pipeline, pairwise association rules, common-prefix boilerplate
+detection, deterministic k-fold splits, BPE artifact persistence +
+corpus encoding, ingest anomaly detection, mixed-language detection,
+the dimension-truncation recall probe, and epoch-weighted oversampling.
 
 Every query is oracle-checked (hash-compared against DuckDB at sf0.01)
 and registers AFTER the round-4 sweep window — they queue for the
@@ -338,67 +337,6 @@ def rrf_hybrid_rankings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# X60 — stream-stream LEFT OUTER interval join (streaming/windows.py)
-# ---------------------------------------------------------------------------
-
-@query(
-    "stream_interval_left_outer",
-    """
-    WITH p AS (SELECT event_id AS purchase_id, ts AS p_ts, user_id
-               FROM events WHERE event_type = 'purchase'),
-    c AS (SELECT event_id AS click_id, ts AS c_ts, user_id
-          FROM events WHERE event_type = 'click'),
-    m AS (SELECT max(ts) AS mx FROM events)
-    SELECT p.purchase_id, p.user_id, c.click_id,
-           c.click_id IS NOT NULL AS matched
-    FROM p
-    LEFT JOIN c ON c.user_id = p.user_id
-               AND c.c_ts BETWEEN p.p_ts - INTERVAL '1 hour' AND p.p_ts
-    WHERE p.p_ts <= (SELECT mx FROM m) - INTERVAL '2 hours'
-    """,
-)
-def stream_interval_left_outer(spark: SparkSession,
-                               sf_dir: str) -> DataFrame:
-    """X60 — stream-stream LEFT OUTER interval join as a REAL streaming
-    query: purchases with no click in the preceding hour survive with
-    NULL click — the "unattributed conversions" shape an inner join
-    silently drops.  Outer rows only emit once the watermark proves no
-    match can arrive, so both sides restrict to purchases at least
-    2 h older than the stream's final event (watermark 30 min +
-    lookback 1 h + margin) — inside that region streaming output equals
-    the batch left join EXACTLY, and the oracle hash-checks it."""
-    import os
-    import tempfile
-    import uuid
-
-    from sync_cosmos_db_spark.streaming import windows as SW
-
-    d = tempfile.mkdtemp(prefix="events_ivj_outer_")
-    os.symlink(os.path.join(sf_dir, "events.parquet"),
-               os.path.join(d, "events.parquet"))
-    src = SW.read_events_stream(spark, d)
-    purchases = (src.filter(F.col("event_type") == "purchase")
-                 .select(F.col("event_id").alias("purchase_id"),
-                         F.col("ts").alias("p_ts"), "user_id"))
-    clicks = (src.filter(F.col("event_type") == "click")
-              .select(F.col("event_id").alias("click_id"),
-                      F.col("ts").alias("c_ts"), "user_id"))
-    joined = SW.interval_join_stream(
-        purchases, clicks, key="user_id",
-        left_ts="p_ts", right_ts="c_ts", lookback="1 hour",
-        watermark="30 minutes", how="left_outer")
-    streamed = SW.run_stream_to_memory(
-        spark, joined.select("purchase_id", "user_id", "click_id",
-                             F.col("click_id").isNotNull().alias("matched"),
-                             "p_ts"),
-        f"ivj_outer_mem_{uuid.uuid4().hex[:8]}", mode="append")
-    mx = load_table(spark, sf_dir, "events").agg(F.max("ts")).first()[0]
-    return (streamed
-            .filter(F.col("p_ts") <= F.lit(mx) - F.expr("INTERVAL 2 hours"))
-            .drop("p_ts"))
-
-
-# ---------------------------------------------------------------------------
 # X61 — per-group heavy hitters (operators/sketches.py)
 # ---------------------------------------------------------------------------
 
@@ -606,50 +544,6 @@ def boilerplate_prefix_by_source(spark: SparkSession,
         F.concat(F.lit("SITE "), F.col("source"), F.lit(" HEADER | "),
                  F.col("text")).alias("t"))
     return common_prefix_by_group(corpus, "source", "t")
-
-
-# ---------------------------------------------------------------------------
-# X65 — IVF index persistence (operators/ivf.py save/load/probe)
-# ---------------------------------------------------------------------------
-
-_IVF_EXACT_ORACLE = """
-    WITH q AS (SELECT vec_id AS query_id, embedding::DOUBLE[] AS qv
-               FROM embeddings WHERE vec_id % 50 = 0),
-    scored AS (
-      SELECT q.query_id, c.vec_id AS neighbor_id,
-             floor((list_cosine_similarity(q.qv, c.embedding::DOUBLE[]))
-                   * 1000000 + 0.5) / 1000000 AS cs
-      FROM q JOIN embeddings c ON c.vec_id <> q.query_id
-    ), ranked AS (
-      SELECT query_id, neighbor_id,
-             row_number() OVER (PARTITION BY query_id
-                                ORDER BY cs DESC, neighbor_id) AS rank,
-             floor((cs) * 10000 + 0.5) / 10000 AS cosine_sim
-      FROM scored)
-    SELECT query_id, neighbor_id, rank, cosine_sim FROM ranked
-    WHERE rank <= 3
-"""
-
-
-@query("sim_topk_ivf_persisted", _IVF_EXACT_ORACLE)
-def sim_topk_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X65 — IVF index persistence round-trip, hash-checked end to end:
-    train → save (centroids + hive-partitioned assignments) → LOAD →
-    full-probe.  With nprobe == n_clusters the served result must be
-    bit-identical to the exact brute-force oracle, so the hash check
-    proves the whole save/load path loses and duplicates nothing; the
-    partitioned layout is what lets nprobe < k prune unread clusters
-    at the FILE level in production."""
-    import tempfile
-
-    from sync_cosmos_db_spark.operators import ivf as IVF
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    cents = IVF.train_centroids(emb, dim=64, n_clusters=8, iters=3)
-    path = tempfile.mkdtemp(prefix="ivf_index_")
-    IVF.save_index(emb, cents, path)
-    return IVF.ivf_topk_from_index(spark, path, queries, k=3, nprobe=8)
 
 
 # ---------------------------------------------------------------------------

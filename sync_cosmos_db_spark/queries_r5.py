@@ -1837,52 +1837,6 @@ def category_index_documents(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# X110 — streaming OHLC bars (streaming/windows.py)
-# ---------------------------------------------------------------------------
-
-@query(
-    "stream_ohlc_hourly",
-    """
-    WITH b AS (
-      SELECT event_type,
-             epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT
-               AS window_start,
-             value, {'t': ts, 'v': value} AS tv
-      FROM events)
-    SELECT window_start, event_type, count(*)::BIGINT AS n,
-           floor((min(tv)).v * 10000 + 0.5) / 10000 AS open,
-           floor(max(value) * 10000 + 0.5) / 10000 AS high,
-           floor(min(value) * 10000 + 0.5) / 10000 AS low,
-           floor((max(tv)).v * 10000 + 0.5) / 10000 AS close
-    FROM b GROUP BY window_start, event_type
-    """,
-)
-def stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X110 — streaming OHLC (``streaming.windows.ohlc_stream``): a
-    REAL availableNow file stream over the events table aggregates
-    hourly bars per event_type; min/max over a (ts, value) struct is
-    an ordinary mergeable aggregate, so per-bar state is constant and
-    the watermark bounds open bars.  With the full table replayed and
-    complete output, the bars must equal the batch computation — the
-    oracle — exactly."""
-    import uuid
-
-    from sync_cosmos_db_spark.streaming import windows as SW
-
-    src = SW.read_events_stream(spark, sf_dir)
-    bars = SW.ohlc_stream(src, "1 hour")
-    out = SW.run_stream_to_memory(
-        spark, bars, f"ohlc_mem_{uuid.uuid4().hex[:8]}", mode="complete")
-    p = 10 ** 4
-    fr = lambda c: F.floor(c * p + F.lit(0.5)) / p  # noqa: E731
-    return out.select("window_start", "event_type", "n",
-                      fr(F.col("open")).alias("open"),
-                      fr(F.col("high")).alias("high"),
-                      fr(F.col("low")).alias("low"),
-                      fr(F.col("close")).alias("close"))
-
-
-# ---------------------------------------------------------------------------
 # X111 — Poisson-bootstrap confidence interval (operators/profiling.py)
 # ---------------------------------------------------------------------------
 

@@ -63,37 +63,8 @@ def dedup_simhash_containment(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------------
-# Round-9 invariant twins (round-8 verdict item 4): the two remaining
-# twin-less rows-only queries get hash-checked invariants.
+# X8 — sketch-bounds twin of the rows-only sketch_profile
 # ---------------------------------------------------------------------------
-
-def _vectorized_oracle() -> str:
-    """The exact brute-force top-k oracle, shared verbatim with
-    ``sim_topk_vectorized`` so the two stay in lockstep."""
-    from sync_cosmos_db_spark import queries_llm  # noqa: F401 — registers it
-    from sync_cosmos_db_spark.queries import ORACLE_SQL
-
-    return ORACLE_SQL["sim_topk_vectorized"]
-
-
-@query("sim_topk_lsh_fullcollide", _vectorized_oracle())
-def sim_topk_lsh_fullcollide(spark: SparkSession,
-                             sf_dir: str) -> DataFrame:
-    """X4 BRP-LSH invariant, hash-checkable — the IVF ``fullprobe``
-    trick applied to the LSH pipeline: with ``n_planes=0`` every vector
-    lands in bucket 0, the candidate join degenerates to ALL pairs, and
-    the approximate pipeline must therefore return EXACTLY the
-    brute-force top-3 (same oracle SQL as ``sim_topk_vectorized``).
-    What this pins is the LSH plumbing — the bucket explode, the
-    (table, bucket) equi-join, candidate dedup, pre-rounded ranking —
-    leaving only the hyperplane hashing itself to the pytest recall
-    checks on ``sim_topk_lsh``."""
-    from sync_cosmos_db_spark.operators import similarity as S
-
-    emb = load_table(spark, sf_dir, "embeddings")
-    queries = emb.filter(F.col("vec_id") % 50 == 0)
-    return S.lsh_topk(emb, queries, dim=64, k=3, n_planes=0, n_tables=1)
-
 
 _SKETCH_BOUNDS_ORACLE = """
 SELECT event_type,

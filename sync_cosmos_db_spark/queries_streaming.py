@@ -17,6 +17,13 @@ replay in each engine (X160).  All four answer to one oracle.
 The streams replay files with ``maxFilesPerTrigger=1``, so the events
 of one key genuinely arrive in different micro-batches and the state
 (or the keys-sized merge table) must carry them across.
+
+Events-stream operators: the ``events`` table read as a file-source
+stream (``windows.read_events_stream`` on ``events.parquet``) through
+a stateful running total (X7), a within-watermark dedup, inner and
+left-outer interval joins (X60), a stream-static enrichment and hourly
+OHLC bars (X110), each run to completion into a memory sink and
+checked against the batch SQL of the same computation.
 """
 
 from __future__ import annotations
@@ -30,6 +37,7 @@ from pyspark.sql import functions as F
 
 from sync_cosmos_db_spark.queries import fround, query
 from sync_cosmos_db_spark.session import load_table
+from sync_cosmos_db_spark.streaming import windows as SW
 
 
 # ---------------------------------------------------------------------------
@@ -42,13 +50,12 @@ def _file_stream(spark: SparkSession, schema, path: str) -> DataFrame:
             .option("maxFilesPerTrigger", 1).parquet(path))
 
 
-def _to_memory(spark: SparkSession, stream: DataFrame) -> DataFrame:
-    """Every update-mode emission of ``stream``, run to completion."""
-    from sync_cosmos_db_spark.streaming.windows import run_stream_to_memory
-
-    return run_stream_to_memory(spark, stream,
-                                f"stream_mem_{uuid.uuid4().hex[:8]}",
-                                mode="update")
+def _to_memory(spark: SparkSession, stream: DataFrame,
+               mode: str = "update") -> DataFrame:
+    """Every ``mode`` emission of ``stream``, run to completion."""
+    return SW.run_stream_to_memory(spark, stream,
+                                   f"stream_mem_{uuid.uuid4().hex[:8]}",
+                                   mode=mode)
 
 
 # ---------------------------------------------------------------------------
@@ -332,3 +339,198 @@ def stream_rate_limit_hourly_tws(spark: SparkSession,
     with rocksdb_state_store(spark):
         emitted = _to_memory(spark, rate_limit_stream_tws(stream, limit=5))
     return rate_limit_window_totals(emitted)
+
+
+# ---------------------------------------------------------------------------
+# Events-stream operators (X7, X60, X110)
+# ---------------------------------------------------------------------------
+
+def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ``events`` table, and only it, as a file-source stream."""
+    return SW.read_events_stream(spark, f"{sf_dir}/events.parquet")
+
+
+def _purchases_clicks(events: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(purchases, clicks)``: the two sides of the attribution
+    interval joins."""
+    purchases = (events.filter(F.col("event_type") == "purchase")
+                 .select(F.col("event_id").alias("purchase_id"),
+                         F.col("ts").alias("p_ts"), "user_id"))
+    clicks = (events.filter(F.col("event_type") == "click")
+              .select(F.col("event_id").alias("click_id"),
+                      F.col("ts").alias("c_ts"), "user_id"))
+    return purchases, clicks
+
+
+@query(
+    "stream_stateful_user_totals",
+    """
+    SELECT user_id, count(*) AS n_events,
+           sum(floor(value * 100 + 0.5)::BIGINT) / 100.0 AS sum_value
+    FROM events GROUP BY user_id
+    """,
+)
+def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X7: custom stateful streaming operator — per-user running totals
+    via ``applyInPandasWithState`` in update mode. The LAST emission
+    per key is the final state, which must equal the batch aggregate the
+    oracle computes."""
+    from sync_cosmos_db_spark.streaming.stateful import running_user_totals
+
+    mem = _to_memory(spark, running_user_totals(_events_stream(spark, sf_dir)))
+    w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+    return (mem.withColumn("__rn", F.row_number().over(w))
+            .filter(F.col("__rn") == 1)
+            .select("user_id", "n_events",
+                    fround("sum_value", 2).alias("sum_value")))
+
+
+@query(
+    "stream_dedup_events",
+    """
+    SELECT event_id, user_id, event_type, value FROM events
+    """,
+)
+def stream_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X7/X1: streaming exact dedup — the events stream UNIONED WITH
+    ITSELF (every row arrives twice) flows through
+    ``dropDuplicatesWithinWatermark`` keyed on event_id; the output must
+    be exactly the original table, which the oracle reads directly.
+    Duplicate copies are identical rows, so the emitted set is
+    deterministic regardless of which copy wins the state race."""
+    src = _events_stream(spark, sf_dir)
+    deduped = SW.dedup_stream(src.unionByName(src)).select(
+        "event_id", "user_id", "event_type", "value")
+    return _to_memory(spark, deduped, "append")
+
+
+@query(
+    "stream_interval_join_attribution",
+    """
+    SELECT p.event_id AS purchase_id, c.event_id AS click_id,
+           p.user_id,
+           (epoch_us(p.ts) - epoch_us(c.ts))::BIGINT AS lag_us
+    FROM events p JOIN events c
+      ON p.event_type = 'purchase' AND c.event_type = 'click'
+     AND c.user_id = p.user_id
+     AND c.ts BETWEEN p.ts - INTERVAL '1 hour' AND p.ts
+    """,
+)
+def stream_interval_join_attribution(spark: SparkSession,
+                                     sf_dir: str) -> DataFrame:
+    """X7/A1: stream-stream interval join in append mode: every
+    purchase joins the same user's clicks from the preceding hour —
+    the attribution pipeline shape. Watermarks on both sides plus the
+    two-sided time bound give Spark evictable join state (bounded by
+    the lookback + watermark horizon, not the stream length). The
+    oracle recomputes the join in batch SQL; results must match
+    exactly."""
+    purchases, clicks = _purchases_clicks(_events_stream(spark, sf_dir))
+    joined = SW.interval_join_stream(
+        purchases, clicks, key="user_id",
+        left_ts="p_ts", right_ts="c_ts", lookback="1 hour")
+    out = joined.select(
+        "purchase_id", "click_id", "user_id",
+        (F.unix_micros("p_ts") - F.unix_micros("c_ts"))
+        .cast("bigint").alias("lag_us"))
+    return _to_memory(spark, out, "append")
+
+
+@query(
+    "stream_interval_left_outer",
+    """
+    WITH p AS (SELECT event_id AS purchase_id, ts AS p_ts, user_id
+               FROM events WHERE event_type = 'purchase'),
+    c AS (SELECT event_id AS click_id, ts AS c_ts, user_id
+          FROM events WHERE event_type = 'click'),
+    m AS (SELECT max(ts) AS mx FROM events)
+    SELECT p.purchase_id, p.user_id, c.click_id,
+           c.click_id IS NOT NULL AS matched
+    FROM p
+    LEFT JOIN c ON c.user_id = p.user_id
+               AND c.c_ts BETWEEN p.p_ts - INTERVAL '1 hour' AND p.p_ts
+    WHERE p.p_ts <= (SELECT mx FROM m) - INTERVAL '2 hours'
+    """,
+)
+def stream_interval_left_outer(spark: SparkSession,
+                               sf_dir: str) -> DataFrame:
+    """X60 — stream-stream LEFT OUTER interval join: purchases with no
+    click in the preceding hour survive with NULL click — the
+    "unattributed conversions" shape an inner join silently drops.
+    Outer rows only emit once the watermark proves no match can arrive,
+    so both sides restrict to purchases at least 2 h older than the
+    stream's final event (watermark 30 min + lookback 1 h + margin) —
+    inside that region streaming output equals the batch left join
+    EXACTLY, and the oracle hash-checks it."""
+    purchases, clicks = _purchases_clicks(_events_stream(spark, sf_dir))
+    joined = SW.interval_join_stream(
+        purchases, clicks, key="user_id",
+        left_ts="p_ts", right_ts="c_ts", lookback="1 hour",
+        watermark="30 minutes", how="left_outer")
+    streamed = _to_memory(
+        spark, joined.select("purchase_id", "user_id", "click_id",
+                             F.col("click_id").isNotNull().alias("matched"),
+                             "p_ts"), "append")
+    mx = load_table(spark, sf_dir, "events").agg(F.max("ts")).first()[0]
+    return (streamed
+            .filter(F.col("p_ts") <= F.lit(mx) - F.expr("INTERVAL 2 hours"))
+            .drop("p_ts"))
+
+
+@query(
+    "stream_enrich_segment",
+    """
+    SELECT c.c_mktsegment AS segment, count(*)::BIGINT AS n_events,
+           sum(floor(e.value * 100 + 0.5)::BIGINT) / 100.0 AS sum_value
+    FROM events e LEFT JOIN customer c ON e.user_id = c.c_custkey
+    GROUP BY c.c_mktsegment
+    """,
+)
+def stream_enrich_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-static enrichment (``windows.enrich_stream``): the events
+    STREAM left-joins the broadcast customer dimension per micro-batch
+    (stateless, no stream shuffle), then aggregates per market segment
+    in complete mode; the oracle recomputes the join + aggregate in
+    batch SQL."""
+    cust = load_table(spark, sf_dir, "customer")
+    dim = cust.select(F.col("c_custkey").alias("user_id"),
+                      F.col("c_mktsegment").alias("segment"))
+    enriched = SW.enrich_stream(_events_stream(spark, sf_dir), dim,
+                                "user_id")
+    agg = (enriched.groupBy("segment")
+           .agg(F.count("*").cast("long").alias("n_events"),
+                (F.sum(F.floor(F.col("value") * 100
+                               + F.lit(0.5)).cast("long")) / 100.0)
+                .alias("sum_value")))
+    return _to_memory(spark, agg, "complete")
+
+
+@query(
+    "stream_ohlc_hourly",
+    """
+    WITH b AS (
+      SELECT event_type,
+             epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT
+               AS window_start,
+             value, {'t': ts, 'v': value} AS tv
+      FROM events)
+    SELECT window_start, event_type, count(*)::BIGINT AS n,
+           floor((min(tv)).v * 10000 + 0.5) / 10000 AS open,
+           floor(max(value) * 10000 + 0.5) / 10000 AS high,
+           floor(min(value) * 10000 + 0.5) / 10000 AS low,
+           floor((max(tv)).v * 10000 + 0.5) / 10000 AS close
+    FROM b GROUP BY window_start, event_type
+    """,
+)
+def stream_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """X110 — streaming OHLC (``windows.ohlc_stream``): hourly bars per
+    event_type; min/max over a (ts, value) struct is an ordinary
+    mergeable aggregate, so per-bar state is constant and the watermark
+    bounds open bars.  With the full table replayed and complete
+    output, the bars must equal the batch computation — the oracle —
+    exactly."""
+    bars = _to_memory(spark, SW.ohlc_stream(_events_stream(spark, sf_dir),
+                                            "1 hour"), "complete")
+    return bars.select("window_start", "event_type", "n",
+                       *(fround(c, 4).alias(c)
+                         for c in ("open", "high", "low", "close")))

@@ -22,6 +22,8 @@ the documented trade for bounded state at 100 TB/day ingest.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -86,8 +88,13 @@ def session_counts(events: DataFrame, gap: str = "5 minutes",
 # Streaming forms (same expressions + watermark)
 # ---------------------------------------------------------------------------
 
-def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events parquet files under ``sf_dir``.
+def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
+    """File-source stream over the events parquet at ``path``: a parquet
+    file or a directory, as in ``sources.catalog.data_files``. Spark's
+    file stream only takes a directory (``basePath must be a
+    directory``), so a file streams its parent directory restricted to
+    that one file by ``pathGlobFilter``; the other tables beside it are
+    never read.
 
     ``ts`` is read as its physical int64 (``bigint``) and rebuilt as an
     absolute TIMESTAMP from the unit its footers record: harness
@@ -100,7 +107,7 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow as _pa
     import pyarrow.parquet as _pq
 
-    fs, files = catalog.data_files(sf_dir)
+    fs, files = catalog.data_files(path)
     units: set[str] = set()
     for f in files:
         try:
@@ -119,12 +126,12 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "timestamp or int64")
     if not units:
         raise ValueError(
-            f"read_events_stream: no parquet file under {sf_dir} has a "
+            f"read_events_stream: no parquet file under {path} has a "
             "readable 'ts' field")
     if len(units) > 1:
         raise ValueError(
             f"read_events_stream: mixed ts encodings {sorted(units)} "
-            f"under {sf_dir} — refusing to guess")
+            f"under {path} — refusing to guess")
     unit = units.pop()
     if unit not in ("ns", "us", "ms"):
         raise ValueError(
@@ -136,8 +143,11 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         rebuild = F.timestamp_micros(F.expr(f"ts div {div}"))
     schema = ("event_id bigint, ts bigint, user_id bigint, "
               "event_type string, value double, props string")
-    raw = spark.readStream.schema(schema).parquet(sf_dir)
-    return raw.withColumn("ts", rebuild)
+    reader = spark.readStream.schema(schema)
+    if files == [os.path.abspath(path)]:  # a file lists itself
+        reader = reader.option("pathGlobFilter", os.path.basename(path))
+        path = os.path.dirname(files[0])
+    return reader.parquet(path).withColumn("ts", rebuild)
 
 
 def tumbling_counts_stream(events: DataFrame, duration: str = "1 hour",
@@ -322,7 +332,7 @@ def interval_join_stream(left: DataFrame, right: DataFrame,
     still arrive, so outer results near the stream's end may be
     withheld when the query stops.  Callers needing exact batch parity
     restrict assertions to rows older than the final watermark horizon
-    (see ``stream_interval_left_outer`` in queries_r4.py)."""
+    (see ``stream_interval_left_outer`` in queries_streaming.py)."""
     if how not in ("inner", "left_outer"):
         raise ValueError(
             f"interval_join_stream: how must be 'inner' or 'left_outer',"

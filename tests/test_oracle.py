@@ -116,12 +116,14 @@ def test_sweep_window_covers_every_family():
 
 def test_edited_queries_registered():
     """Tripwire (round-10 verdict item 2): any @query-registered
-    function textually edited since the last driver round boundary
-    must carry an EDITED_ROUND entry for the CURRENT round, so the
-    sweep prioritizer re-verifies it next driver pass.  Uses
-    tools/edited_queries.py (AST spans ∩ git diff).  Shared-operator
-    edits can't be auto-attributed — those still rely on the editor's
-    discipline; this catches the common direct-edit case."""
+    query whose fingerprint changed since the last driver round
+    boundary must carry an EDITED_ROUND entry for the CURRENT round, so
+    the sweep prioritizer re-verifies it next driver pass.  Uses
+    tools/edited_queries.py: the fingerprint covers the query's code
+    without docstrings or imports, its oracle SQL and every
+    query-module helper or constant it reaches, so a pure move needs
+    no entry.  Edits under operators/, streaming/ or session.py can't
+    be auto-attributed — those still rely on the editor's discipline."""
     import glob
     import os
     import re

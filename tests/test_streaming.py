@@ -12,20 +12,13 @@ from sync_cosmos_db_spark.session import load_table
 from sync_cosmos_db_spark.streaming import windows as SW
 
 
-@pytest.fixture(scope="module")
-def events_stream_dir(tmp_path_factory, sf_dir):
-    d = tmp_path_factory.mktemp("events_stream")
-    os.symlink(f"{sf_dir}/events.parquet", d / "events.parquet")
-    return str(d)
-
-
 def _rows(df, key_cols):
     return sorted(tuple(r[c] for c in key_cols) for r in df.collect())
 
 
-def test_tumbling_stream_matches_batch(spark, sf_dir, events_stream_dir):
+def test_tumbling_stream_matches_batch(spark, sf_dir):
     batch = SW.tumbling_counts(load_table(spark, sf_dir, "events"))
-    stream_src = SW.read_events_stream(spark, events_stream_dir)
+    stream_src = SW.read_events_stream(spark, f"{sf_dir}/events.parquet")
     streamed = SW.run_stream_to_memory(
         spark, SW.tumbling_counts_stream(stream_src), "tumbling_mem",
         mode="complete")
@@ -33,15 +26,14 @@ def test_tumbling_stream_matches_batch(spark, sf_dir, events_stream_dir):
     assert _rows(batch, cols) == _rows(streamed, cols)
 
 
-def test_stateful_running_totals_matches_batch(spark, sf_dir,
-                                               events_stream_dir):
+def test_stateful_running_totals_matches_batch(spark, sf_dir):
     """applyInPandasWithState: final per-key state == batch aggregate."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
     from sync_cosmos_db_spark.streaming.stateful import running_user_totals
 
-    src = SW.read_events_stream(spark, events_stream_dir)
+    src = SW.read_events_stream(spark, f"{sf_dir}/events.parquet")
     mem = SW.run_stream_to_memory(spark, running_user_totals(src),
                                   "stateful_parity_mem", mode="update")
     w = W.partitionBy("user_id").orderBy(F.desc("n_events"))
@@ -57,13 +49,12 @@ def test_stateful_running_totals_matches_batch(spark, sf_dir,
     assert a == b
 
 
-def test_session_stream_emits_finalized_sessions(spark, sf_dir,
-                                                 events_stream_dir):
+def test_session_stream_emits_finalized_sessions(spark, sf_dir):
     """Append-mode session windows emit only watermark-finalized
     sessions — every emitted row must match the batch result exactly;
     rows inside the final watermark horizon may be withheld."""
     batch = SW.session_counts(load_table(spark, sf_dir, "events"))
-    stream_src = SW.read_events_stream(spark, events_stream_dir)
+    stream_src = SW.read_events_stream(spark, f"{sf_dir}/events.parquet")
     streamed = SW.run_stream_to_memory(
         spark, SW.session_counts_stream(stream_src), "session_mem",
         mode="append")
@@ -166,8 +157,7 @@ def test_dedup_stream_drops_in_flight_duplicates(spark, tmp_path):
     assert {r.event_id for r in rows} == set(range(50))
 
 
-def test_interval_join_stream_matches_batch(spark, sf_dir,
-                                            events_stream_dir):
+def test_interval_join_stream_matches_batch(spark, sf_dir):
     """Stream-stream interval join == the identical batch join, and
     every emitted pair respects the [ts - lookback, ts] bound."""
     from pyspark.sql import functions as F
@@ -184,7 +174,8 @@ def test_interval_join_stream_matches_batch(spark, sf_dir,
                                        lookback="1 hour")
 
     streamed = SW.run_stream_to_memory(
-        spark, shape(SW.read_events_stream(spark, events_stream_dir)),
+        spark,
+        shape(SW.read_events_stream(spark, f"{sf_dir}/events.parquet")),
         "ivj_parity_mem", mode="append")
     batch = shape(load_table(spark, sf_dir, "events"))
 
@@ -198,7 +189,7 @@ def test_interval_join_stream_matches_batch(spark, sf_dir,
 
 
 def test_enrich_stream_matches_batch_and_keeps_unmatched(
-        spark, sf_dir, events_stream_dir):
+        spark, sf_dir):
     from pyspark.sql import functions as F
 
     ev = load_table(spark, sf_dir, "events")
@@ -210,7 +201,7 @@ def test_enrich_stream_matches_batch_and_keeps_unmatched(
                    F.col("c_mktsegment").alias("segment")))
     batch = (ev.join(dim, "user_id", "left")
              .groupBy("segment").agg(F.count("*").alias("n")))
-    src = SW.read_events_stream(spark, events_stream_dir)
+    src = SW.read_events_stream(spark, f"{sf_dir}/events.parquet")
     streamed = SW.run_stream_to_memory(
         spark, SW.enrich_stream(src, dim, "user_id")
         .groupBy("segment").agg(F.count("*").alias("n")),
@@ -249,6 +240,32 @@ def test_read_events_stream_sniff_raises_on_mixed_and_missing(
                    str(d2 / "b.parquet"))
     with pytest.raises(ValueError, match="mixed ts encodings"):
         SW.read_events_stream(spark, str(d2))
+
+
+def test_read_events_stream_file_reads_only_that_file(spark, tmp_path):
+    """A parquet file path streams that file alone, even when the
+    directory holds another table with a ``ts`` column (Spark's file
+    stream takes only directories: ``basePath must be a directory``)."""
+    import pandas as pd
+
+    base = pd.Timestamp("2024-01-01 00:00:00")
+    pd.DataFrame({
+        "event_id": [1, 2, 3],
+        "ts": [base + pd.Timedelta(minutes=i) for i in range(3)],
+        "user_id": [7, 8, 9],
+        "event_type": ["click"] * 3,
+        "value": [1.0, 2.0, 3.0],
+        "props": ["{}"] * 3,
+    }).to_parquet(str(tmp_path / "events.parquet"))
+    pd.DataFrame({"o_orderkey": [10, 11], "ts": [base, base]}).to_parquet(
+        str(tmp_path / "orders.parquet"))
+
+    src = SW.read_events_stream(spark, f"{tmp_path}/events.parquet")
+    out = SW.run_stream_to_memory(spark, src, "events_file_mem",
+                                  mode="append")
+    assert sorted((r.event_id, r.user_id, r.value)
+                  for r in out.collect()) == [(1, 7, 1.0), (2, 8, 2.0),
+                                              (3, 9, 3.0)]
 
 
 def test_interval_join_left_outer_emits_unmatched(spark, tmp_path):
@@ -740,3 +757,35 @@ def test_streaming_layer_structure():
     assert rocksdb == ["sync_cosmos_db_spark/streaming/stateful.py"]
     assert not asserts, asserts
     assert not overrides, overrides
+
+
+def test_query_modules_share_one_source_per_decision():
+    """No module stages the events stream through ``os.symlink`` (a
+    file path goes to ``windows.read_events_stream`` as is), no query
+    module but the registry in ``queries.py`` reads ``ORACLE_SQL``
+    (a query's oracle is a module-level constant or builder that
+    ``tools/edited_queries.py`` can follow), and the exact top-k
+    oracle is written out once (``queries_similarity``)."""
+    import ast
+    import glob
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    symlinks, registry_reads, topk = [], [], []
+    for path in sorted(glob.glob(os.path.join(repo, "sync_cosmos_db_spark",
+                                              "**", "*.py"), recursive=True)):
+        rel = os.path.relpath(path, repo).replace(os.sep, "/")
+        with open(path) as fh:
+            src = fh.read()
+        if "ORDER BY cs DESC, neighbor_id) AS rank" in src:
+            topk.append(rel)
+        for node in ast.walk(ast.parse(src)):
+            if isinstance(node, ast.Attribute) and node.attr == "symlink":
+                symlinks.append(f"{rel}:{node.lineno}")
+            if (isinstance(node, ast.Subscript)
+                    and isinstance(node.value, ast.Name)
+                    and node.value.id == "ORACLE_SQL"
+                    and os.path.basename(rel).startswith("queries_")):
+                registry_reads.append(f"{rel}:{node.lineno}")
+    assert not symlinks, symlinks
+    assert not registry_reads, registry_reads
+    assert topk == ["sync_cosmos_db_spark/queries_similarity.py"], topk
