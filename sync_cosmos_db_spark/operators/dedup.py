@@ -35,9 +35,8 @@ from pyspark.sql.types import (
     ArrayType, IntegerType, LongType, StructField, StructType,
 )
 
-from sync_cosmos_db_spark.cache_scope import (
-    scoped_local_checkpoint, scoped_persist,
-)
+from sync_cosmos_db_spark.cache_scope import cached, scoped_persist
+from sync_cosmos_db_spark.operators.iteration import iterate
 from sync_cosmos_db_spark.operators.partitioning import spread
 
 
@@ -502,81 +501,52 @@ def connected_components(edges: DataFrame, src: str = "id_a",
     doubling — dup clusters are shallow (star/chain shaped), so this
     terminates in a handful of rounds. Each round is one join + one
     groupBy, both shuffling (node, label) pairs only — the standard
-    large-graph CC shape (GraphX/GraphFrames use the same loop). The
-    driver-side iteration holds no data, only the convergence counter.
+    large-graph CC shape (GraphX/GraphFrames use the same loop).  A
+    label changed this round iff ``nmin < label``, so the state carries
+    that flag and the iteration driver counts it on the checkpoint job:
+    no join against the previous labels, no job of its own.  Raises
+    ``RuntimeError`` when labels still change after ``max_iter``
+    rounds.
 
-    Returns (node, component) with component = min node id reachable.
-
-    Contract (round 14): the output is an EAGER, scope-registered
-    ``localCheckpoint`` — lineage-truncated, safe for any number of
-    consumers without caller-side persistence, but NOT recomputable:
-    after ``cache_scope.release_persisted()`` any not-yet-consumed
-    derivative raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND instead of
-    silently recomputing as the old lazy output did.  Consume it fully
-    before releasing the scope.
+    Returns (node, component) with component = min node id reachable,
+    over the driver's eager, scope-registered ``localCheckpoint`` —
+    lineage-truncated, safe for any number of consumers without
+    caller-side persistence, but NOT recomputable: after
+    ``cache_scope.release_persisted()`` any not-yet-consumed
+    derivative raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND.  Consume it
+    fully before releasing the scope.
     """
     # Both directions via ONE explode pass, not union-of-two-selects:
-    # each union branch re-executes the upstream edge plan, and edges
-    # are typically an EXPENSIVE pair join (round-14 finding: the
-    # sampled canonical-election twin recomputed its all-pairs Jaccard
-    # join twice — once per branch — doubling the dominant stage; at
-    # 100 TB that is the difference between one and two passes over
-    # the candidate-pair computation).  Output rows are identical.
+    # each union branch would re-execute the upstream edge plan, and
+    # edges are typically an EXPENSIVE pair join.
     both = (edges
             .select(F.explode(F.array(
                 F.struct(F.col(src).alias("a"), F.col(dst).alias("b")),
                 F.struct(F.col(dst).alias("a"), F.col(src).alias("b")),
             )).alias("__e"))
             .select("__e.a", "__e.b"))
-    labels = (both.select(F.col("a").alias("node"))
-              .distinct()
-              .withColumn("label", F.col("node")))
-    both = both.persist()
-    labels = labels.persist()
-    try:
-        for _ in range(max_iter):
-            neighbor_min = (both.join(labels, both.b == labels.node)
-                            .groupBy("a").agg(F.min("label").alias("nmin"))
-                            .withColumnRenamed("a", "node"))
-            new_labels = (labels.join(neighbor_min, "node", "left_outer")
-                          .select("node",
-                                  F.least("label",
-                                          F.coalesce("nmin", "label"))
-                                  .alias("label"))
-                          .persist())
-            changed = (new_labels.alias("n")
-                       .join(labels.alias("o"), "node")
-                       .filter(F.col("n.label") != F.col("o.label"))
-                       .limit(1).count())
-            labels.unpersist()
-            labels = new_labels
-            if changed == 0:
-                break
-        else:
-            raise RuntimeError(
-                f"connected_components did not converge in {max_iter} "
-                "iterations — graph diameter exceeds max_iter; raise it "
-                "(or switch to path-doubling for adversarially long chains)")
-        # Materialize the converged labels BEFORE the loop caches are
-        # released (round 14): the result used to be returned lazy over
-        # the whole converged join chain, so EVERY consumption — even a
-        # single collect — re-executed all iterations against the
-        # by-then-unpersisted edge relation (measured: 4 passes over
-        # the edge source for one collect; for real callers the edge
-        # plan is an expensive pair join).  The labels table is tiny —
-        # (node, component) for nodes with at least one duplicate edge
-        # — so the eager checkpoint is cheap at any scale, reads
-        # straight from the still-live loop cache, and its storage is
-        # scope-registered for release_persisted().
-        out = scoped_local_checkpoint(
-            labels.select(F.col("node"), F.col("label").alias("component")))
-    finally:
-        # explicit release (round-2 verdict item 6): no cached RDDs may
-        # outlive this call — leaking them to the ContextCleaner holds
-        # executor memory for the whole session.
-        both.unpersist()
-        labels.unpersist()
-    return out
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
+        neighbor_min = (both.join(labels, both.b == labels.node)
+                        .groupBy("a").agg(F.min("label").alias("nmin"))
+                        .withColumnRenamed("a", "node"))
+        return (labels.join(neighbor_min, "node", "left_outer")
+                .select("node",
+                        F.least("label", F.coalesce("nmin", "label"))
+                        .alias("label"),
+                        (F.col("nmin") < F.col("label")).alias("changed")))
+
+    with cached(both) as both:
+        labels, converged = iterate(
+            both.select(F.col("a").alias("node")).distinct()
+            .withColumn("label", F.col("node")),
+            step, max_iter, until=lambda _r: F.count_if("changed"))
+    if not converged:
+        raise RuntimeError(
+            f"connected_components did not converge in {max_iter} "
+            "iterations — graph diameter exceeds max_iter; raise it "
+            "(or switch to path-doubling for adversarially long chains)")
+    return labels.select("node", F.col("label").alias("component"))
 
 
 # ---------------------------------------------------------------------------

@@ -1,71 +1,58 @@
-"""Graph algorithms on DataFrames: weighted PageRank by fixed-point
-iteration.
+"""Graph algorithms on DataFrames: PageRank, BFS, Bellman–Ford,
+label propagation, k-core peeling and HITS by fixed-point iteration,
+plus one-pass triangle and clustering-coefficient counts.
 
-Complements the label-propagation connected-components operator
-(``operators/dedup.connected_components``) with the other canonical
-distributed graph workload.  The reference has no graph surface; this
-is an extension operator (training-data pipelines rank hosts / domains
-/ documents by link authority — the original web-scale use).
+The reference has no graph surface; these are extension operators
+(training-data pipelines rank hosts / domains / documents by link
+authority — the original web-scale use).
 
-Scale design — the standard Pregel-as-joins shape, no GraphX/RDDs:
+Scale design — Pregel as joins, no GraphX/RDDs:
 
-* Edges live in a ``(src, dst, w)`` DataFrame; per-iteration work is
-  ONE equi-join of the rank vector onto the edge list (shuffle keyed by
-  ``src``) and ONE ``dst``-keyed aggregate of contributions.  At 100 TB
-  both shuffles hash-partition on node ids; nothing is broadcast except
-  the scalar node count.
-* The rank vector is re-derived from ``nodes`` each iteration with a
-  left join, so nodes with no inbound edges keep the teleport term
-  (their rank is ``(1−d)/N``), and the iteration count is a fixed small
-  constant supplied by the caller — each iteration is one Spark job on
-  lineage, with an optional persist each round to keep the plan linear.
-* Dangling mass: nodes with no OUT-edges leak their rank (the simple
-  formulation).  For ranking use-cases this only rescales; callers who
-  need the stochastic-matrix invariant should add self-loops.  The
-  choice is deliberate: redistribution needs an extra global aggregate
-  per iteration, and the oracle (an unrolled SQL replay) must stay
-  bit-comparable.
+* Edges live in a ``(src, dst[, w])`` DataFrame.  Each round is a few
+  equi-joins and aggregates keyed on node ids, so every shuffle
+  hash-partitions on nodes; nothing is broadcast but scalars.
+* **One loop.**  Every iterative operator is a ``step`` function plus
+  a call to :func:`~sync_cosmos_db_spark.operators.iteration.iterate`,
+  which owns the lineage rule (a scope-registered ``localCheckpoint``
+  after every round, each freed when the next lands) and convergence
+  (an observed aggregate read off the checkpoint job).  Each returns the driver's eager checkpoint, or a
+  cheap projection of it: safe for any number of consumers without
+  caller-side persistence, but gone after
+  ``cache_scope.release_persisted()`` — consume it first.
+* **One edge cache.**  The edge list is read every round, and the
+  callers' edge plans are lineitem⋈orders aggregations or document
+  explodes, so each operator reads its edges inside
+  ``cache_scope.cached``: computed once per call, released on return,
+  and left alone when the caller already cached the same plan.
+  k-core needs none: its state IS the edge set, so only its first
+  round reads the input.
 
-Edge weights are used as transition probabilities after out-weight
-normalization: contribution(src→dst) = pr(src) · w / Σ_out w(src).
+PageRank's dangling mass (nodes with no OUT-edges) leaks, the simple
+formulation: for ranking it only rescales, redistribution would cost
+a global aggregate per round, and the oracle (an unrolled SQL replay)
+must stay bit-comparable.  Callers who need the stochastic-matrix
+invariant should add self-loops.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
-from sync_cosmos_db_spark.cache_scope import (
-    register_persisted,
-    scoped_local_checkpoint,
-)
-
-
-def _caller_cached(df: DataFrame) -> bool:
-    """True when ``df``'s PLAN is already cached (ADVICE r16):
-    ``DataFrame.is_cached`` is an object-local Python flag set only by
-    ``persist()`` on the exact handle, so a caller holding an
-    equivalent-plan cache under a DIFFERENT handle went undetected —
-    the operator's own persist was a CacheManager no-op and its
-    ``finally`` unpersist then dropped the CALLER's cache entry.
-    ``Dataset.storageLevel`` consults the CacheManager by canonicalized
-    plan, so it sees caches under any handle."""
-    lvl = df.storageLevel
-    return lvl.useMemory or lvl.useDisk or lvl.useOffHeap
+from sync_cosmos_db_spark.cache_scope import cached, scoped_local_checkpoint
+from sync_cosmos_db_spark.operators.iteration import iterate
 
 
 def symmetrize(edges: DataFrame, src: str = "src",
                dst: str = "dst") -> DataFrame:
-    """Both edge directions in ONE pass over the input — the
-    connected-components explode pattern (``dedup.py``, round 14).
+    """Both edge directions in ONE pass over the input.
 
     ``raw.select(src,dst).unionByName(raw.select(dst,src))`` executes
     the upstream edge plan once per branch; for the registered graph
     queries that upstream is a lineitem⋈orders aggregation, so the
-    dominant stage ran twice before it ever reached the iteration
-    loop (round-15 finding, the CC bug's sibling).  Explode duplicates
-    each row AFTER it is computed.  Non-src/dst columns (weights)
-    ride along unchanged on both directions.
+    dominant stage would run twice before the loop starts.  Explode
+    duplicates each row AFTER it is computed.  Non-src/dst columns
+    (weights) ride along unchanged on both directions.
     """
     rest = [c for c in edges.columns if c not in (src, dst)]
     return (edges
@@ -85,102 +72,52 @@ def pagerank(
     src: str = "src",
     dst: str = "dst",
     weight: str = "w",
-    persist_each_iter: bool = True,
 ) -> DataFrame:
     """Fixed-iteration weighted PageRank over an edge DataFrame.
 
-    Returns ``(node, pr)`` (unrounded doubles — round at the query
-    surface).  ``n_iter`` is a fixed constant: at corpus scale you run
-    10–20 iterations, each one join + one aggregate; convergence
-    detection would add a global delta-aggregate per round for little
-    benefit at fixed budgets.
+    Edge weights are transition probabilities after out-weight
+    normalization: contribution(src→dst) = pr(src) · w / Σ_out w(src).
+    Each round is ONE src-keyed join of the rank vector onto the edge
+    list and ONE dst-keyed sum, left-joined onto the node set, so a
+    node with no in-edges keeps the teleport term ``(1−d)/N``.  ``n_iter`` is a fixed budget: at corpus scale you run
+    10–20 rounds, and a convergence test would add a global delta
+    aggregate per round for little benefit.
 
-    With ``persist_each_iter`` the RESULT is left persisted (it is the
-    live output; every intermediate cache is explicitly released here)
-    and scope-registered — the caller releases it with
-    ``cache_scope.release_persisted()`` after consuming.
+    Returns ``(node, pr)`` (unrounded doubles — round at the query
+    surface) as the iteration driver's eager checkpoint.
     """
     if n_iter < 0:
         raise ValueError("n_iter must be >= 0")
-    # ONE pass over the caller's edge plan (round 15, the CC bug's
-    # sibling): outw/e and nodes each materialized the upstream
-    # separately — measured 6 edge-source row computations per input
-    # row per pagerank call, and for the registered trade-graph
-    # queries the upstream is a lineitem⋈orders aggregation.  Cache
-    # the raw edges, materialize once, derive everything from the
-    # cache, and release the raw cache as soon as e (the relation the
-    # iterations actually consume) is itself materialized.
-    base = edges.select(F.col(src), F.col(dst), F.col(weight))
-    outw = base.groupBy(src).agg(F.sum(weight).alias("__outw"))
-    e = (base.join(outw, src)
-         .select(F.col(src).alias("__src"), F.col(dst).alias("__dst"),
-                 (F.col(weight) / F.col("__outw")).alias("__share")))
-    nodes = (base.select(F.col(src).alias("node"))
-             .union(base.select(F.col(dst).alias("node")))
-             .distinct())
-    try:
-        if persist_each_iter:
-            # persist + eager count INSIDE the try (ADVICE r15): a
-            # materialization failure here must still reach the
-            # finally's base.unpersist(), or the cache leaks for the
-            # session lifetime — the shape cache_scope exists to
-            # prevent.  outw/e/nodes above are lazy derivations of the
-            # same analyzed plan, so they hit this cache regardless of
-            # construction order.
-            base = base.persist()
-            base.count()
-            nodes = nodes.persist()
-            e = e.persist()
-        # One action instead of three (guide §2.6 / r17 verdict item 8
-        # — the member was scheduling-bound across 9 sequential jobs):
-        # nodes.count() is the ONLY driver-side scalar the plan needs;
-        # e is persisted LAZILY and fills from base's cache inside the
-        # final materialization job below, so its separate eager
-        # count() job is gone.  base stays cached until then.
-        n_nodes = nodes.count()  # scalar to the driver — bounded by design
-        teleport = (1.0 - damping) / n_nodes
+    # e is read every round and nodes is read every round: both are
+    # cached, and both come from ONE read of the caller's edge plan
+    # (the out-weight sum is a window, not a join back onto the edges).
+    e = edges.select(F.col(src).alias("__src"), F.col(dst).alias("__dst"),
+                     (F.col(weight) / F.sum(weight).over(
+                         Window.partitionBy(src))).alias("__share"))
+    with cached(e) as e:
+        # N comes off the pass that fills the node cache.
+        size = Observation()
+        nodes = (e.select(F.explode(F.array("__src", "__dst")).alias("node"))
+                 .distinct().observe(size, F.count(F.lit(1)).alias("n")))
+        with cached(nodes) as nodes:
+            n_nodes = size.get["n"]
+            teleport = (1.0 - damping) / n_nodes
 
-        pr = nodes.withColumn("pr", F.lit(1.0 / n_nodes))
-        for _ in range(n_iter):
-            contrib = (e.join(pr.withColumnRenamed("node", "__src"),
-                              "__src")
-                       .groupBy(F.col("__dst").alias("node"))
-                       .agg(F.sum(F.col("pr") * F.col("__share"))
-                            .alias("__c")))
-            nxt = (nodes.join(contrib, "node", "left")
-                   .select("node",
-                           (F.lit(teleport)
-                            + damping * F.coalesce(F.col("__c"),
-                                                   F.lit(0.0)))
-                           .alias("pr")))
-            pr = nxt
-        if persist_each_iter and n_iter > 0:
-            # The iteration chain is LINEAR — each pr(k) is referenced
-            # exactly once (by contrib(k+1)), and the multiply-
-            # referenced relations (e ×n_iter, nodes ×n_iter+1) are
-            # cached above — so the per-iteration persist+count jobs
-            # that kept "lineage one-hop deep" were pure scheduling
-            # overhead for a bounded n_iter: ONE materialization job
-            # here runs the whole chain, computing every operator
-            # exactly once (e fills its cache on first use inside this
-            # job; iterations are sequential shuffle stages).  The
-            # result must be materialized BEFORE the finally drops the
-            # e/nodes caches, or a later consumer would recompute e
-            # once per iteration (the r17 bellman_ford limit(1)
-            # lesson: only a full action populates a persist).  For
-            # UNBOUNDED iteration counts the per-round checkpoint
-            # discipline of bfs_hops/bellman_ford still applies — at
-            # n_iter ≈ 3–20 the plan depth is trivially safe.
-            pr = pr.persist()
-            pr.count()
-            base.unpersist()
-    finally:
-        if persist_each_iter:
-            base.unpersist()  # idempotent if already released above
-            nodes.unpersist()
-            e.unpersist()
-    if persist_each_iter and n_iter > 0:
-        register_persisted(pr)
+            def step(pr: DataFrame, _r: int) -> DataFrame:
+                contrib = (e.join(pr.withColumnRenamed("node", "__src"),
+                                  "__src")
+                           .groupBy(F.col("__dst").alias("node"))
+                           .agg(F.sum(F.col("pr") * F.col("__share"))
+                                .alias("__c")))
+                return (nodes.join(contrib, "node", "left")
+                        .select("node",
+                                (F.lit(teleport)
+                                 + damping * F.coalesce(F.col("__c"),
+                                                        F.lit(0.0)))
+                                .alias("pr")))
+
+            pr, _ = iterate(nodes.withColumn("pr", F.lit(1.0 / n_nodes)),
+                            step, n_iter)
     return pr
 
 
@@ -205,6 +142,15 @@ def triangle_count(edges: DataFrame, src: str = "src",
     Returns a 1-row DataFrame ``(n_triangles,)``; each triangle is
     counted exactly once.
     """
+    _, tri = _triangles(edges, src, dst)
+    return tri.agg(F.count("*").cast("long").alias("n_triangles"))
+
+
+def _triangles(edges: DataFrame, src: str,
+               dst: str) -> tuple[DataFrame, DataFrame]:
+    """``(e, tri)``: the canonical ``(lo, hi)`` simple edge set and one
+    ``(b, c, a)`` row per triangle, by the compact-forward wedge
+    enumeration :func:`triangle_count` describes."""
     e = (edges.select(F.least(F.col(src), F.col(dst)).alias("lo"),
                       F.greatest(F.col(src), F.col(dst)).alias("hi"))
          .where(F.col("lo") != F.col("hi"))
@@ -215,80 +161,51 @@ def triangle_count(edges: DataFrame, src: str = "src",
     wedges = (b_side.join(c_side, "a")
               .where(F.col("b") < F.col("c")))
     closing = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
-    tri = wedges.join(closing, ["b", "c"])
-    return tri.agg(F.count("*").cast("long").alias("n_triangles"))
+    return e, wedges.join(closing, ["b", "c"])
 
 
 def bfs_hops(edges: DataFrame, seeds: DataFrame, max_hops: int = 3,
              src: str = "src", dst: str = "dst",
              node_col: str = "node") -> DataFrame:
-    """X90 — bounded-depth BFS: minimum hop count from a SEED SET to
-    every node reachable within ``max_hops`` — the blast-radius /
+    """Bounded-depth BFS: minimum hop count from a SEED SET to every
+    node reachable within ``max_hops`` — the blast-radius /
     influence-frontier query (which suppliers are within two trades of
     a sanctioned customer set).
 
     ``edges`` must already contain both directions for undirected
-    traversal (same contract as :func:`pagerank`).  The loop is the
-    textbook distributed frontier expansion: per hop ONE edge join on
-    the frontier + ONE anti-join against the visited set, both keyed
-    on node ids, and the frontier strictly shrinks to never-seen
-    nodes so total work is bounded by |reachable| · deg regardless of
-    ``max_hops``.  Driver state is one row count per hop (early-exit
-    when a frontier empties).
-
-    Each hop's frontier is ``localCheckpoint``-ed, not merely
-    persisted: the hop-h plan references BOTH visited(h−1) and
-    frontier(h−1), so without lineage truncation the logical plan
-    doubles per hop and Catalyst re-analysis OOMs the driver around
-    hop 5 even on a 25-node graph (measured) — persist caches data
-    but not the plan.  With truncation, visited is a flat union of
-    per-hop leaf plans (linear in hops).  On a multi-hour cluster
-    traversal prefer a reliable ``checkpoint()`` (set
-    ``spark.sparkContext.setCheckpointDir``) so an executor loss
-    recomputes from storage instead of failing the job.
-    Returns ``(node, hops)``.
+    traversal.  The state is the visited set ``(node, hops)``; hop
+    ``h``'s frontier is its ``hops == h − 1`` rows.  Per hop ONE edge
+    join on the frontier + ONE anti-join against the visited set, both
+    keyed on node ids; the frontier holds only never-seen nodes, so
+    total work is bounded by |reachable| · deg regardless of
+    ``max_hops``.  The loop stops once a hop reaches nobody.  Returns
+    ``(node, hops)``.
     """
     if max_hops < 0:
         raise ValueError(f"bfs_hops: max_hops must be >= 0, got {max_hops}")
-    # Cache the edge relation ONCE (round 15): every hop joins the
-    # frontier against it, and without a persist each hop re-executed
-    # the caller's edge plan — measured 6 edge-source row computations
-    # per input row (3 hops × the callers' 2-branch symmetric union);
-    # for the registered trade-graph query that plan is a
-    # lineitem⋈orders aggregation.  Released before return — visited
-    # is a union of eager per-hop checkpoints, independent of edges.
-    # Skipped when the CALLER already cached the frame (ADVICE r15):
-    # unpersisting a caller-owned cache here would silently drop it
-    # for later operator calls sharing the same edge plan.
-    own_cache = not _caller_cached(edges)
-    if own_cache:
-        edges = edges.persist()
-    try:
-        visited = scoped_local_checkpoint(
+
+    def step(visited: DataFrame, h: int) -> DataFrame:
+        frontier = visited.where(F.col("hops") == h - 1)
+        reached = (frontier.join(edges, frontier["node"] == edges[src])
+                   .select(F.col(dst).alias("node")).distinct()
+                   .join(visited.select("node"), "node", "left_anti")
+                   .withColumn("hops", F.lit(h).cast("long")))
+        return visited.unionByName(reached)
+
+    with cached(edges) as edges:
+        visited, _ = iterate(
             seeds.select(F.col(node_col).alias("node")).distinct()
-            .withColumn("hops", F.lit(0).cast("long")))
-        frontier = visited
-        for h in range(1, max_hops + 1):
-            nxt = scoped_local_checkpoint(
-                frontier.join(edges, frontier["node"] == edges[src])
-                .select(F.col(dst).alias("node")).distinct()
-                .join(visited.select("node"), "node", "left_anti")
-                .withColumn("hops", F.lit(h).cast("long")))
-            if nxt.count() == 0:
-                break
-            visited = visited.unionByName(nxt)
-            frontier = nxt
-    finally:
-        if own_cache:
-            edges.unpersist()
+            .withColumn("hops", F.lit(0).cast("long")),
+            step, max_hops,
+            until=lambda h: F.count_if(F.col("hops") == h))
     return visited
 
 
 def bellman_ford(edges: DataFrame, seeds: DataFrame, rounds: int = 3,
                  src: str = "src", dst: str = "dst", weight: str = "w",
                  node_col: str = "node") -> DataFrame:
-    """X112 — bounded-round Bellman–Ford: minimum path COST from a
-    seed set using at most ``rounds`` edges — the weighted sibling of
+    """Bounded-round Bellman–Ford: minimum path COST from a seed set
+    using at most ``rounds`` edges — the weighted sibling of
     :func:`bfs_hops` (cheapest route, not fewest hops).
 
     Each round is one relax step: dist' = min(dist, min over incoming
@@ -296,69 +213,35 @@ def bellman_ford(edges: DataFrame, seeds: DataFrame, rounds: int = 3,
     aggregate + ONE full-outer min merge, all node-keyed; after k
     rounds every ≤k-edge shortest path is exact (the textbook
     invariant), so ``rounds`` is the path-length budget, not an
-    approximation knob.  Negative edges are rejected (min-merge with
-    a bounded horizon is only meaningful for non-negative costs
-    here) — enforced by a bounded ``filter(w < 0).limit(1)`` probe
-    before the first relax step.
-
-    Each round's dist is ``localCheckpoint``-ed: the round-k plan
-    references dist(k−1) TWICE (relax join + full-outer merge), so
-    without lineage truncation the logical plan doubles per round
-    and Catalyst re-analysis OOMs the driver on long budgets — the
-    same failure mode measured in :func:`bfs_hops`; persist caches
-    data but not the plan.  Prefer reliable ``checkpoint()`` for
-    multi-hour cluster runs.  Returns ``(node, cost)``."""
+    approximation knob.  Each round reads the previous ``dist`` twice.
+    Negative edges are rejected (min-merge with a bounded horizon is
+    only meaningful for non-negative costs): one aggregate counts them
+    before the first round, and being a full scan it also fills the
+    edge cache.  Returns ``(node, cost)``."""
     if rounds < 0:
         raise ValueError(f"bellman_ford: rounds must be >= 0, got {rounds}")
-    # Cache the edge relation ONCE (round 15): the negative-weight
-    # probe plus every relax round consumed the caller's edge plan
-    # afresh — measured 8 edge-source row computations per input row
-    # (probe + 3 rounds, × the callers' 2-branch symmetric union); the
-    # registered trade-graph query's edge plan is a lineitem⋈orders
-    # aggregation, so the dominant stage ran 8 times.  Released before
-    # return — dist is an eager checkpoint, independent of edges.
-    # Caller-owned caches are left alone (ADVICE r15, see bfs_hops).
-    own_cache = not _caller_cached(edges)
-    if own_cache:
-        edges = edges.persist()
-        # eager materialization BEFORE the limit(1) probe: a limited
-        # scan stops mid-partition, and only FULLY computed partitions
-        # enter the cache — so the probe left the cache empty and the
-        # first relax round re-ran the whole edge plan (profiled: the
-        # lineitem⋈orders aggregation's 12.3 MB exchange written twice
-        # per call at sf0.1).
-        edges.count()
-    try:
-        # The probe deliberately runs AFTER the eager count: on the
-        # (overwhelmingly common) all-non-negative path it must scan
-        # every row anyway to conclude none is negative, so reading the
-        # cache is optimal; probing FIRST would double-pay the edge
-        # plan (limit-probe partial scans don't populate the persist).
-        # The cost accepted in exchange (ADVICE r17): the ERROR path —
-        # a ValueError raised here — has already materialized the full
-        # edge plan once.
-        if edges.filter(F.col(weight) < 0).limit(1).count() > 0:
-            raise ValueError(
-                "bellman_ford: negative edge weights are not supported — "
-                "the bounded-round min-merge assumes non-negative costs")
-        dist = scoped_local_checkpoint(
-            seeds.select(F.col(node_col).alias("node")).distinct()
-            .withColumn("cost", F.lit(0).cast("long")))
-        for _ in range(rounds):
-            relaxed = (dist.join(edges, dist["node"] == edges[src])
-                       .select(F.col(dst).alias("node"),
-                               (F.col("cost") + F.col(weight)).alias("cand"))
-                       .groupBy("node")
-                       .agg(F.min("cand").alias("cand")))
-            dist = scoped_local_checkpoint(
-                dist.join(relaxed, "node", "full_outer")
+
+    def step(dist: DataFrame, _r: int) -> DataFrame:
+        relaxed = (dist.join(edges, dist["node"] == edges[src])
+                   .select(F.col(dst).alias("node"),
+                           (F.col("cost") + F.col(weight)).alias("cand"))
+                   .groupBy("node")
+                   .agg(F.min("cand").alias("cand")))
+        return (dist.join(relaxed, "node", "full_outer")
                 .select("node",
                         F.least(F.coalesce("cost", F.lit(2 ** 62)),
                                 F.coalesce("cand", F.lit(2 ** 62)))
                         .cast("long").alias("cost")))
-    finally:
-        if own_cache:
-            edges.unpersist()
+
+    with cached(edges) as edges:
+        if edges.agg(F.count_if(F.col(weight) < 0)).first()[0] > 0:
+            raise ValueError(
+                "bellman_ford: negative edge weights are not supported — "
+                "the bounded-round min-merge assumes non-negative costs")
+        dist, _ = iterate(
+            seeds.select(F.col(node_col).alias("node")).distinct()
+            .withColumn("cost", F.lit(0).cast("long")),
+            step, rounds)
     return dist
 
 
@@ -379,19 +262,10 @@ def clustering_coefficient(edges: DataFrame, src: str = "src",
     count over the deduped edge list.  All shuffles key on node ids
     or canonical edges.  Returns ``(node, degree, n_tri, cc)`` for
     every node with degree ≥ 2 (cc undefined below)."""
-    e = (edges.select(F.least(F.col(src), F.col(dst)).alias("lo"),
-                      F.greatest(F.col(src), F.col(dst)).alias("hi"))
-         .where(F.col("lo") != F.col("hi"))
-         .distinct())
+    e, tri = _triangles(edges, src, dst)
     deg = (e.select(F.col("lo").alias("node"))
            .unionAll(e.select(F.col("hi").alias("node")))
            .groupBy("node").agg(F.count("*").cast("long").alias("degree")))
-    b_side = e.select(F.col("lo").alias("a"), F.col("hi").alias("b"))
-    c_side = e.select(F.col("lo").alias("a"), F.col("hi").alias("c"))
-    wedges = (b_side.join(c_side, "a")
-              .where(F.col("b") < F.col("c")))
-    closing = e.select(F.col("lo").alias("b"), F.col("hi").alias("c"))
-    tri = wedges.join(closing, ["b", "c"])
     tri_nodes = (tri.select(F.explode(F.array("a", "b", "c")).alias("node"))
                  .groupBy("node")
                  .agg(F.count("*").cast("long").alias("n_tri")))
@@ -410,83 +284,69 @@ def clustering_coefficient(edges: DataFrame, src: str = "src",
 def min_label_propagation(edges: DataFrame, rounds: int = 3,
                           src: str = "src",
                           dst: str = "dst") -> DataFrame:
-    """X148 — bounded-round minimum-label propagation: every node
-    starts labeled with its own id; each round takes the min of its
-    own label and its in-neighbors' labels.  After k rounds a node's
-    label is exactly the minimum node id within k hops — community
-    seeds on a bounded horizon, and the building block of
+    """Bounded-round minimum-label propagation: every node starts
+    labeled with its own id; each round takes the min of its own label
+    and its in-neighbors' labels.  After k rounds a node's label is
+    exactly the minimum node id within k hops — community seeds on a
+    bounded horizon, and the building block of
     connected-components-by-doubling.
 
     Per round: ONE src-keyed join (labels onto edges) + ONE dst-keyed
-    min + ONE node-keyed min merge — all equi-joins.  Each round's
-    labels are ``localCheckpoint``-ed (merge references the previous
-    labels twice, the bfs_hops/bellman_ford doubling-lineage lesson).
-    Returns ``(node, label)``."""
+    min + ONE node-keyed min merge — all equi-joins.  Returns
+    ``(node, label)``."""
     if rounds < 0:
         raise ValueError(f"min_label_propagation: rounds must be >= 0, "
                          f"got {rounds}")
-    # Cache the edge relation ONCE (round 15): the node derivation
-    # (two union branches) plus every propagation round consumed the
-    # caller's edge plan afresh — measured 8 edge-source row
-    # computations per input row.  Released before return — labels is
-    # an eager checkpoint, independent of edges.
-    # Caller-owned caches are left alone (ADVICE r15, see bfs_hops).
-    own_cache = not _caller_cached(edges)
-    if own_cache:
-        edges = edges.persist()
-    try:
-        nodes = (edges.select(F.col(src).alias("node"))
-                 .unionByName(edges.select(F.col(dst).alias("node")))
-                 .distinct())
-        labels = scoped_local_checkpoint(
-            nodes.withColumn("label", F.col("node")))
-        for _ in range(rounds):
-            incoming = (labels.join(edges, labels["node"] == edges[src])
-                        .groupBy(F.col(dst).alias("node"))
-                        .agg(F.min("label").alias("in_label")))
-            labels = scoped_local_checkpoint(
-                labels.join(incoming, "node", "left")
+
+    def step(labels: DataFrame, _r: int) -> DataFrame:
+        incoming = (labels.join(edges, labels["node"] == edges[src])
+                    .groupBy(F.col(dst).alias("node"))
+                    .agg(F.min("label").alias("in_label")))
+        return (labels.join(incoming, "node", "left")
                 .select("node",
                         F.least(F.col("label"),
                                 F.coalesce("in_label", F.col("label")))
                         .alias("label")))
-    finally:
-        if own_cache:
-            edges.unpersist()
+
+    with cached(edges) as edges:
+        nodes = (edges.select(F.explode(F.array(src, dst)).alias("node"))
+                 .distinct())
+        labels, _ = iterate(nodes.withColumn("label", F.col("node")),
+                            step, rounds)
     return labels
 
 
 def k_core(edges: DataFrame, k: int = 3, rounds: int = 3,
            src: str = "src", dst: str = "dst") -> DataFrame:
-    """X149 — bounded-round k-core peeling: iteratively drop nodes
-    with degree < k (recomputing degrees in the induced subgraph),
+    """Bounded-round k-core peeling: iteratively drop nodes with
+    degree < k (recomputing degrees in the induced subgraph),
     ``rounds`` times — the dense-cohesion filter that separates a
     genuinely interlinked community from a star around one hub
     (remove the hub's pendants and the star evaporates; a true core
     survives).  ``edges`` must contain both directions.
 
     Per round: ONE node-keyed degree count + TWO semi-joins filtering
-    the edge set; the edge set shrinks monotonically and each round's
-    survivor edges are ``localCheckpoint``-ed.  A fixed round budget
+    the edge set, which shrinks monotonically.  A fixed round budget
     makes the result exact for "survives r peels", the monotone
     approximation of the true core from above.  Returns
     ``(node, degree)`` for surviving nodes with their final induced
     degree."""
     if k < 1:
         raise ValueError(f"k_core: k must be >= 1, got {k}")
-    e = scoped_local_checkpoint(
-        edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
-        .filter(F.col("s") != F.col("d")).distinct())
-    for _ in range(rounds):
-        deg = e.groupBy(F.col("s").alias("node")) \
-               .agg(F.count("*").alias("deg"))
-        keep = deg.filter(F.col("deg") >= k).select("node")
-        e = scoped_local_checkpoint(
-            e.join(keep.withColumnRenamed("node", "s"), "s",
-                   "left_semi")
-            .join(keep.withColumnRenamed("node", "d"), "d",
-                  "left_semi"))
-    return (e.groupBy(F.col("s").alias("node"))
+
+    def step(e: DataFrame, _r: int) -> DataFrame:
+        keep = (e.groupBy(F.col("s").alias("node"))
+                .agg(F.count("*").alias("deg"))
+                .filter(F.col("deg") >= k).select("node"))
+        return (e.join(keep.withColumnRenamed("node", "s"), "s",
+                       "left_semi")
+                .join(keep.withColumnRenamed("node", "d"), "d",
+                      "left_semi"))
+
+    simple = (edges.select(F.col(src).alias("s"), F.col(dst).alias("d"))
+              .filter(F.col("s") != F.col("d")).distinct())
+    core, _ = iterate(simple, step, rounds)
+    return (core.groupBy(F.col("s").alias("node"))
             .agg(F.count("*").cast("long").alias("degree")))
 
 
@@ -494,81 +354,48 @@ def hits_scores(edges: DataFrame, src_col: str = "src",
                 dst_col: str = "dst", weight_col: str = "w",
                 iters: int = 3,
                 round_digits: int = 9) -> DataFrame:
-    """X194 — HITS hubs & authorities on a weighted DIRECTED edge
-    list: hubs point at good authorities, authorities are pointed at
-    by good hubs — the mutually-reinforcing fixpoint Kleinberg
-    defined, and a genuinely different ranking from X33's PageRank
-    (no teleport, no out-degree division; a node's hub score and
-    authority score are separate numbers).
+    """HITS hubs & authorities on a weighted DIRECTED edge list: hubs
+    point at good authorities, authorities are pointed at by good hubs
+    — the mutually-reinforcing fixpoint Kleinberg defined, and a
+    genuinely different ranking from :func:`pagerank` (no teleport, no
+    out-degree division; a node's hub score and authority score are
+    separate numbers).
 
-    Scale shape — per iteration exactly TWO edge-keyed join+aggregate
-    passes (edges ⋈ authority on dst → sum per src; edges ⋈ hub on
-    src → sum per dst), the X33 discipline.  Normalization is
-    deferred to the END: unnormalized power iteration is a scalar
-    multiple of the normalized one, so dividing once by the final L1
-    mass gives the same scores while avoiding two per-iteration
-    global reductions; over ``iters`` rounds the raw values grow only
-    like (weighted degree)^iters, far inside double range.  The final
-    1-row totals join on a derived constant key (BroadcastHashJoin).
-    Returns ``(kind 'hub'|'authority', node, score)``.
-
-    Contract (round 15, same as
-    :func:`~sync_cosmos_db_spark.operators.dedup.connected_components`):
-    the output is backed by EAGER, scope-registered ``localCheckpoint``
-    frames — lineage-truncated, safe for any number of consumers
-    without caller-side persistence, but NOT recomputable: after
-    ``cache_scope.release_persisted()`` any not-yet-consumed
-    derivative raises CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND instead of
-    silently recomputing as a lazy output would.  Consume it fully
-    before releasing the scope.
+    With ``A(h)`` = Σ w·h over in-edges and ``H(a)`` = Σ w·a over
+    out-edges, the state is the hub vector: ``h₁ = H(1)``, then
+    ``h ← H(A(h))``; the authorities ``a = A(h)`` are derived once from
+    the final ``h``.  Each is one edge-keyed join + aggregate.
+    Normalization is deferred to the END: unnormalized power iteration
+    is a scalar multiple of the normalized one, so dividing once by
+    the final L1 mass gives the same scores while avoiding two
+    per-round global reductions; over ``iters`` rounds the raw values
+    grow only like (weighted degree)^iters, far inside double range.
+    The final 1-row totals join on a derived constant key
+    (BroadcastHashJoin).  Returns ``(kind 'hub'|'authority', node,
+    score)`` over the eager checkpoints of ``h`` and ``a``.
     """
     if iters < 1:
         raise ValueError(f"hits_scores: iters must be >= 1, got {iters}")
     e = edges.select(F.col(src_col).alias("s"),
                      F.col(dst_col).alias("d"),
                      F.col(weight_col).cast("double").alias("w"))
-    # Cache the edge relation ONCE and checkpoint the converged
-    # scores (round 15): the lazy h/a chains reference e 2×iters + 1
-    # times, and the final hub∪authority union executed the ENTIRE
-    # converged chain once per branch — the same consume-lazy-output-
-    # twice shape as the round-14 connected_components finding.  The
-    # checkpointed h/a are node-sized (tiny at any scale); e is
-    # released before return since the checkpoints are eager.
-    # When the CALLER already cached the edges frame, skip the own
-    # persist (ADVICE r15): e is a narrow projection of the cached
-    # frame, so every pass reads the caller's cache, and persisting /
-    # unpersisting here would duplicate then drop nothing useful.
-    own_cache = not _caller_cached(edges)
-    if own_cache:
-        e = e.persist()
-    try:
-        # a_0 = 1 for every authority (distinct dst)
-        a = e.select(F.col("d").alias("node")).distinct() \
-             .withColumn("a", F.lit(1.0))
-        h = None
-        for _ in range(iters):
-            h = (e.join(a.withColumnRenamed("node", "d"), "d")
-                 .groupBy(F.col("s").alias("node"))
-                 .agg(F.sum(F.col("w") * F.col("a")).alias("h")))
-            a = (e.join(h.withColumnRenamed("node", "s"), "s")
-                 .groupBy(F.col("d").alias("node"))
-                 .agg(F.sum(F.col("w") * F.col("h")).alias("a")))
-        # Checkpoint h, then REBUILD a from the checkpointed h before
-        # checkpointing it: the loop's final `a` references the LAZY h
-        # chain, so checkpointing it directly re-executes every
-        # iteration a second time (measured: the r15 sweep put the
-        # hits member at 6.1 s spark-side vs 4.3 in r14 — the naive
-        # double-checkpoint was slower than the double-execution it
-        # replaced).  a_n = f(h_n) exactly, so this is one cheap
-        # join+agg over the cached e and the tiny checkpointed h.
-        h = scoped_local_checkpoint(h)
-        a = scoped_local_checkpoint(
-            e.join(h.withColumnRenamed("node", "s"), "s")
-            .groupBy(F.col("d").alias("node"))
-            .agg(F.sum(F.col("w") * F.col("h")).alias("a")))
-    finally:
-        if own_cache:
-            e.unpersist()
+
+    def hubs(a: DataFrame) -> DataFrame:
+        return (e.join(a.withColumnRenamed("node", "d"), "d")
+                .groupBy(F.col("s").alias("node"))
+                .agg(F.sum(F.col("w") * F.col("a")).alias("h")))
+
+    def authorities(h: DataFrame) -> DataFrame:
+        return (e.join(h.withColumnRenamed("node", "s"), "s")
+                .groupBy(F.col("d").alias("node"))
+                .agg(F.sum(F.col("w") * F.col("h")).alias("a")))
+
+    with cached(e) as e:
+        a0 = (e.select(F.col("d").alias("node")).distinct()
+              .withColumn("a", F.lit(1.0)))
+        h, _ = iterate(hubs(a0), lambda h, _r: hubs(authorities(h)),
+                       iters - 1)
+        a = scoped_local_checkpoint(authorities(h))
     p = 10 ** round_digits
     ht = (h.agg(F.sum("h").alias("t"))
           .withColumn("__k", F.floor(F.col("t") * 0)))

@@ -95,11 +95,6 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def l2_normalize(a: Column) -> Column:
-    n = norm(a)
-    return F.transform(_dbl(a), lambda x: x / n)
-
-
 # ---------------------------------------------------------------------------
 # X3/X4 — exact brute-force top-k
 # ---------------------------------------------------------------------------

@@ -608,6 +608,25 @@ EDITED_ROUND.update(dict.fromkeys(
      "sim_topk_bruteforce", "sim_topk_vectorized", "sim_topk_lsh",
      "sim_topk_ivf_fullprobe", "sim_topk_ivf", "sim_topk_ivf_persisted",
      "sim_topk_lsh_fullcollide"], 19))
+# The seven fixed-point loops (graph.pagerank, bfs_hops, bellman_ford,
+# min_label_propagation, k_core, hits_scores, dedup.connected_components)
+# now run on operators/iteration.iterate: one checkpoint per round, each
+# freed when the next lands, convergence observed on the checkpoint
+# job.  Results bit-identical; these 11 queries reach them.
+# Staging directories now come from cache_scope.scoped_tempdir and go
+# with release_persisted(); catalog_properties_roundtrip raises instead
+# of asserting its database listing.  Results unchanged.
+EDITED_ROUND.update(dict.fromkeys("""
+curation_pipeline_stats curation_pipeline_stats_sampled kcore_docs
+pagerank_customer_supplier dedup_components bfs_3hop_nation1
+hits_customer_supplier canonical_doc_election_sampled
+bellman_ford_trade_distance canonical_doc_election label_propagation_docs
+orc_roundtrip_documents compact_roundtrip_documents
+actions_partitioned_counts migration_metrics_summary
+jsonl_roundtrip_documents csv_roundtrip_documents
+catalog_properties_roundtrip bpe_encode_documents
+zorder_roundtrip_documents binaryfile_ingest_documents
+partition_pruned_read_en""".split(), 19))
 
 # Round-17 no-entry decisions: graph.py's caller-cache detection fix
 # (storageLevel instead of is_cached) changes NOTHING for the

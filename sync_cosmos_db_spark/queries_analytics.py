@@ -12,11 +12,11 @@ just structurally.
 from __future__ import annotations
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sync_cosmos_db_spark.cache_scope import scoped_tempdir
 from sync_cosmos_db_spark.migration import snapshot_diff
 from sync_cosmos_db_spark.operators import behavioral as BH
 from sync_cosmos_db_spark.operators import profiling as P
@@ -427,7 +427,7 @@ def orc_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sync_cosmos_db_spark.sources.orc import read_orc, write_orc
 
     docs = load_table(spark, sf_dir, "documents")
-    d = os.path.join(tempfile.mkdtemp(prefix="orc_rt_"), "docs")
+    d = os.path.join(scoped_tempdir("orc_rt_"), "docs")
     write_orc(docs.select("doc_id", "source", "text", "lang"), d,
               partition_by=["lang"])
     back = read_orc(spark, d,
@@ -524,7 +524,7 @@ def compact_roundtrip_documents(spark: SparkSession,
     from sync_cosmos_db_spark.sinks import compact_parquet
 
     docs = load_table(spark, sf_dir, "documents")
-    d = os.path.join(tempfile.mkdtemp(prefix="compact_rt_"), "docs")
+    d = os.path.join(scoped_tempdir("compact_rt_"), "docs")
     docs.select("doc_id", "lang", "text").repartition(24) \
         .write.parquet(d)
     compact_parquet(spark, d, target_file_mb=256)

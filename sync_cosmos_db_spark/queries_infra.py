@@ -19,6 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sync_cosmos_db_spark.cache_scope import scoped_tempdir
 from sync_cosmos_db_spark.migration import (
     classify_actions,
     merge_target_state,
@@ -125,7 +126,7 @@ def actions_partitioned_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src, tgt = _derived_source_target(spark, sf_dir)
     tagged = classify_actions(src, tgt, keys=["doc_id"])
-    d = tempfile.mkdtemp(prefix="actions_sink_")
+    d = scoped_tempdir("actions_sink_")
     path = os.path.join(d, "actions.parquet")
     write_actions_parquet(tagged, path)
     return (spark.read.parquet(path)
@@ -152,7 +153,7 @@ def merge_writeback_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sync_cosmos_db_spark.sinks import merge_to_parquet
 
     src, tgt = _derived_source_target(spark, sf_dir)
-    d = tempfile.mkdtemp(prefix="merge_wb_")
+    d = scoped_tempdir("merge_wb_")
     target_path = os.path.join(d, "target.parquet")
     tgt.write.mode("overwrite").parquet(target_path)
     seeded = spark.read.parquet(target_path)
@@ -194,7 +195,7 @@ def migration_metrics_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     src, tgt = _derived_source_target(spark, sf_dir)
     _, result = migrate_container(src, tgt, keys=["doc_id"],
                                   container="documents")
-    d = tempfile.mkdtemp(prefix="summary_")
+    d = scoped_tempdir("summary_")
     path = os.path.join(d, "summary.json")
     write_summary({"db": {"documents": result}}, path)
     s = spark.read.option("multiLine", "true").json(path)
@@ -224,7 +225,7 @@ def jsonl_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sync_cosmos_db_spark.sources.jsonl import read_jsonl, write_jsonl
 
     docs = load_table(spark, sf_dir, "documents")
-    d = os.path.join(tempfile.mkdtemp(prefix="jsonl_rt_"), "docs")
+    d = os.path.join(scoped_tempdir("jsonl_rt_"), "docs")
     write_jsonl(docs.select("doc_id", "source", "text", "lang"), d,
                 partition_by=["lang"])
     back = read_jsonl(spark, d,
@@ -255,7 +256,7 @@ def csv_roundtrip_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     from sync_cosmos_db_spark.sources.csv import read_csv, write_csv
 
     docs = load_table(spark, sf_dir, "documents")
-    d = os.path.join(tempfile.mkdtemp(prefix="csv_rt_"), "docs")
+    d = os.path.join(scoped_tempdir("csv_rt_"), "docs")
     write_csv(docs.select("doc_id", "source", "text", "lang"), d,
               partition_by=["lang"])
     back = read_csv(spark, d,
@@ -319,7 +320,9 @@ def catalog_properties_roundtrip(spark: SparkSession,
         docs.write.mode("overwrite").parquet(
             C.container_data_path(root, "analytics", "documents"))
 
-        assert C.list_databases(root) == ["analytics"]
+        if C.list_databases(root) != ["analytics"]:
+            raise RuntimeError("create-if-absent left databases other "
+                               "than ['analytics'] in the catalog")
         listed = set(C.list_containers(root, "analytics"))
         rows = []
         for name in ["documents", "events"]:

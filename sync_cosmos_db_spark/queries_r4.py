@@ -590,13 +590,12 @@ def bpe_encode_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     + word-keyed join (merge arithmetic amortized over distinct words,
     never per token).  Output: per-doc word/token counts + token-stream
     sha."""
-    import tempfile
-
+    from sync_cosmos_db_spark.cache_scope import scoped_tempdir
     from sync_cosmos_db_spark.operators import bpe as B
 
     docs = load_table(spark, sf_dir, "documents")
     merges = B.bpe_learn(spark, docs, 8)
-    path = tempfile.mkdtemp(prefix="bpe_merges_") + "/merges"
+    path = scoped_tempdir("bpe_merges_") + "/merges"
     B.save_merges(spark, merges, path)
     enc = B.encode_documents(docs, B.load_merges(spark, path))
     return enc.select("doc_id", "n_words", "n_tokens",

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sync_cosmos_db_spark.cache_scope import scoped_tempdir
 from sync_cosmos_db_spark.queries import fsum, query
 from sync_cosmos_db_spark.session import load_table
 
@@ -291,12 +292,11 @@ def zorder_roundtrip_documents(spark: SparkSession,
     dimensions, which is what makes either predicate prune files at
     100 TB — is pinned by ``tests/test_sinks.py``."""
     import os
-    import tempfile
 
     from sync_cosmos_db_spark.sinks import write_zordered
 
     docs = load_table(spark, sf_dir, "documents")
-    path = os.path.join(tempfile.mkdtemp(prefix="zorder_"), "docs.parquet")
+    path = os.path.join(scoped_tempdir("zorder_"), "docs.parquet")
     write_zordered(docs, path, ["n_chars", "doc_id"], num_files=8)
     back = spark.read.parquet(path)
     return back.select("doc_id", "n_chars", "lang",
@@ -688,7 +688,6 @@ DuckDB-recomputable oracles.
 
 
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -723,7 +722,7 @@ def binaryfile_ingest_documents(spark: SparkSession,
     bytes load, and the decode is a narrow projection."""
     docs = (load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < 100))
-    path = os.path.join(tempfile.mkdtemp(prefix="binaryfile_"), "docs")
+    path = os.path.join(scoped_tempdir("binaryfile_"), "docs")
     (docs.select("doc_id", "text")
      .repartition(8)
      .write.partitionBy("doc_id").mode("overwrite").text(path))
@@ -761,7 +760,7 @@ def partition_pruned_read_en(spark: SparkSession,
     from sync_cosmos_db_spark.sinks import write_partitioned
 
     docs = load_table(spark, sf_dir, "documents")
-    path = os.path.join(tempfile.mkdtemp(prefix="partsink_"), "docs")
+    path = os.path.join(scoped_tempdir("partsink_"), "docs")
     write_partitioned(docs, path, ["lang"])
     back = spark.read.parquet(path).filter(F.col("lang") == "en")
     return back.select("doc_id", F.col("lang").cast("string").alias("lang"),

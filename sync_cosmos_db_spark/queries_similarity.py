@@ -16,11 +16,10 @@ asserted in tests/test_similarity.py and tests/test_ivf.py.
 
 from __future__ import annotations
 
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from sync_cosmos_db_spark.cache_scope import scoped_tempdir
 from sync_cosmos_db_spark.operators import ivf as IVF
 from sync_cosmos_db_spark.operators import similarity as S
 from sync_cosmos_db_spark.queries import query
@@ -123,7 +122,7 @@ def sim_topk_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     unread clusters at the file level in production."""
     emb, queries = _corpus_and_queries(spark, sf_dir)
     cents = IVF.train_centroids(emb, dim=64, n_clusters=8, iters=3)
-    path = tempfile.mkdtemp(prefix="ivf_index_")
+    path = scoped_tempdir("ivf_index_")
     IVF.save_index(emb, cents, path)
     return IVF.ivf_topk_from_index(spark, path, queries, k=3, nprobe=8)
 

@@ -29,12 +29,12 @@ checked against the batch SQL of the same computation.
 from __future__ import annotations
 
 import os
-import tempfile
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from sync_cosmos_db_spark.cache_scope import scoped_tempdir
 from sync_cosmos_db_spark.queries import fround, query
 from sync_cosmos_db_spark.session import load_table
 from sync_cosmos_db_spark.streaming import windows as SW
@@ -153,7 +153,7 @@ def _cdc_replay(spark: SparkSession, sf_dir: str):
     written as 4 files and replayed one file per micro-batch."""
     snap = _orders_snapshot(spark, sf_dir)
     changes = build_cdc_changes(snap)
-    work = tempfile.mkdtemp(prefix="cdc_stream_")
+    work = scoped_tempdir("cdc_stream_")
     feed = os.path.join(work, "feed")
     changes.repartition(4).write.parquet(feed)
     return snap, _file_stream(spark, changes.schema, feed), work
@@ -265,7 +265,7 @@ def _events_replay(spark: SparkSession, sf_dir: str):
     )
 
     ev = load_table(spark, sf_dir, "events")
-    work = tempfile.mkdtemp(prefix="rl_stream_")
+    work = scoped_tempdir("rl_stream_")
     feed = os.path.join(work, "feed")
     write_event_time_slices(ev, feed, n_slices=4)
     return _file_stream(spark, ev.schema, feed), work
