@@ -608,6 +608,14 @@ EDITED_ROUND.update(dict.fromkeys(
      "sim_topk_bruteforce", "sim_topk_vectorized", "sim_topk_lsh",
      "sim_topk_ivf_fullprobe", "sim_topk_ivf", "sim_topk_ivf_persisted",
      "sim_topk_lsh_fullcollide"], 19))
+# The live change-log compaction and the running user totals are now
+# state-store aggregates (a min over an order-preserving struct; a
+# count and an integer-cents sum), and the TWS compaction step ranks a
+# null seq last and a null op first, as collapse_changelog does.
+# Results unchanged on the registered feeds.
+EDITED_ROUND.update(dict.fromkeys(
+    ["stream_cdc_apply_orders", "stream_cdc_apply_orders_tws",
+     "stream_stateful_user_totals"], 19))
 # The seven fixed-point loops (graph.pagerank, bfs_hops, bellman_ford,
 # min_label_propagation, k_core, hits_scores, dedup.connected_components)
 # now run on operators/iteration.iterate: one checkpoint per round, each

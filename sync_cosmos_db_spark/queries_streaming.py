@@ -189,8 +189,10 @@ def stream_cdc_apply_orders(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     """X156 — streaming change-log compaction, live state-store engine
     (``stateful.changelog_compact_stream``), merged into the snapshot.
-    The stream keeps a keys-sized compacted log, so the merge never
-    re-reads the feed."""
+    The state store's own aggregate keeps the per-key winner in the
+    JVM, one min over a struct that orders as the collapse does, so no
+    row crosses into Python.  The stream keeps a keys-sized compacted
+    log, so the merge never re-reads the feed."""
     from sync_cosmos_db_spark.streaming.stateful import (
         changelog_compact_stream,
     )
@@ -222,7 +224,7 @@ def stream_cdc_apply_orders_tws(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     """X156 on Spark 4's ``transformWithStateInPandas``
     (``stateful.changelog_compact_stream_tws``), under the RocksDB
-    state store."""
+    state store: the per-key Python fold of the collapse order."""
     from sync_cosmos_db_spark.streaming.stateful import (
         changelog_compact_stream_tws,
         rocksdb_state_store,
@@ -371,10 +373,10 @@ def _purchases_clicks(events: DataFrame) -> tuple[DataFrame, DataFrame]:
     """,
 )
 def stream_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """X7: custom stateful streaming operator — per-user running totals
-    via ``applyInPandasWithState`` in update mode. The LAST emission
-    per key is the final state, which must equal the batch aggregate the
-    oracle computes."""
+    """X7: stateful streaming operator — per-user running totals as
+    one state-store aggregate (a count and a sum of integer cents) in
+    update mode.  The LAST emission per key is the final state, which
+    must equal the batch aggregate the oracle computes."""
     from sync_cosmos_db_spark.streaming.stateful import running_user_totals
 
     mem = _to_memory(spark, running_user_totals(_events_stream(spark, sf_dir)))

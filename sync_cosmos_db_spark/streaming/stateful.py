@@ -13,25 +13,31 @@ with identical semantics:
 
 The engines:
 
-* **live** — ``applyInPandasWithState``, one flat state row per key;
+* **live** — the state store holds the state in the JVM.  Compaction
+  is one streaming ``min`` over a struct that orders as the collapse
+  does, so no row crosses into Python; the rate limiter runs its
+  per-key step under ``applyInPandasWithState``, because its per-batch
+  admitted partials depend on the state, not on a mergeable summary;
 * **TWS** — Spark 4 ``transformWithStateInPandas`` with a typed
-  ``ValueState``, gated by :func:`transform_with_state_available` and
-  run under :func:`rocksdb_state_store`;
+  ``ValueState`` and one per-key step per machine (``_cdc_step``,
+  ``_rate_limit_step``), gated by :func:`transform_with_state_available`
+  and run under :func:`rocksdb_state_store`;
 * **batch merge** — ``foreachBatch`` over a keys-sized parquet table
   with zero per-key Python dispatch: the scale path.
 
-The live and TWS forms of a machine call the same per-key step
+The rate limiter's live and TWS forms call the same per-key step
 ``step(key, prev_state_or_None, chunks) -> (state, out_pdf)``; the
 batch-merge forms share one versioned ``foreachBatch`` body and one
 ``availableNow`` runner.  This module ships itself by value, so Python
 workers never import the package.  ``running_user_totals`` is a third,
-single-engine machine: running (count, sum) per user.
+single-engine machine: running (count, sum) per user, one state-store
+aggregate.
 
 Scale: state lives in the state store partitioned by the grouping key,
 so the shuffle is on that key only and state is O(distinct keys).  The
-live and TWS engines cross the Python boundary once per key per batch
-(~20k keys/s/batch); past bounded active-key sets, use the batch-merge
-forms (SCALING.md).
+Python steps (TWS, and the live rate limiter) cross the Python boundary
+once per key per batch (~20k keys/s/batch); past bounded active-key
+sets, use the batch-merge forms (SCALING.md).
 """
 
 from __future__ import annotations
@@ -69,8 +75,9 @@ _ROCKSDB_PROVIDER = ("org.apache.spark.sql.execution.streaming."
 
 def _with_state(grouped, step, out_schema: str,
                 state_schema: str) -> DataFrame:
-    """Live engine: ``applyInPandasWithState`` in update mode, so each
-    micro-batch emits one row per key it touched."""
+    """The rate limiter's live engine: ``applyInPandasWithState`` in
+    update mode, so each micro-batch emits one row per key it
+    touched."""
 
     def update(key, pdfs, state):
         new, out = step(key, state.get if state.exists else None, pdfs)
@@ -209,24 +216,32 @@ _CDC_STATE_SCHEMA = ("seq bigint, op string, price double, "
                      "status string")
 
 
+def _cdc_rank(seq, op) -> tuple:
+    """The collapse order (seq DESC NULLS LAST, op ASC NULLS FIRST) of
+    ``collapse_changelog`` as an ascending Python key."""
+    return (seq is None, -(seq or 0), op is not None, op or "")
+
+
 def _cdc_step(key, prev, chunks):
-    """Fold one key's events onto its previous winner, row by row under
-    (seq DESC, op ASC).  The order is total, so the row fold equals
-    taking each chunk's winner first; per-key groups are a handful of
-    rows, where ``tolist()`` and a Python fold beat a pandas sort
-    (~25 us vs ~555 us per key)."""
-    seq, op, price, status = prev if prev is not None else (None,) * 4
+    """TWS step: fold one key's events onto its previous winner, row by
+    row under the collapse order.  The order is total, so the row fold
+    equals taking each chunk's winner first; per-key groups are a
+    handful of rows, where ``tolist()`` and a Python fold beat a pandas
+    sort (~25 us vs ~555 us per key).  ``seq`` arrives as a decimal
+    (see :func:`changelog_compact_stream_tws`) and leaves as an int."""
+    best = prev
     for pdf in chunks:
-        for r_seq, r_op, r_price, r_status in zip(
-                pdf["seq"].tolist(), pdf["op"].tolist(),
-                pdf["o_totalprice"].tolist(),
-                pdf["o_orderstatus"].tolist()):
-            if seq is None or r_seq > seq or (r_seq == seq and r_op < op):
-                seq, op = int(r_seq), str(r_op)
-                price, status = float(r_price), str(r_status)
+        for row in zip(pdf["seq"].tolist(), pdf["op"].tolist(),
+                       pdf["o_totalprice"].tolist(),
+                       pdf["o_orderstatus"].tolist()):
+            if best is None or _cdc_rank(*row[:2]) < _cdc_rank(*best[:2]):
+                best = row
+    seq, op, price, status = best
+    seq = None if seq is None else int(seq)
     return (seq, op, price, status), pd.DataFrame({
         "o_orderkey": [key[0]], "o_totalprice": [price],
-        "o_orderstatus": [status], "seq": [seq], "op": [op]})
+        "o_orderstatus": [status],
+        "seq": pd.array([seq], dtype="Int64"), "op": [op]})
 
 
 def changelog_compact_stream(changes: DataFrame) -> DataFrame:
@@ -236,20 +251,39 @@ def changelog_compact_stream(changes: DataFrame) -> DataFrame:
     keys-sized log so the periodic snapshot merge never replays the
     feed.
 
+    The winner is the minimum of one struct per event, so the state
+    store's own streaming aggregate holds it in the JVM with no Python
+    crossing.  The struct orders as the collapse does: ``seq IS NULL``
+    first ranks a null seq last, ``~seq`` decreases strictly over every
+    bigint (``-seq`` overflows at the minimum), and a null ``op`` sorts
+    first, as ``op ASC`` does.
+
     Update mode re-emits a key's winner whenever a batch touches it.
     Emissions are monotone under the collapse order, so the last
     emission per key is the final winner and one more collapse over
     the emitted table (``cdc.apply_changelog`` does it) finishes the
     job.  ``changes`` must carry ``(o_orderkey, o_totalprice,
-    o_orderstatus, seq, op)``."""
-    return _with_state(changes.groupBy("o_orderkey"), _cdc_step,
-                       _CDC_OUT_SCHEMA, _CDC_STATE_SCHEMA)
+    o_orderstatus, seq, op)``.  The state schema is part of a
+    streaming checkpoint: a checkpoint written by the earlier
+    ``applyInPandasWithState`` form of this engine cannot be
+    resumed."""
+    seq = F.col("seq")
+    w = (changes.groupBy("o_orderkey")
+         .agg(F.min(F.struct(seq.isNull().alias("null_seq"),
+                             F.bitwise_not(seq).alias("not_seq"),
+                             "op", "o_totalprice", "o_orderstatus"))
+              .alias("w")))
+    return w.select("o_orderkey", "w.o_totalprice", "w.o_orderstatus",
+                    F.bitwise_not("w.not_seq").alias("seq"), "w.op")
 
 
 def changelog_compact_stream_tws(changes: DataFrame) -> DataFrame:
-    """:func:`changelog_compact_stream` on the TWS engine: same step,
-    same output schema and emissions."""
-    return _transform_with_state(changes.groupBy("o_orderkey"), _cdc_step,
+    """:func:`changelog_compact_stream` on the TWS engine: the per-key
+    :func:`_cdc_step` fold, same output schema and emissions."""
+    # seq crosses into pandas as decimal: a bigint column holding a
+    # null arrives as float64, which rounds seqs beyond 2**53
+    exact = changes.withColumn("seq", F.col("seq").cast("decimal(20,0)"))
+    return _transform_with_state(exact.groupBy("o_orderkey"), _cdc_step,
                                  _CDC_OUT_SCHEMA, "winner",
                                  _CDC_STATE_SCHEMA)
 
@@ -424,38 +458,21 @@ def run_rate_limit_batchmerge(events_stream: DataFrame, state_dir: str,
 # Running per-user totals (X7)
 # ---------------------------------------------------------------------------
 
-_OUT_SCHEMA = "user_id bigint, n_events bigint, sum_value double"
-# The state sum is integer cents: per-group pandas float accumulation
-# sums pairwise, in an association that differs from the batch
-# oracle's; snapping each value to cents first makes the running sum
-# exact.  The state schema is part of a streaming checkpoint, so a
-# query restarted from a checkpoint whose ``s`` was a double sum fails
-# (or misreads ``s`` by a factor of 100): start such queries from a
-# fresh checkpoint location.
-_STATE_SCHEMA = "n bigint, s bigint"
-
-
-def _user_totals_step(key, prev, chunks):
-    n, s = prev if prev is not None else (0, 0)
-    for pdf in chunks:
-        n += len(pdf)
-        s += int(np.floor(pdf["value"].to_numpy() * 100
-                          + 0.5).astype("int64").sum())
-    return (n, s), pd.DataFrame({"user_id": [key[0]], "n_events": [n],
-                                 "sum_value": [s / 100.0]})
-
-
 def running_user_totals(events: DataFrame,
                         watermark: str = DEFAULT_WATERMARK) -> DataFrame:
-    """Streaming per-user running (count, sum) with explicit state.
-    Update mode: each micro-batch emits the keys it touched with their
-    cumulative totals, so the final emission per key equals the batch
-    ``groupBy(user).agg(count, sum)``."""
-    # only the key, the watermark column and ``value`` cross into Python
-    ev = (events.select("user_id", "ts", "value")
-          .withWatermark("ts", watermark))
-    return _with_state(ev.groupBy("user_id"), _user_totals_step,
-                       _OUT_SCHEMA, _STATE_SCHEMA)
+    """Streaming per-user running (count, sum) as one state-store
+    aggregate.  Update mode: each micro-batch emits the keys it touched
+    with their cumulative totals, so the final emission per key equals
+    the batch ``groupBy(user).agg(count, sum)``.  The sum is of integer
+    cents, so any grouping of the additions gives the same exact
+    total.  The state schema is part of a streaming checkpoint: start
+    from a fresh checkpoint location a query whose checkpoint was
+    written by the earlier ``applyInPandasWithState`` form."""
+    cents = F.floor(F.col("value") * 100 + 0.5).cast("long")
+    return (events.withWatermark("ts", watermark)
+            .groupBy("user_id")
+            .agg(F.count(F.lit(1)).alias("n_events"),
+                 (F.sum(cents) / 100.0).alias("sum_value")))
 
 
 register_pickle_by_value(__name__)

@@ -27,7 +27,8 @@ def test_tumbling_stream_matches_batch(spark, sf_dir):
 
 
 def test_stateful_running_totals_matches_batch(spark, sf_dir):
-    """applyInPandasWithState: final per-key state == batch aggregate."""
+    """State-store aggregate: final per-key emission == batch
+    aggregate."""
     from pyspark.sql import Window as W
     from pyspark.sql import functions as F
 
@@ -490,6 +491,78 @@ def test_changelog_compact_tws_matches_live_form(spark, tmp_path):
         (1, 3, "d"), (2, 5, "d"), (3, 1, "u")]
 
 
+def test_changelog_compaction_engines_agree_on_nulls_and_extremes(
+        spark, tmp_path):
+    """Every compaction engine picks the ``collapse_changelog`` winner
+    (seq DESC NULLS LAST, op ASC NULLS FIRST) across two micro-batches:
+    a null seq ranks last, a null op first at equal seq, a tombstone
+    beats an upsert at equal seq, and seq = 2**63 - 1 and -2**63 order
+    exactly, with a null seq in the same micro-batch."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from sync_cosmos_db_spark.operators.cdc import collapse_changelog
+    from sync_cosmos_db_spark.streaming import stateful as ST
+
+    i64_max, i64_min = 2**63 - 1, -2**63
+    schema = pa.schema([("o_orderkey", pa.int64()),
+                        ("o_totalprice", pa.float64()),
+                        ("o_orderstatus", pa.string()),
+                        ("seq", pa.int64()), ("op", pa.string())])
+    feed = [
+        # key 1: a null seq arrives after seq 5 and loses
+        # key 2: only null seqs, so the tombstone wins on op
+        # key 3: a null op at equal seq beats the tombstone
+        # key 4: an equal-seq tombstone beats the upsert
+        # key 5: the largest seq wins by 1
+        # key 6: the smallest seq still beats a null seq
+        # key 7: one event one above the smallest seq
+        [(1, 1.0, "a", 5, "U"), (2, 2.0, "a", None, "U"),
+         (3, 3.0, "a", 4, "D"), (4, 4.0, "a", 7, "U"),
+         (5, 5.0, "a", i64_max - 1, "U"), (6, 6.0, "a", None, "U")],
+        [(1, 1.5, "b", None, "U"), (2, 2.5, "b", None, "D"),
+         (3, 3.5, "b", 4, None), (4, 4.5, "b", 7, "D"),
+         (5, 5.5, "b", i64_max, "U"), (6, 6.5, "b", i64_min, "U"),
+         (7, 7.0, "b", i64_min + 1, "U")],
+    ]
+    src = tmp_path / "feed"
+    src.mkdir()
+    for i, rows in enumerate(feed):
+        path = str(src / f"b{i}.parquet")
+        pq.write_table(pa.Table.from_pylist(
+            [dict(zip(schema.names, r)) for r in rows], schema), path)
+        os.utime(path, (1_000_000_000 + i * 1000,) * 2)
+
+    def stream():
+        return (spark.readStream.schema(ST._CDC_OUT_SCHEMA)
+                .option("maxFilesPerTrigger", 1).parquet(str(src)))
+
+    def winners(df):
+        return sorted(
+            (r.o_orderkey, r.seq, r.op, r.o_totalprice, r.o_orderstatus)
+            for r in collapse_changelog(df, ["o_orderkey"], "seq").collect())
+
+    got = {
+        "batch": winners(spark.read.parquet(str(src))),
+        "live": winners(SW.run_stream_to_memory(
+            spark, ST.changelog_compact_stream(stream()), "cdc_null_live",
+            mode="update")),
+        "batchmerge": winners(ST.run_changelog_compaction(
+            stream(), str(tmp_path / "state"), ["o_orderkey"], "seq")),
+    }
+    if ST.transform_with_state_available():
+        with ST.rocksdb_state_store(spark):
+            got["tws"] = winners(SW.run_stream_to_memory(
+                spark, ST.changelog_compact_stream_tws(stream()),
+                "cdc_null_tws", mode="update"))
+    want = [(1, 5, "U", 1.0, "a"), (2, None, "D", 2.5, "b"),
+            (3, 4, None, 3.5, "b"), (4, 7, "D", 4.5, "b"),
+            (5, i64_max, "U", 5.5, "b"), (6, i64_min, "U", 6.5, "b"),
+            (7, i64_min + 1, "U", 7.0, "b")]
+    for engine, rows in got.items():
+        assert rows == want, engine
+
+
 def test_write_event_time_slices_matches_ntile(spark, sf_dir, tmp_path):
     """r18: the two-phase-rank slicer must reproduce EXACT ntile(4)
     slice membership under the global (ts, event_id) order — one file
@@ -757,6 +830,41 @@ def test_streaming_layer_structure():
     assert rocksdb == ["sync_cosmos_db_spark/streaming/stateful.py"]
     assert not asserts, asserts
     assert not overrides, overrides
+
+
+def test_state_store_aggregates_cross_no_python(spark, tmp_path):
+    """Change-log compaction and the running totals are state-store
+    aggregates: their analyzed plans hold no
+    ``FlatMapGroupsInPandasWithState`` node (the rate limiter's live
+    plan, the control, does), and the rate-limit machine is the only
+    caller of ``_with_state``."""
+    import ast
+
+    from sync_cosmos_db_spark.streaming import stateful as ST
+
+    def stream(schema):
+        return spark.readStream.schema(schema).parquet(str(tmp_path))
+
+    def analyzed(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    node = "FlatMapGroupsInPandasWithState"
+    assert node not in analyzed(
+        ST.changelog_compact_stream(stream(ST._CDC_OUT_SCHEMA)))
+    assert node not in analyzed(ST.running_user_totals(
+        stream("user_id bigint, ts timestamp, value double")))
+    assert node in analyzed(ST.rate_limit_stream(
+        stream("user_id bigint, ts timestamp")))
+
+    with open(ST.__file__) as fh:
+        tree = ast.parse(fh.read())
+    callers = {fn.name for fn in tree.body
+               if isinstance(fn, ast.FunctionDef)
+               for call in ast.walk(fn)
+               if isinstance(call, ast.Call)
+               and isinstance(call.func, ast.Name)
+               and call.func.id == "_with_state"}
+    assert callers == {"rate_limit_stream"}, callers
 
 
 def test_query_modules_share_one_source_per_decision():
